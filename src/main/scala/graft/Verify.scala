@@ -110,9 +110,11 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // session-lifetime caches (pinned bounded intermediates) would
-      // otherwise accumulate across all 151 dumps — the documented
-      // clear-between-batches convention, as in Bench (round 16)
+      // session-lifetime caches (the direct persists of PageRank,
+      // Percentiles and Stats' value grids) would otherwise accumulate
+      // across all 151 dumps — the clear-between-batches convention, as in
+      // Bench. Layout.pin blocks are not caches: the ContextCleaner
+      // releases them once the dumped frame is unreachable.
       spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -33,9 +33,10 @@ object Curate {
     lastMark = now
   }
 
-  /** Stage-boundary materialization: eager `localCheckpoint` — the stage
+  /** Stage-boundary materialization: [[graft.ops.Layout.pin]] — the stage
     * output is computed once, and the returned frame's plan is a flat
-    * scan of the materialized partitions (lineage CUT, not just cached).
+    * scan of the materialized partitions (lineage CUT, not just cached) —
+    * plus release-behind bookkeeping ([[drop]]).
     *
     * Both halves matter, and each was measured separately at sf1:
     *
@@ -64,7 +65,7 @@ object Curate {
   private def pin(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val sc = df.sparkSession.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val out = df.localCheckpoint(true)
+    val out = graft.ops.Layout.pin(df)
     // everything newly persisted by the materialization job belongs to
     // this stage: the checkpoint RDD itself, plus any operator-internal
     // persists (e.g. GraphX's) that are dead weight once the checkpoint

@@ -18,9 +18,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale: ONE corpus scan. Unigrams and bigrams explode from the same pass
   * tagged by a null w2 and aggregate in one (w1, w2) shuffle; the count
-  * table is vocab-sized (not corpus-sized), so it is persisted and the four
-  * consumers (pair rows, the two unigram join sides, the totals row) read
-  * the cached relation instead of re-scanning the corpus — AQE's stage
+  * table is vocab-sized (not corpus-sized), so it is pinned and the four
+  * consumers (pair rows, the two unigram join sides, the totals row) scan
+  * the pinned leaf instead of re-scanning the corpus — AQE's stage
   * reuse alone deduplicates only one of the four branches (measured), which
   * at 100 TB is three wasted corpus scans. Asserted in CollocationsSpec.
   * The unigram table and the 1-row totals are broadcast; the only shuffled

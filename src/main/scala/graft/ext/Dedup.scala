@@ -1103,8 +1103,8 @@ object Dedup {
         // pin (round 16): the probe AND index legs both embed this subtree,
         // so an unpersisted plan runs the df+rank window pipeline TWICE —
         // StageProf measured the rank-window stage duplicated (2× 1.2 s of
-        // e94's cold pair generation). One eager materialization, cache
-        // released by the session convention.
+        // e94's cold pair generation). One eager materialization whose
+        // blocks are released with the frames built on it.
         graft.ops.Layout.pin(kept0)
     }
     val probe = kept

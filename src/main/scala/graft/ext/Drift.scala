@@ -15,19 +15,21 @@ import org.apache.spark.sql.functions._
   * the e29 discipline, so both engines produce bit-identical divergences.
   *
   * Scale: one corpus scan into a (source, token) count table — that table
-  * is |sources|×|vocab| (not corpus-sized), so it is persisted and every
-  * derived frame (per-token totals, per-source totals, the grand total, the
-  * term join) reads the cache. The per-token totals broadcast (vocab-sized),
+  * is |sources|×|vocab| (not corpus-sized), so it is pinned
+  * ([[graft.ops.Layout.pin]]) and every derived frame (per-token totals,
+  * per-source totals, the grand total, the term join) reads the pinned
+  * blocks. The per-token totals broadcast (vocab-sized),
   * per-source totals broadcast (|sources| rows), so the term computation is
   * shuffle-free after the count pass.
   *
-  * Cache lifetime: the persisted intermediates back the LAZY frame each
-  * operator returns, so they cannot be unpersisted here — they live until
-  * the session ends or the caller releases them. The frames are bounded
-  * (vocab/spine-sized, never corpus-sized) and MEMORY_AND_DISK evicts under
-  * pressure, but a long-lived session issuing many calls should
-  * `spark.catalog.clearCache()` between batches (or materialize the result
-  * and drop it) — the convention for every persisting operator in graft.
+  * Pin lifetime: the pinned intermediates are local checkpoints owned by
+  * the LAZY frame each operator returns. Their blocks live while that frame
+  * (or any plan built on it) is reachable; Spark's ContextCleaner releases
+  * them after, and `spark.catalog.clearCache()` does not touch them. The
+  * frames are bounded (vocab/spine-sized, never corpus-sized) and stored
+  * MEMORY_AND_DISK. Pinned blocks are not recomputed: a query that needs
+  * blocks lost with an executor fails. This is the convention for every
+  * pinning operator in graft.
   */
 object Drift {
 
@@ -267,7 +269,7 @@ object Drift {
     * summed as longs.
     *
     * Scale: ONE corpus scan into the (source, token) count table
-    * (|sources|×|vocab|, never corpus-sized, persisted); the |pairs|-row
+    * (|sources|×|vocab|, never corpus-sized, pinned); the |pairs|-row
     * frame broadcasts onto it and the per-pair token spine + two count
     * lookups shuffle on (source, token) — bounded by |pairs|×|vocab|.
     * Quadratic in |sources| by construction: meant for the handful of
@@ -460,9 +462,9 @@ object Drift {
     */
   def fillDailyGaps(events: DataFrame, seriesCol: String = "event_type",
       tsCol: String = "ts"): DataFrame = {
-    // persisted: the spine's min/max pass and the fill join both consume
+    // pinned: the spine's min/max pass and the fill join both consume
     // this frame, and stage reuse does NOT deduplicate the two consumers
-    // (measured: without the persist the plan scans events twice — the
+    // (measured: without the pin the plan scans events twice — the
     // same finding as Collocations' count table). Bounded at series × days.
     val daily = events
       .groupBy(col(seriesCol).as("series"), to_date(col(tsCol)).as("day"))
@@ -811,7 +813,7 @@ object Drift {
     * and drops out entirely.
     *
     * Scale: the corpus reduces to the distinct (source, token) table in
-    * one shuffle (|S|×|V|-bounded, persisted); the intersection self-join
+    * one shuffle (|S|×|V|-bounded, pinned); the intersection self-join
     * shuffles that table by token — a token in k sources contributes
     * k(k−1)/2 pair rows, so the join is |V|·|S|²-bounded, never
     * corpus-sized; sizes and the pair spine are |S|-row frames.
@@ -962,7 +964,7 @@ object Drift {
     * `z = round(δ/sqrt(σ²), 4)`. Ranks order by the ROUNDED z then token
     * (total), so both engines rank identically.
     *
-    * Scale: everything runs on the persisted |S|×|V| count table — corpus
+    * Scale: everything runs on the pinned |S|×|V| count table — corpus
     * totals re-aggregate from it (the stream is scanned once), the rest
     * counts come from a token-keyed join of grid-sized frames, and the
     * top-k window is per-source over the grid.

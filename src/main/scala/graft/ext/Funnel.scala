@@ -19,11 +19,10 @@ import org.apache.spark.sql.functions._
   * scans + k shrinking shuffles; no arrays of per-user events are ever
   * collected.
   *
-  * Cache lifetime: transitionMatrix/associationRules persist their bounded
-  * pair-count frames and return LAZY results over that cache; the cache
-  * lives until the session ends or the caller clears it
-  * (`spark.catalog.clearCache()`) — the graft-wide convention (see Drift's
-  * scaladoc).
+  * Pin lifetime: transitionMatrix/associationRules pin their bounded
+  * pair-count frames and return LAZY results over them; the pinned blocks
+  * are released by Spark's ContextCleaner once the result is unreachable
+  * — the graft-wide convention (see Drift's scaladoc).
   */
 object Funnel {
 
@@ -137,11 +136,11 @@ object Funnel {
     * user universe. The exact form here is the oracle the sketch is judged
     * against (FunnelSpec pins the relative-error bound).
     *
-    * Cache lifetime: the deduped (day, user) frame is persisted — it feeds
-    * the spine min/max, the dau count, and the window fan-out, and stage
-    * reuse does not deduplicate three consumers — and follows the graft-wide
-    * convention (object scaladoc / Drift): the cache lives until the session
-    * ends or the caller runs `spark.catalog.clearCache()`.
+    * Pin lifetime: the deduped (day, user) frame is pinned — it feeds the
+    * spine min/max, the dau count, and the window fan-out, and stage reuse
+    * does not deduplicate three consumers — and follows the graft-wide
+    * convention (object scaladoc / Drift): its blocks are released once the
+    * returned frame is unreachable.
     */
   def activeUsers(events: DataFrame, userCol: String = "user_id",
       tsCol: String = "ts", windowDays: Int = 7): DataFrame = {
@@ -149,7 +148,7 @@ object Funnel {
       .distinct()
       .transform(graft.ops.Layout.pin)
     // bounded (≤ days × users); consumed by the spine min/max, the dau
-    // count, and the window fan-out — cache-lifetime convention as Drift
+    // count, and the window fan-out — pin-lifetime convention as Drift
     val mm = du.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
     val spine = mm.select(
       explode(sequence(col("d0"), col("d1"), expr("interval 1 day"))).as("ds"))
@@ -225,7 +224,7 @@ object Funnel {
       .agg(hll_union_agg(col("sk"), lit(false)).as("sk"))
       .transform(graft.ops.Layout.pin)
     // |days| rows × one sketch blob; three consumers (spine, dau, fan-out) —
-    // cache-lifetime convention as activeUsers
+    // pin-lifetime convention as activeUsers
     val mm = daySk.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
     val spine = mm.select(
       explode(sequence(col("d0"), col("d1"), expr("interval 1 day"))).as("ds"))
@@ -541,7 +540,7 @@ object Funnel {
       .agg(max(col("run")).as("max_local"), sum(col("delta")).as("net"))
       .transform(graft.ops.Layout.pin)
     // |buckets| rows; two consumers (grid bounds + the spine join) —
-    // cache-lifetime convention (see object scaladoc)
+    // pin-lifetime convention (see object scaladoc)
     val mm = per.agg(min(col("bucket")).as("b0"), max(col("bucket")).as("b1"))
     val spine = mm.select(explode(sequence(col("b0"), col("b1"))).as("bucket"))
     val wGrid = Window.orderBy(col("bucket"))
@@ -667,7 +666,7 @@ object Funnel {
       tieCol: String = "event_id"): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(userCol)).orderBy(col(tsCol), col(tieCol))
-    // persisted: the join's left side and the per-from totals both consume
+    // pinned: the join's left side and the per-from totals both consume
     // this frame, and stage reuse does not deduplicate the two consumers
     // (the fillDailyGaps/chiSquare finding) — without it the event log is
     // scanned and window-sorted twice. Bounded at |event types|².
@@ -719,7 +718,7 @@ object Funnel {
     * `(n_both·N) / (n_ante·n_cons)` — two correctly-rounded IEEE products
     * feeding one division, identical on both engines.
     *
-    * Scale: the basket frame (one distinct-shuffle, persisted — three
+    * Scale: the basket frame (one distinct-shuffle, pinned — three
     * consumers) is user×item sized; the pair expansion self-joins it on
     * the user key, so per-user work is basket-size², bounded by the item
     * vocabulary — for heavy-tailed baskets cap them first

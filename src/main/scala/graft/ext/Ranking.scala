@@ -135,7 +135,7 @@ object Ranking {
     * argument applied to ranking).
     *
     * Scale shape: ONE corpus scan explodes to (doc, term) pairs and
-    * reduces to the persisted tf table; df and the 1-row corpus count both
+    * reduces to the pinned tf table; df and the 1-row corpus count both
     * derive from tf (no second corpus scan), the count re-entering via a
     * broadcast; the tf⋈df equi-join
     * shuffles on `term` (vocab-sized, Zipf-bounded after the df prune); the
@@ -163,7 +163,7 @@ object Ranking {
     val tf = pairs.groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
       .transform(graft.ops.Layout.pin)
-    // df and N derive from the persisted tf table — ONE corpus scan (every
+    // df and N derive from the pinned tf table — ONE corpus scan (every
     // doc has ≥1 token row: split yields [""] on empty text)
     val dft = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = tf.agg(count_distinct(col("doc_id")).as("n_docs"))
@@ -216,7 +216,7 @@ object Ranking {
     * applied to lexical retrieval).
     *
     * Scale shape: ONE corpus scan builds the (doc, term, tf) posting table
-    * (hash aggregate, map-side partial), persisted operator-internally (the
+    * (hash aggregate, map-side partial), pinned operator-internally (the
     * [[graft.ext.Drift.sourceTokenKl]] convention) because everything else
     * DERIVES from it without touching the corpus again: per-doc length
     * dl = Σ tf over the doc's terms (token counts are a partition of the

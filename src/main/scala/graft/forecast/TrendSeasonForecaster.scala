@@ -278,8 +278,8 @@ object TrendSeasonForecaster {
       .select(to_date(col(tsCol)).as("ds"))
       .groupBy(col("ds")).agg(count(lit(1)).as("y"))
       .transform(graft.ops.Layout.pin)
-    // bounded (one row per observed day); PINNED (persist + eager count,
-    // round 16) because the spine min/max and the fill join both consume
+    // bounded (one row per observed day); PINNED (one eager local
+    // checkpoint) because the spine min/max and the fill join both consume
     // it concurrently (the e45 double-scan fix + the cold-run dedup)
     val mm = daily0.agg(min(col("ds")).as("d0"), max(col("ds")).as("d1"))
     val spine = mm.select(

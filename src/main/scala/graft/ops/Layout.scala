@@ -44,28 +44,36 @@ object Layout {
     * partitions >> cores and is left untouched — the check makes this a
     * no-op exactly where the repartition would be pure waste.
     */
-  /** Persist AND eagerly materialize a bounded intermediate consumed by
-    * several branches of one downstream job (round 16). `persist` alone
-    * does not protect a COLD run: the consumer branches' stages are
-    * scheduled concurrently, and every task that reaches a cache partition
-    * before it is stored recomputes the whole upstream — measured as
-    * 2–4× duplicate source scans/tokenizations on the drift/ranking/
-    * triangle families once the bench stopped carrying caches across runs.
-    * The one eager count guarantees exactly one upstream compute; the cache
-    * keeps the graft session-lifetime convention (the bench clears between
-    * timings, pipelines clear between batches).
-    */
-  def pin(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    p.count()
-    p
-  }
-
   def repairScanParallelism(df: DataFrame, target: Int = 0): DataFrame = {
     val t = if (target > 0) target
       else df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < t) df.repartition(t) else df
   }
+
+  /** Eagerly materialize a bounded intermediate consumed by several
+    * branches of one downstream job, and cut its lineage there. Lazy
+    * caching does not protect a COLD run: the consumer branches' stages are
+    * scheduled concurrently, and every task that reaches a partition before
+    * it is stored recomputes the whole upstream — measured as 2–4×
+    * duplicate source scans/tokenizations on the drift/ranking/triangle
+    * families. One eager job computes the upstream exactly once.
+    *
+    * The result is a local checkpoint: its blocks are stored
+    * MEMORY_AND_DISK on the executors, and the returned frame's plan is a
+    * single leaf scanning them (keeping the source's output partitioning,
+    * ordering and statistics). Downstream analysis, AQE re-planning and
+    * plan rendering therefore see one node instead of the whole upstream
+    * DAG — with pins stacked per query, the embedded lineage otherwise
+    * grows into millions of characters of plan text rebuilt on every stage
+    * update.
+    *
+    * Ownership: the blocks belong to the returned frame. Spark's
+    * ContextCleaner releases them once that frame (and every plan built on
+    * it) is unreachable; `spark.catalog.clearCache()` does not touch them.
+    * They are NOT recomputable: a query that needs blocks lost with an
+    * executor fails instead of re-running the upstream.
+    */
+  def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 
   /** Salted join for skewed keys: explode the small side into `salt`
     * replicas, scatter the big side's hot keys across them, join on

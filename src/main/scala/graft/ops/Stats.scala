@@ -28,12 +28,14 @@ import org.apache.spark.sql.functions._
   * Each operator ships a GENERATED DuckDB mirror (the Profile.profileSql
   * pattern) so formula and constants cannot drift between engines.
   *
-  * Cache lifetime: operators that persist a bounded intermediate (the
+  * Cache lifetime: operators that pin a bounded intermediate (the
   * marginal/count tables behind chiSquare, mutualInfo, cohenKappa, ksTest)
-  * return LAZY frames over that cache, so they cannot unpersist it
-  * themselves; it lives until the session ends or the caller clears it.
-  * Long-lived sessions should `spark.catalog.clearCache()` between batches
-  * — the graft-wide convention (see Drift's scaladoc).
+  * return LAZY frames over it; the pinned blocks are released by Spark's
+  * ContextCleaner once that frame is unreachable — the graft-wide
+  * convention (see Drift's scaladoc). The value grids behind the cumulative
+  * operators are persisted directly (`boundedGrid`): that cache lives until
+  * the session ends or the caller runs `spark.catalog.clearCache()`, which
+  * long-lived sessions should do between batches.
   */
 object Stats {
 
@@ -445,7 +447,7 @@ object Stats {
     *
     * Scale: ONE count shuffle on the (a, b) cell grid (categories², never
     * row-count-sized); margins and the three 1-row frames derive from the
-    * persisted cells.
+    * pinned cells.
     */
   def cohenKappa(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val cells = df
@@ -765,7 +767,7 @@ object Stats {
   /** Chi-square test of independence between two categorical columns:
     * one row with the contingency dimensions, dof, and the χ² statistic.
     * Observed and marginal counts are exact longs — ONE count shuffle on
-    * the cell key, marginals re-aggregated from the (tiny, persisted) cell
+    * the cell key, marginals re-aggregated from the (tiny, pinned) cell
     * table, so the corpus is scanned once. Each cell's (obs − exp)²/exp
     * term is computed on doubles derived from those exact integers in a
     * fixed association, 1e-6 fixed-pointed, and summed exactly (the Drift
@@ -852,7 +854,7 @@ object Stats {
     * when either margin is single-category (H = 0 — undefined, not 0).
     * Null categories are EXCLUDED (the [[chiSquare]] rationale).
     *
-    * Scale: ONE count shuffle to the (a, b) cell table (persisted,
+    * Scale: ONE count shuffle to the (a, b) cell table (pinned,
     * category²-bounded); marginals and totals re-aggregate from it; the
     * corpus is scanned once.
     */

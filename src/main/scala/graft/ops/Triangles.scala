@@ -32,10 +32,10 @@ import org.apache.spark.sql.functions._
   * totally ordered by id. Self-loops and duplicate/reversed edges are
   * tolerated and collapsed.
   *
-  * Cache lifetime: the deduped edge list and its orientation are persisted
+  * Pin lifetime: the deduped edge list and its orientation are pinned
   * (deg reads edges twice; the triangle join reads the orientation three
-  * times) — bounded by the edge count, the graft-wide convention (see
-  * Drift's scaladoc).
+  * times) — bounded by the edge count, released with the returned frame,
+  * the graft-wide convention (see Drift's scaladoc).
   */
 object Triangles {
 
@@ -149,7 +149,7 @@ object Triangles {
       .distinct()
       .transform(Layout.pin)
     // consumers: deg, both wedge sides, the existing-edge anti-join —
-    // cache-lifetime convention (see Drift's scaladoc)
+    // pin-lifetime convention (see Drift's scaladoc)
     val deg = und.select(col("lo").as("id"))
       .unionAll(und.select(col("hi").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("d"))

@@ -46,24 +46,25 @@ class CollocationsSpec extends AnyFunSuite {
     val b = Collocations.pmiBigrams(docs.repartition(7), minCount = 5L, topK = 50).collect()
     assert(a.toSeq == b.toSeq, "PMI output changed under repartitioning")
     // one corpus scan: the four consumers of the vocab-sized count table
-    // must read its cached relation — without the persist, AQE stage reuse
+    // must read its pinned leaf — without the pin, AQE stage reuse
     // deduplicates only one branch and the corpus is scanned four times
     val df = Collocations.pmiBigrams(docs)
     df.collect()
-    // walk the EXECUTED tree (through AQE wrappers, NOT into cached-relation
-    // descriptions — their toString repeats the materialization plan)
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    // walk the EXECUTED tree through AQE wrappers
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def scansIn(p: SparkPlan): Int = p match {
-      case a: AdaptiveSparkPlanExec => scansIn(a.executedPlan)
-      case s: QueryStageExec => scansIn(s.plan)
-      case _: FileSourceScanExec => 1
-      case other => other.children.map(scansIn).sum
+    def nodesIn(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodesIn(a.executedPlan)
+      case s: QueryStageExec => nodesIn(s.plan)
+      case other => other +: other.children.flatMap(nodesIn)
     }
     val plan = df.queryExecution.executedPlan
-    assert(plan.toString.contains("InMemoryTableScan"),
-      s"count table not cached:\n$plan")
-    val scans = scansIn(plan)
+    // the count table (w1, w2, c) enters as a scan of the pinned RDD
+    val countScans = nodesIn(plan).collect {
+      case r: RDDScanExec if r.output.map(_.name) == Seq("w1", "w2", "c") => r
+    }
+    assert(countScans.nonEmpty, s"count table not read from its pinned leaf:\n$plan")
+    val scans = nodesIn(plan).count(_.isInstanceOf[FileSourceScanExec])
     assert(scans <= 1, s"corpus scanned $scans times in the executed tree:\n$plan")
   }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkTestSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -248,6 +249,42 @@ class LayoutSpec extends AnyFunSuite {
     val touchedFiles = ordersScan.selectedPartitions.totalNumberOfFiles
     assert(touchedFiles == files1996,
       s"scan touched $touchedFiles files; o_year=1996 holds $files1996")
+  }
+
+  test("pin keeps the rows and re-enters plans as a single leaf") {
+    val src = spark.range(0, 5000, 1, 4)
+      .groupBy((col("id") % 97).as("k")).agg(sum(col("id")).as("s"))
+    val pinned = Layout.pin(src)
+    assert(pinned.collect().toSet == src.collect().toSet)
+    val nodes = pinned.queryExecution.analyzed.collect { case p => p }
+    assert(nodes.size == 1, s"pinned plan is not one leaf:\n${pinned.queryExecution.analyzed}")
+  }
+
+  test("pin evaluates its upstream exactly once across downstream actions") {
+    val evals = spark.sparkContext.longAccumulator("pin_upstream_evals")
+    val touch = udf { (x: Long) => evals.add(1); x }
+    val pinned = Layout.pin(spark.range(0, 1000, 1, 4).select(touch(col("id")).as("id")))
+    assert(evals.value == 1000L)
+    assert(pinned.where(col("id") % 2 === 0).count() == 500L)
+    // two branches of one job, scheduled concurrently
+    val self = pinned.join(pinned.select(col("id").as("id2")), col("id") === col("id2"))
+    assert(self.count() == 1000L)
+    assert(evals.value == 1000L, s"upstream re-evaluated: ${evals.value} UDF calls")
+  }
+
+  test("pinned chains render plans that do not grow with the chain length") {
+    def step(df: DataFrame): DataFrame =
+      Layout.pin(df.groupBy((col("k") % 50).as("k")).agg(sum(col("s")).as("s")))
+    val base = spark.range(0, 2000, 1, 4).select(col("id").as("k"), col("id").as("s"))
+    def rendered(pins: Int): Int = {
+      val out = Iterator.iterate(base)(step).drop(pins).next()
+        .groupBy(col("k")).agg(max(col("s")))
+      out.collect()
+      out.queryExecution.executedPlan.toString.length
+    }
+    val (two, four) = (rendered(2), rendered(4))
+    // only expression ids (a digit or so each) may differ
+    assert(four <= two + 64, s"4-pin plan renders $four chars vs $two for 2 pins")
   }
 
   test("custom SQL function registration (simhash64 via extensions)") {

@@ -106,4 +106,14 @@ class PlanGuardSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("e94's executed plan stays small: pins cut the lineage") {
+    // each Layout.pin re-enters the plan as one leaf; a pin that kept its
+    // upstream lineage embeds the whole near-dup DAG under every consumer
+    // (about 50 M characters for this query without the cut)
+    val df = graft.SparkEntry.queries("e94_triangles")(spark, dir)
+    df.collect()
+    val rendered = df.queryExecution.executedPlan.toString.length
+    assert(rendered < 100000, s"e94_triangles executed plan renders $rendered chars")
+  }
 }
