@@ -1074,7 +1074,10 @@ object Dedup {
     * tiny), (3) exact verify — so peak live scratch is ONE stage's, not
     * their sum. EAGER when set (the writes run at call time); leave unset
     * on a cluster, where the one-job plan pipelines and hash-partitions
-    * perfectly.
+    * perfectly. Each call stages under its own fresh subdirectory of
+    * `stageDir` (calls sharing one `stageDir` never read each other's
+    * candidates), and the returned frame reads it lazily: `stageDir` must
+    * outlive every action on the result.
     */
   private[graft] def prefixWitnessCands(sh: DataFrame, tNum: Long,
       prefixDfCap: Int, lengthBound: Boolean,
@@ -1092,7 +1095,8 @@ object Dedup {
       case other => throw new IllegalArgumentException(
         s"unknown dfStrategy: $other")
     }
-    val kept = stageDir match {
+    val stage = stageDir.map(callStageDir)
+    val kept = stage match {
       case Some(dir) =>
         kept0.write.mode("overwrite").parquet(s"$dir/entries")
         // hand the ranking windows' now-unreachable shuffle files to the
@@ -1134,7 +1138,7 @@ object Dedup {
       .agg(count(lit(1)).as("__w"), first(col("n_p")).as("__n_p"))
       .where(col("__w") >= least(lit(e + 1), pfAlpha(col("__n_p"), tNum)))
       .select(col("id_a"), col("id_b"))
-    stageDir match {
+    stage match {
       case Some(dir) =>
         cand.write.mode("overwrite").parquet(s"$dir/cands")
         System.gc() // release the witness join's shuffle files pre-verify
@@ -1142,6 +1146,13 @@ object Dedup {
       case None => cand
     }
   }
+
+  /** A fresh subdirectory of a caller's `stageDir` for one call's staged
+    * boundaries, so calls sharing a `stageDir` cannot overwrite each
+    * other's files while an earlier call's result still reads them.
+    */
+  private def callStageDir(stageDir: String): String =
+    s"$stageDir/${java.util.UUID.randomUUID()}"
 
   /** Shared body of [[ngramContainmentAtRisk]] / [[ngramJaccardAtRisk]]:
     * docs with ≥1 over-cap shingle inside the e-extended prefix witness
@@ -1680,7 +1691,9 @@ object Dedup {
     * materialization of the candidate-distinct boundary (id pairs only,
     * parquet) releases the Σ bucket² segment-join/distinct shuffle files
     * before the verify joins run, without the K-pass corpus re-reads of
-    * slicing. Mutually exclusive with `candidateSlices > 1`.
+    * slicing. Mutually exclusive with `candidateSlices > 1`. As there, each
+    * call stages under its own fresh subdirectory, and `stageDir` must
+    * outlive every action on the result.
     */
   def editDistancePairs(
       docs: DataFrame,
@@ -1816,7 +1829,7 @@ object Dedup {
       // files before the verify joins claim their own scratch, so peak
       // LIVE shuffle scratch on one box is a single stage's. EAGER when
       // set; leave unset on a cluster (the one-job plan pipelines).
-      val pairs = stageDir match {
+      val pairs = stageDir.map(callStageDir) match {
         case Some(dir) =>
           pairs0.write.mode("overwrite").parquet(s"$dir/edcands")
           System.gc()

@@ -1,7 +1,9 @@
 package graft.ingest
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+import scala.util.{Failure, Try}
 
 /** CSV → Parquet ingestion (SURVEY.md §2.a S1–S3) — the Spark-native
   * replacement for the reference's `convert_file_to_parquet` /
@@ -38,16 +40,43 @@ object IngestJob {
   /** Directory batch convert (`helper_utils.py:185-197`): every `*.csv` in
     * `inDir` → Parquet under `outDir/<sanitized-table-name>`; returns
     * tableName → schema for DDL synthesis.
+    *
+    * The files convert concurrently, one [[csvToParquet]] per file on a
+    * pool of min(files, defaultParallelism) driver threads, largest file
+    * first: a file's schema-inference and write jobs are short and often
+    * single-task (one small CSV is one split), so converting one file at a
+    * time leaves most cores idle. Files whose names sanitize to the same
+    * table share one task and convert in path order, so the last one's
+    * table and schema win, as they did sequentially. Every task runs to
+    * completion; the first failure in path order is then rethrown as
+    * thrown.
     */
   def csvDirToParquet(spark: SparkSession, inDir: String, outDir: String): Map[String, StructType] = {
     val files = new java.io.File(inDir).listFiles()
-    val csvs = Option(files).getOrElse(Array.empty)
+    val tables = Option(files).getOrElse(Array.empty)
       .filter(f => f.isFile && Sanitize.fileType(f.getName) == "csv")
       .map(_.getAbsolutePath)
       .sorted
-    csvs.map { path =>
-      Sanitize.fileName(path) -> csvToParquet(spark, path, outDir)
-    }.toMap
+      .groupBy(Sanitize.fileName).toSeq
+      .sortBy { case (_, paths) => paths.head }
+    if (tables.isEmpty) return Map.empty
+    val pool = Executors.newFixedThreadPool(
+      math.min(tables.length, spark.sparkContext.defaultParallelism))
+    try {
+      val pending = tables
+        .sortBy { case (_, paths) => -paths.map(new java.io.File(_).length).sum }
+        .map { case (table, paths) =>
+          val convert: Callable[StructType] =
+            () => paths.map(csvToParquet(spark, _, outDir)).last
+          table -> pool.submit(convert)
+        }.toMap
+      val done = tables.map { case (table, _) =>
+        table -> Try(pending(table).get()).recoverWith {
+          case e: ExecutionException => Failure(e.getCause)
+        }
+      }
+      done.map { case (table, schema) => table -> schema.get }.toMap
+    } finally pool.shutdown()
   }
 
   /** The pandas-path preprocessing (`helper_utils.py:83-95`), Spark-native:

@@ -60,12 +60,13 @@ object Layout {
     *
     * The result is a local checkpoint: its blocks are stored
     * MEMORY_AND_DISK on the executors, and the returned frame's plan is a
-    * single leaf scanning them (keeping the source's output partitioning,
-    * ordering and statistics). Downstream analysis, AQE re-planning and
-    * plan rendering therefore see one node instead of the whole upstream
-    * DAG — with pins stacked per query, the embedded lineage otherwise
-    * grows into millions of characters of plan text rebuilt on every stage
-    * update.
+    * single leaf scanning them (keeping the source's statistics).
+    * Downstream analysis, AQE re-planning and plan rendering therefore see
+    * one node instead of the whole upstream DAG — with pins stacked per
+    * query, the embedded lineage otherwise grows into millions of
+    * characters of plan text rebuilt on every stage update. Under adaptive
+    * execution the leaf reports an unknown output partitioning, so a join
+    * or aggregate on the source's own key exchanges the pinned rows again.
     *
     * Ownership: the blocks belong to the returned frame. Spark's
     * ContextCleaner releases them once that frame (and every plan built on

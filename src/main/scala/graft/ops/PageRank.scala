@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Iterative PageRank as a DataFrame loop — the graph-analytics operator a
   * link/citation/co-occurrence corpus needs (reference scope has no graph
@@ -19,15 +18,21 @@ import org.apache.spark.storage.StorageLevel
   * algorithm. Convention matches GraphX's unnormalized form: every node
   * starts with mass 1.0, new = (1−d) + d·Σ incoming (total mass ≈ N, not 1).
   *
-  * Scale shape: each iteration is ONE shuffle (groupBy dst of the
-  * contribution stream); the edge⋈degree frame is computed once and
-  * persisted so iterations re-read a materialized compact edge list, not
-  * the source scan. `checkpointEvery` (default 5) truncates lineage with
-  * `localCheckpoint` — each iteration's plan embeds the previous one, so
-  * without truncation analyzer cost grows multiplicatively and a 30–50
-  * iteration run stalls the driver before a task launches. At 100 TB graph
-  * scale you run this exactly like GraphX's Pregel: materialize per
-  * iteration, shuffle contributions only.
+  * Scale shape: vertex-centric message passing (the Pregelix model). The
+  * graph state — one row per node with its distinct out-neighbours and
+  * out-degree — is built by one shuffle and pinned once as a local
+  * checkpoint, so its blocks go with the result and nothing is left in the
+  * session cache. Each superstep joins the ranks to that adjacency, explodes each
+  * sender's `rank div deg` to its neighbours, adds one zero message per
+  * node (which keeps in-edge-less nodes without a join against the node
+  * universe) and sums per destination: ONE shuffle per superstep. While
+  * the adjacency fits the broadcast threshold, the join broadcasts it once
+  * for all supersteps; past it, the planner exchanges the adjacency once
+  * and reuses that exchange in every superstep. `checkpointEvery`
+  * (default 5) truncates lineage with `localCheckpoint` — each
+  * iteration's plan embeds the previous one, so without truncation
+  * analyzer cost grows multiplicatively and a 30–50 iteration run stalls
+  * the driver before a task launches.
   * Dangling nodes (out-degree 0) keep their base mass but leak the damped
   * share, as in the classic simplified formulation; on a symmetrized graph
   * (the common co-occurrence case, and the e23 query) none exist.
@@ -81,47 +86,48 @@ object PageRank {
       s"iters=$iters without lineage truncation: each iteration's plan embeds " +
         "the previous one, so long runs need checkpointEvery > 0")
 
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize the compact edge list ONCE (round 16): ew's plan embeds
-    // `e` twice (join with its own degree table) and nodes' twice more —
-    // uncached, a cold run re-parses and re-distincts the source four
-    // times. One eager count builds e's cache; ew/nodes materialize from
-    // it; e is released before the iterations (they read only ew/nodes).
-    e.count()
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // compact (src, dst, deg) edge list, reused every iteration
-    val ew = e.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    // the node universe is ALSO hit every iteration (the left join that
-    // keeps in-edge-less nodes) — unpersisted it re-runs the edge scan and
-    // two distincts per iteration, which dominated e23's first bench
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    ew.count(); nodes.count()
-    e.unpersist(false)
+    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    // the graph state, built by ONE shuffle and pinned: a row per node of
+    // the src ∪ dst universe with its distinct out-neighbours (an edge
+    // (x, null) keeps null as one neighbour, so it counts in deg(x))
+    val graph = Layout.pin(
+      e.select(col("src").as("node"), array(col("dst")).as("out"))
+        .unionAll(e.select(col("dst").as("node"),
+          array().cast("array<bigint>").as("out")))
+        .groupBy(col("node"))
+        .agg(array_distinct(flatten(collect_list(col("out")))).as("nbrs"))
+        .select(col("node"), col("nbrs"), size(col("nbrs")).cast("long").as("deg")))
+    // one zero message per node keeps in-edge-less nodes in every superstep
+    val zeros = graph.select(col("node"), lit(0L).as("contrib"))
 
-    var ranks = nodes.withColumn("rank_micro", initOf(col("node")))
-    for (i <- 1 to iters) {
-      // disjoint column names (not dataset-qualified refs): iteration ≥ 2
-      // joins ranks against its own lineage, where qualified resolution
-      // can trip Spark's ambiguous-self-join detection
-      val contribs = ew
-        .join(ranks.withColumnRenamed("node", "pr_node"),
-          col("src") === col("pr_node"))
-        .select(col("dst").as("node"), expr("rank_micro div deg").as("contrib"))
+    // one superstep over (node, nbrs, deg, rank_micro): every sender splits
+    // its rank over its neighbours and the messages are summed per
+    // destination, the superstep's one shuffle. A null node neither sends
+    // nor receives. `deg > 0` must filter before the `div`: ANSI raises on
+    // a sink's division by zero before `explode` would drop its empty row
+    def superstep(state: DataFrame): DataFrame =
+      state.where(col("node").isNotNull && col("deg") > 0)
+        .select(explode(col("nbrs")).as("node"),
+          expr("rank_micro div deg").as("contrib"))
+        .where(col("node").isNotNull)
+        .unionAll(zeros)
         .groupBy(col("node"))
         .agg(sum(col("contrib")).as("in_mass"))
-      // left join keeps rank mass on nodes nothing points at
-      ranks = nodes.join(contribs, Seq("node"), "left")
         .select(col("node"),
-          (baseOf(col("node")) +
-            expr(s"($dampingPct * coalesce(in_mass, 0L)) div 100"))
+          (baseOf(col("node")) + expr(s"($dampingPct * in_mass) div 100"))
             .as("rank_micro"))
-      // truncating the FINAL frame is pointless (nothing builds on it) and
-      // would eagerly materialize the whole result once for nothing
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
+
+    var ranks = superstep(graph.withColumn("rank_micro", initOf(col("node"))))
+    for (i <- 2 to iters) {
+      // truncate before a superstep builds on the ranks, never after the
+      // last one (that would materialize the whole result once for nothing)
+      if (checkpointEvery > 0 && (i - 1) % checkpointEvery == 0)
         ranks = ranks.localCheckpoint(true)
+      // disjoint column names (not dataset-qualified refs): the ranks join
+      // the adjacency their own lineage was built from, where qualified
+      // resolution can trip Spark's ambiguous-self-join detection
+      ranks = superstep(graph.join(ranks.withColumnRenamed("node", "pr_node"),
+        col("node") === col("pr_node")))
     }
     ranks
       .select(col("node"), col("rank_micro"),

@@ -398,9 +398,34 @@ class DedupSpec extends AnyFunSuite {
     assert(c.nonEmpty)
     assert(cm(Dedup.ngramContainmentPairs(doubled, minContainment = 0.9,
       prefixDfCap = 2000, stageDir = s"$dir/c")) == c)
-    // both stage boundaries were actually materialized
-    assert(new java.io.File(s"$dir/j/entries").exists &&
-      new java.io.File(s"$dir/j/cands").exists)
+    // both stage boundaries were actually materialized, under the call's
+    // own subdirectory of stageDir
+    val jCalls = new java.io.File(s"$dir/j").listFiles().filter(_.isDirectory)
+    assert(jCalls.length == 1 && new java.io.File(jCalls.head, "entries").exists &&
+      new java.io.File(jCalls.head, "cands").exists, jCalls.toSeq)
+    // calls sharing one stageDir each read their own staged candidates:
+    // every frame is built (its staging writes run) before any is read.
+    // editDistancePairs verifies its staged candidates lazily, so a later
+    // call staging into the same place would replace them under it
+    def em(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val shared = s"$dir/shared"
+    val half = d.where(col("doc_id") % 2 === 0)
+    val jShared = Dedup.ngramJaccardPairs(doubled, minJaccard = 0.8,
+      prefixDfCap = 2000, stageDir = shared)
+    val cShared = Dedup.ngramContainmentPairs(doubled, minContainment = 0.9,
+      prefixDfCap = 2000, stageDir = shared)
+    val allShared = Dedup.editDistancePairs(d, maxDist = 5, prefixLen = 40,
+      stageDir = Some(shared))
+    val halfShared = Dedup.editDistancePairs(half, maxDist = 5, prefixLen = 40,
+      stageDir = Some(shared))
+    assert(jm(jShared) == j)
+    assert(cm(cShared) == c)
+    val all = em(Dedup.editDistancePairs(d, maxDist = 5, prefixLen = 40))
+    val halfPairs = em(Dedup.editDistancePairs(half, maxDist = 5, prefixLen = 40))
+    assert(all.size > halfPairs.size && halfPairs.nonEmpty)
+    assert(em(allShared) == all)
+    assert(em(halfShared) == halfPairs)
     // staging is a property of the witness path only — refused elsewhere
     assertThrows[IllegalArgumentException] {
       Dedup.ngramJaccardPairs(doubled, minJaccard = 0.8, stageDir = s"$dir/x")

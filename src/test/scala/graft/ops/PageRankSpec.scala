@@ -1,6 +1,11 @@
 package graft.ops
 
 import graft.SparkTestSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -167,5 +172,105 @@ class PageRankSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       PageRank.personalizedPageRank(edgesDf(1L -> 2L), seeds = Seq.empty, iters = 2)
     }
+  }
+
+  test("null endpoints: counted in the sender's degree, never send or receive") {
+    import spark.implicits._
+    def nullableRanks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r =>
+        (if (r.isNullAt(0)) None else Some(r.getLong(0))) -> r.getLong(1)).toMap
+    // (1,null) counts in deg(1) and its share is dropped; (null,3) never
+    // sends; the null node is in the universe and keeps its restart mass
+    val edges = Seq(Some(1L) -> Some(2L), Some(1L) -> None, None -> Some(3L),
+      Some(2L) -> Some(1L), Some(3L) -> Some(1L), None -> None,
+      Some(2L) -> Some(2L), Some(4L) -> None).toDF("src", "dst")
+    assert(nullableRanks(PageRank.pageRank(edges, iters = 3)) == Map(
+      None -> 150000L, Some(1L) -> 779265L, Some(2L) -> 950327L,
+      Some(3L) -> 150000L, Some(4L) -> 150000L))
+    assert(nullableRanks(PageRank.personalizedPageRank(edges, Seq(1L, 4L),
+      iters = 3)) == Map(None -> 0L, Some(1L) -> 253858L, Some(2L) -> 244374L,
+      Some(3L) -> 0L, Some(4L) -> 150000L))
+  }
+
+  test("the walk leaves no entry in the session cache") {
+    spark.catalog.clearCache()
+    val edges = (1L to 40L).flatMap(i => Seq(i -> (i % 40 + 1), i -> (i * 7 % 40 + 1)))
+    assert(ranks(PageRank.pageRank(edgesDf(edges: _*), iters = 3)).size == 40)
+    assert(ranks(PageRank.personalizedPageRank(edgesDf(edges: _*), Seq(1L),
+      iters = 3)).size == 40)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  /** Hash-partitioned shuffle exchanges in a plan, through AQE's stages;
+    * a reused exchange shuffles nothing and is not counted again.
+    */
+  private def hashExchanges(p: SparkPlan): Int = p match {
+    case a: AdaptiveSparkPlanExec => hashExchanges(a.executedPlan)
+    case q: QueryStageExec => hashExchanges(q.plan)
+    case s: ShuffleExchangeExec =>
+      (if (s.outputPartitioning.isInstanceOf[HashPartitioning]) 1 else 0) +
+        hashExchanges(s.child)
+    case other => other.children.map(hashExchanges).sum
+  }
+
+  /** Jobs started while `body` runs, seen by a listener. A one-task marker
+    * job opens and closes the window: the listener bus delivers events in
+    * order, so once the closing marker's start arrives every job before it
+    * has been counted.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = seen.add(j.jobId)
+    }
+    def marker(): Int = {
+      val f = sc.submitJob(sc.parallelize(Seq(0), 1), (_: Iterator[Int]) => (),
+        Seq(0), (_: Int, _: Unit) => (), ())
+      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
+      f.jobIds.head
+    }
+    sc.addSparkListener(listener)
+    try {
+      val from = marker()
+      val result = body
+      val to = marker()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(to) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(to), "listener never saw the closing marker job")
+      (result, seen.asScala.count(id => id > from && id < to))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("one shuffle per superstep: exchange and job bounds for 5 iterations") {
+    // 1,000 nodes, 4 out-edges each
+    val edges = (0L until 1000L).flatMap(i =>
+      (0L until 4L).map(k => i -> ((i * 7 + k * 13 + 1) % 1000L)))
+    val ((pr, got), jobs) = jobsDuring {
+      val pr = PageRank.pageRank(edgesDf(edges: _*), iters = 5)
+      (pr, ranks(pr))
+    }
+    assert(got == reference(edges, iters = 5))
+    // the adjacency is built behind the pin and broadcast to the join, so
+    // each superstep adds only its groupBy
+    val plan = pr.queryExecution.executedPlan
+    assert(hashExchanges(plan) <= 5, plan.toString)
+    assert(jobs <= 14, s"$jobs jobs")
+  }
+
+  test("an adjacency past the broadcast threshold is exchanged once, ranks unchanged") {
+    val edges = (0L until 200L).flatMap(i =>
+      (0L until 3L).map(k => i -> ((i * 11 + k * 17 + 3) % 200L)))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      val pr = PageRank.pageRank(edgesDf(edges: _*), iters = 5)
+      assert(ranks(pr) == reference(edges, iters = 5))
+      // 5 supersteps plus one exchange of the adjacency that every
+      // superstep's join reuses
+      val plan = pr.queryExecution.executedPlan
+      assert(hashExchanges(plan) == 6, plan.toString)
+    } finally spark.conf.set(key, before)
   }
 }
