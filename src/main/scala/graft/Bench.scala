@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -33,7 +32,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.envCpus(4)
     // SPARK_GRAFT_BENCH_RUNS=k repeats the whole suite k times and reports
     // the per-query MEDIAN (plus min) — the documented 5× co-tenant variance
     // makes any single-run number unusable as a regression signal, so the
@@ -48,17 +47,7 @@ object Bench {
     // fields (rehearsal observability; off by default to keep the driver's
     // BENCH JSON contract minimal).
     val withMetrics = sys.env.get("SPARK_GRAFT_BENCH_METRICS").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts shape varies across testdata generations (nanos vs NTZ
-      // micros); nanosAsLong covers the nanos case and Reference.events
-      // normalizes every shape to a µs TimestampType column.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
     val listener = new MetricsListener
     if (withMetrics) spark.sparkContext.addSparkListener(listener)
     // Warmup: initialize parquet reader, codegen, and shuffle machinery so

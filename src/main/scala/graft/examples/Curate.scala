@@ -2,7 +2,6 @@ package graft.examples
 
 import graft.ext.{Decontaminate, Dedup, Drift, LangModel, Multimodal, Packing, Similarity, TextStats}
 import graft.ops.Splits
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The complete LLM training-data curation pass, end to end — every stage a
@@ -86,15 +85,7 @@ object Curate {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-curate")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.envCpus(8))
     val t0 = System.nanoTime()
     lastMark = t0
 

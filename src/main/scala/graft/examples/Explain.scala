@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Plan inspection harness: prints the formatted physical plan for the
   * named queries (all if none given) — used to keep pushdown/broadcast/
@@ -11,14 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(8)
     names.foreach { n =>
       println(s"\n########## $n ##########")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

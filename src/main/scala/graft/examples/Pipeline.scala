@@ -5,7 +5,6 @@ import graft.ext.{Dedup, TextStats}
 import graft.forecast.TrendSeasonForecaster
 import graft.ingest.{IngestJob, SchemaInference}
 import graft.queries.Reference
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end demo of the library surface — the Spark-native equivalent of
   * the reference's Main_File.py ETL spine + notebook analysis session:
@@ -16,15 +15,7 @@ import org.apache.spark.sql.SparkSession
 object Pipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.envCpus(8))
 
     // 1. ingest: CSV dir -> Parquet with sanitized names + inferred schema
     val work = java.nio.file.Files.createTempDirectory("graft_demo").toString

@@ -2,7 +2,6 @@ package graft.examples
 
 import graft.SparkEntry
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage profile of one declared query — the Spark-UI substitute for
   * this UI-less sandbox (guide §1.1's empirical loop): runs the named
@@ -20,18 +19,7 @@ object StageProf {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: StageProf <queryName> [queryName ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // A/B knob for AQE's coalescing floor (see OPTIMIZATION_r15.md)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("GRAFT_MIN_COALESCE", "1m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.envCpus(32))
 
     @volatile var collect = false
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[String]

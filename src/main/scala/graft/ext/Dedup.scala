@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -88,38 +87,6 @@ object Dedup {
   private[ext] def shinglesHof(c: Column, n: Int = 3): Column =
     array_distinct(ngramsOrderedHof(c, n))
 
-  /** MinHash + LSH near-duplicate pairs (Broder 1997 resemblance sketch).
-    * shingle → sparse feature vector (HashingTF) → MinHashLSH →
-    * approxSimilarityJoin, which Spark executes as explode-on-band-hash +
-    * equi-join — candidate generation is linear in corpus size, not
-    * quadratic. Returns (id_a, id_b, jaccard_dist) with id_a < id_b.
-    */
-  def minhashNearDup(
-      docs: DataFrame,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      shingleSize: Int = 3,
-      numHashTables: Int = 8,
-      maxJaccardDistance: Double = 0.6): DataFrame = {
-    val sh = docs
-      .select(col(idCol), shingles(col(textCol), shingleSize).as("sh"))
-      .where(size(col("sh")) > 0)
-    val tf = new HashingTF()
-      .setInputCol("sh").setOutputCol("features").setNumFeatures(1 << 18)
-    val feat = tf.transform(sh)
-    val lsh = new MinHashLSH()
-      .setInputCol("features").setOutputCol("minhashes")
-      .setNumHashTables(numHashTables).setSeed(42L)
-    val model = lsh.fit(feat)
-    model
-      .approxSimilarityJoin(feat, feat, maxJaccardDistance, "jaccard_dist")
-      .select(
-        col(s"datasetA.$idCol").as("id_a"),
-        col(s"datasetB.$idCol").as("id_b"),
-        col("jaccard_dist"))
-      .where(col("id_a") < col("id_b"))
-  }
-
   /** k independent MinHash signature values (Broder 1997) over a shingle
     * array — seeded xxhash64 per permutation, folded with `least`. Pure
     * codegen'd Catalyst expressions: no ml.Vector materialization, no UDF.
@@ -183,8 +150,7 @@ object Dedup {
 
   /** Native MinHash-LSH near-dup pairs: signature → band keys → id-only
     * band buckets → candidate id pairs → shingle re-join for exact-Jaccard
-    * verification. Same banding theory as [[minhashNearDup]] but an order of
-    * magnitude faster: the signature is 16 integer folds in whole-stage
+    * verification. The signature is 16 integer folds in whole-stage
     * codegen, and — unlike a naive formulation that carries each document's
     * shingle array into the bucket aggregation — the bucket stage touches
     * ONLY (id, band-key): a degenerate bucket of a million identical docs
@@ -522,7 +488,7 @@ object Dedup {
     * permutation hashes (any engine can replay them — the oracle
     * contract); `false` uses xxhash64 (one codegen'd primitive vs a digest
     * per (permutation, shingle) — the production fast path: build 3.2×
-    * and lookup 2× cheaper, measured at 5M docs (DedupProbe `store`,
+    * and lookup 2× cheaper, measured at 5M docs (the `store` probe,
     * BASELINE.md; shingling + shuffle + write share the cost, so the
     * digest swap is not a 10× lever). Identical banding/estimator THEORY
     * but different concrete signatures, so a store commits to one hash at
@@ -762,42 +728,14 @@ object Dedup {
   /** Hamming distance between two packed 64-bit SimHashes. */
   def hammingDist(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** SimHash near-dup pairs within `maxHamming`, using band-blocking on the
-    * 4×16-bit sub-keys (a pair within Hamming distance ≤3 of a 64-bit hash
-    * must agree exactly on at least one of the 4 16-bit bands — pigeonhole),
-    * so candidate generation is an equi-join on the band value, not O(n²).
-    */
-  def simhashNearDup(
-      docs: DataFrame,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      maxHamming: Int = 3): DataFrame = {
-    // the native expression is bit-identical to simhash() (pinned in
-    // DedupSpec) and ~7× faster — the HOF form exists as the readable spec
-    val hashed = docs.select(col(idCol),
-      graft.functions.SimHash.simhash64(col(textCol)).as("sh"))
-    val banded = hashed.select(
-      col(idCol), col("sh"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band"),
-          shiftright(col("sh"), b * 16).bitwiseAND(lit(0xffffL)).as("key"))): _*)).as("bk"))
-    val a = banded.select(col(idCol).as("id_a"), col("sh").as("sh_a"), col("bk"))
-    val b = banded.select(col(idCol).as("id_b"), col("sh").as("sh_b"), col("bk"))
-    a.join(b, Seq("bk"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), hammingDist(col("sh_a"), col("sh_b")).as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
-  }
-
   /** Exact-Jaccard verification for candidate id pairs: full shingle sets
     * are fetched ONLY for docs that appear in some pair (semi-join pushdown
     * into the `sh` frame's scan) and joined back by id, then
     * |A∩B| / (|A|+|B|−|A∩B|) filters at `minJaccard`. Shared by every
-    * candidate-generation strategy (prefix filter, DF cap) — whatever pruned
-    * the candidates, the scores this emits are those of the naive all-pairs
-    * operator. `dropDuplicates` guards 2×-loaded inputs (same id twice)
-    * against double-counted intersections.
+    * candidate-generation strategy (prefix filter, witness prefix) —
+    * whatever pruned the candidates, the scores this emits are those of
+    * the naive all-pairs operator. `dropDuplicates` guards 2×-loaded
+    * inputs (same id twice) against double-counted intersections.
     */
   /** Exact-Jaccard re-score for candidate id pairs. With
     * `cappedCands = true` (an AUDITED upstream cap bounds candidate volume)
@@ -846,32 +784,13 @@ object Dedup {
 
   /** Posting-list bucket builder shared by [[ngramJaccardPairs]] and
     * [[ngramContainmentPairs]]: group the inverted index `(id, n_sh, g)` into
-    * per-shingle member lists, keeping only shingles shared by 2..`maxDocFreq`
-    * documents (all sharers when `maxDocFreq = 0`).
-    *
-    * When a cap is set, document frequency is counted FIRST (a partial-
-    * aggregated long per shingle) and only surviving shingles reach the
-    * `collect_list` — ordering matters at scale: filtering on
-    * `size(members)` AFTER aggregation means the densest shingle
-    * (boilerplate, df ≈ corpus size) buffers its ENTIRE posting list in one
-    * aggregation task before the cap can drop it. The sf10 rehearsal
-    * (5M docs) measured that as 114 GB of aggregation spill and a ×14.8
-    * sf1→sf10 wall ratio on e11; with the df-prefilter every list buffer is
-    * bounded by the cap. The join on `g` leaves the stream hash-partitioned
-    * by `g`, so the follow-up groupBy adds no exchange — the prefilter costs
-    * one cheap count pass, not a third shuffle of the index.
+    * per-shingle member lists, keeping only shingles shared by 2 or more
+    * documents.
     */
-  private def postingBuckets(inv: DataFrame, maxDocFreq: Int): DataFrame =
-    if (maxDocFreq > 0) {
-      val dfreq = inv.groupBy(col("g")).agg(count(lit(1)).as("__df"))
-        .where(col("__df") > 1 && col("__df") <= maxDocFreq)
-      inv.join(dfreq.select(col("g")), Seq("g"))
-        .groupBy(col("g"))
-        .agg(collect_list(struct(col("id"), col("n_sh"))).as("members"))
-    } else
-      inv.groupBy(col("g"))
-        .agg(collect_list(struct(col("id"), col("n_sh"))).as("members"))
-        .where(size(col("members")) > 1)
+  private def postingBuckets(inv: DataFrame): DataFrame =
+    inv.groupBy(col("g"))
+      .agg(collect_list(struct(col("id"), col("n_sh"))).as("members"))
+      .where(size(col("members")) > 1)
 
   /** Exact containment verification for candidate id pairs — the
     * directional twin of [[verifyExactJaccard]]: full shingle sets are
@@ -987,62 +906,13 @@ object Dedup {
   }
 
   /** The hashed inverted index shared by [[pfOrderedEntries]] and
-    * [[pfCappedEntries]]: one (id, n_sh, g) row per (doc, shingle), `g` the
+    * [[prefixWitnessCands]]: one (id, n_sh, g) row per (doc, shingle), `g` the
     * shingle's xxhash64 (see [[pfOrderedEntries]] for the exactness
     * argument).
     */
   private def pfHashedInv(sh: DataFrame): DataFrame =
     sh.select(col("id"), col("n_sh"), explode(col("sh")).as("g0"))
       .select(col("id"), col("n_sh"), xxhash64(col("g0")).as("g"))
-
-  /** `pfOrderedEntries(sh).where(gdf <= cap)` with the cap pushed BETWEEN
-    * the two windows (round-15 optimization, guide §2.3): the df window
-    * runs as before (one source pass), but over-cap entries are dropped
-    * BEFORE the per-doc rank shuffle instead of after it — the rank
-    * window's exchange and sort never see the corpus-dense boilerplate
-    * entries the cap exists to exclude.
-    *
-    * EXACTNESS: identical rows to the post-filter form. Every over-cap
-    * entry has `gdf > cap >= gdf(kept)`, so in the per-doc
-    * (gdf ASC, g ASC) order every over-cap entry sorts STRICTLY AFTER
-    * every kept entry — removing them first cannot shift any kept entry's
-    * `pos`. (Entries tied on (gdf, g) are byte-identical rows, so their
-    * arbitrary row_number assignment is unobservable downstream.)
-    * The probe/index/audit WINDOW semantics (`pos <= n_sh − α + e` with
-    * `n_sh` = the FULL shingle count) are untouched — the audits
-    * ([[prefixWitnessAtRisk]]) keep the uncapped [[pfOrderedEntries]] form
-    * because they must SEE over-cap entries inside the window.
-    *
-    * A groupBy+shuffle_hash-join df attachment (no sort by `g`, narrow df
-    * shuffle) was A/B'd at 500k docs and REJECTED: it re-scans and
-    * re-shingles the corpus for the df table, and the second source pass
-    * costs more than the avoided sort (49.2 s window vs 50.8 s join,
-    * identical 26,916 candidates — see OPTIMIZATION_r15.md).
-    */
-  private def pfCappedEntries(sh: DataFrame, prefixDfCap: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    pfHashedInv(sh)
-      .withColumn("gdf", count(lit(1)).over(Window.partitionBy(col("g"))))
-      .where(col("gdf") <= prefixDfCap)
-      .withColumn("pos", row_number().over(
-        Window.partitionBy(col("id")).orderBy(col("gdf"), col("g"))) - 1)
-      .select(col("id"), col("n_sh"), col("pos"), col("g"), col("gdf"))
-  }
-
-  /** The rejected groupBy+join df attachment kept ONLY for the DedupProbe
-    * A/B (see [[pfCappedEntries]] scaladoc).
-    */
-  private[graft] def pfCappedEntriesDfJoin(sh: DataFrame,
-      prefixDfCap: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val inv = pfHashedInv(sh)
-    val dfTbl = inv.groupBy(col("g")).agg(count(lit(1)).as("gdf"))
-      .where(col("gdf") <= prefixDfCap)
-    inv.join(dfTbl.hint("shuffle_hash"), Seq("g"))
-      .withColumn("pos", row_number().over(
-        Window.partitionBy(col("id")).orderBy(col("gdf"), col("g"))) - 1)
-      .select(col("id"), col("n_sh"), col("pos"), col("g"), col("gdf"))
-  }
 
   /** Witness-counted rarest-prefix candidate pairs — the `prefixDfCap`
     * candidate generator shared by [[ngramContainmentPairs]] and (round 15)
@@ -1078,23 +948,38 @@ object Dedup {
     * `stageDir` (calls sharing one `stageDir` never read each other's
     * candidates), and the returned frame reads it lazily: `stageDir` must
     * outlive every action on the result.
+    *
+    * The capped entries are `pfOrderedEntries(sh).where(gdf <= cap)` with
+    * the cap pushed BETWEEN the two windows (round 15): the df window runs
+    * as before (one source pass), but over-cap entries are dropped BEFORE
+    * the per-doc rank shuffle instead of after it — the rank window's
+    * exchange and sort never see the corpus-dense boilerplate entries the
+    * cap exists to exclude. Identical rows to the post-filter form: every
+    * over-cap entry has `gdf > cap >= gdf(kept)`, so in the per-doc
+    * (gdf ASC, g ASC) order every over-cap entry sorts STRICTLY AFTER
+    * every kept entry — removing them first cannot shift any kept entry's
+    * `pos`. (Entries tied on (gdf, g) are byte-identical rows, so their
+    * arbitrary row_number assignment is unobservable downstream.) The
+    * window semantics (`pos <= n_sh − α + e` with `n_sh` = the FULL
+    * shingle count) are untouched — the audits ([[prefixWitnessAtRisk]])
+    * keep the uncapped [[pfOrderedEntries]] form because they must SEE
+    * over-cap entries inside the window. A groupBy+shuffle_hash-join df
+    * attachment was A/B'd at 500k docs and REJECTED: it re-scans and
+    * re-shingles the corpus for the df table, and the second source pass
+    * costs more than the avoided sort (49.2 s window vs 50.8 s join,
+    * identical 26,916 candidates — OPTIMIZATION_r15.md).
     */
-  private[graft] def prefixWitnessCands(sh: DataFrame, tNum: Long,
+  private def prefixWitnessCands(sh: DataFrame, tNum: Long,
       prefixDfCap: Int, lengthBound: Boolean,
-      stageDir: Option[String] = None,
-      dfStrategy: String = "cappedWindow"): DataFrame = {
+      stageDir: Option[String] = None): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val e = PrefixWitnessExt
-    // dfStrategy selects the entry-ranking formulation purely for A/B
-    // probing (DedupProbe): "cappedWindow" (default — cap pushed between
-    // the windows), "postFilter" (pre-round-15 form), "dfJoin" (rejected
-    // groupBy+join form). All three emit IDENTICAL rows.
-    val kept0 = dfStrategy match {
-      case "cappedWindow" => pfCappedEntries(sh, prefixDfCap)
-      case "postFilter" => pfOrderedEntries(sh).where(col("gdf") <= prefixDfCap)
-      case "dfJoin" => pfCappedEntriesDfJoin(sh, prefixDfCap)
-      case other => throw new IllegalArgumentException(
-        s"unknown dfStrategy: $other")
-    }
+    val kept0 = pfHashedInv(sh)
+      .withColumn("gdf", count(lit(1)).over(Window.partitionBy(col("g"))))
+      .where(col("gdf") <= prefixDfCap)
+      .withColumn("pos", row_number().over(
+        Window.partitionBy(col("id")).orderBy(col("gdf"), col("g"))) - 1)
+      .select(col("id"), col("n_sh"), col("pos"), col("g"), col("gdf"))
     val stage = stageDir.map(callStageDir)
     val kept = stage match {
       case Some(dir) =>
@@ -1195,7 +1080,8 @@ object Dedup {
     * two join sides, and pair generation compares longs, not shingle
     * strings). The posting-list buffer is O(df) per shingle — the same
     * id-only bucket shape [[minhashNearDupNative]] uses — and the quadratic
-    * term (Σ df² pairs out of the explode) is what `maxDocFreq` bounds.
+    * term (Σ df² pairs out of the explode) is what the two prefix modes
+    * below bound.
     *
     * `prefixFilter = true` switches candidate generation to AllPairs/PPJoin
     * positional prefix filtering (Bayardo et al. 2007; Xiao et al. 2008):
@@ -1203,15 +1089,15 @@ object Dedup {
     * index only each doc's first `n − ⌈t·n⌉ + 1` shingles, and bucket-join
     * PREFIXES against PREFIXES — a qualifying pair must share ≥ ⌈t·max⌉
     * shingles, so its prefixes provably intersect (no recall contract AT
-    * ALL, unlike `maxDocFreq`: the filter is exact, and survivors re-score
-    * on full sets via [[verifyExactJaccard]]). The positional bound
+    * ALL: the filter is exact, and survivors re-score on full sets via
+    * [[verifyExactJaccard]]). The positional bound
     * `min(|A|−i, |B|−j) ≥ ⌈t·max⌉` prunes rows whose shared shingle sits
     * too deep for the remaining suffixes to reach the overlap (valid at the
     * pair's FIRST shared prefix shingle, which always survives for
     * qualifying pairs — later shared shingles may be filtered, the distinct
     * keeps the pair). Candidate volume drops from Σ df² to Σ prefix_df²
     * where boilerplate shingles have prefix_df ≈ 0 — this is what replaces
-    * the df cap at corpus scale without touching semantics.
+    * a df cap at corpus scale without touching semantics.
     *
     * Regime note, measured: at sf0.1 (1k docs, ~52 shingles/doc) the plain
     * count-based aggregation wins — candidates are cheap counts and the
@@ -1225,24 +1111,7 @@ object Dedup {
     * smaller side's e-extended prefix under an audited bucket cap with the
     * multi-witness pigeonhole quota, plus the Jaccard length bound (see
     * [[prefixWitnessCands]]); audit with [[ngramJaccardAtRisk]], recall
-    * contract as there. Measured A/B vs `maxDocFreq` per round in
-    * BASELINE.md; survivors re-score exactly either way.
-    *
-    * `maxDocFreq > 0` drops whole buckets larger than the cap (boilerplate,
-    * stop-phrases — a shingle shared by d docs contributes d² pairs) from
-    * CANDIDATE GENERATION only. Candidates are first scored on their
-    * SUB-CAP co-occurrence count — an undercount of |A∩B|, so the score is
-    * a LOWER bound on the true Jaccard and `subJ ≥ minJaccard` admits no
-    * false positives — and only the survivors are re-scored on FULL shingle
-    * sets ([[verifyExactJaccard]]), so reported scores are identical to the
-    * uncapped operator's while the exact re-join touches ~true-pair-many
-    * rows, not candidate-many (the corpus yields ~30× more candidates than
-    * pairs; re-scoring all of them measured 7× slower than this at sf0.1).
-    * The recall contract: a pair is found iff it reaches `minJaccard` on
-    * sub-cap shingles alone — a pair pushed over the line only by capped
-    * boilerplate shingles is never reported, which is the point. Audit what
-    * a cap excludes with [[ngramStopShingles]] (same arguments) — never
-    * silent. `maxDocFreq = 0` (default) keeps the fully exact pipeline.
+    * contract as there; survivors re-score exactly.
     */
   def ngramJaccardPairs(
       docs: DataFrame,
@@ -1250,18 +1119,14 @@ object Dedup {
       idCol: String = "doc_id",
       shingleSize: Int = 3,
       minJaccard: Double = 0.8,
-      maxDocFreq: Int = 0,
       prefixFilter: Boolean = false,
       prefixDfCap: Int = 0,
       stageDir: String = ""): DataFrame = {
     require(minJaccard > 0 && minJaccard <= 1.0,
       s"minJaccard in (0, 1]: $minJaccard")
-    require(!(prefixFilter && maxDocFreq > 0),
-      "prefixFilter is the exact replacement for the df cap — combining " +
-        "them would silently restore the capped-recall contract")
-    require(prefixDfCap <= 0 || (maxDocFreq <= 0 && !prefixFilter),
+    require(prefixDfCap <= 0 || !prefixFilter,
       "prefixDfCap is a complete candidate-generation mode of its own — " +
-        "combine with neither maxDocFreq nor prefixFilter")
+        "do not combine it with prefixFilter")
     require(stageDir.isEmpty || prefixDfCap > 0,
       "stageDir bounds the witness path's live scratch — it requires prefixDfCap")
     val sh = docs
@@ -1302,37 +1167,20 @@ object Dedup {
       return verifyExactJaccard(cand, sh, minJaccard, cappedCands = false)
     }
     val inv = sh.select(col("id"), col("n_sh"), explode(col("sh")).as("g"))
-    val buckets = postingBuckets(inv, maxDocFreq)
-    val copairs = buckets
+    // every co-occurrence is counted, so the count IS |A∩B|
+    postingBuckets(inv)
       .select(explode(col("members")).as("a"), col("members"))
       .select(col("a"), explode(col("members")).as("b"))
       .where(col("a.id") < col("b.id") &&
         least(col("a.n_sh"), col("b.n_sh")) >=
           lit(minJaccard) * greatest(col("a.n_sh"), col("b.n_sh")))
-    if (maxDocFreq <= 0) {
-      // uncapped: every co-occurrence is counted, so the count IS |A∩B|
-      copairs
-        .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        .agg(count(lit(1)).as("common"), first(col("a.n_sh")).as("n_a"),
-          first(col("b.n_sh")).as("n_b"))
-        .select(col("id_a"), col("id_b"),
-          (col("common").cast("double") /
-            (col("n_a") + col("n_b") - col("common"))).as("jaccard"))
-        .where(col("jaccard") >= minJaccard)
-    } else {
-      // capped: the sub-cap co-occurrence count undercounts |A∩B|, so the
-      // count-based score is a LOWER bound on the true Jaccard — filtering
-      // on it first admits no false positives and shrinks the exact
-      // re-score join from candidate-many to ~pair-many rows
-      val pairs = copairs
-        .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        .agg(count(lit(1)).as("common"), first(col("a.n_sh")).as("n_a"),
-          first(col("b.n_sh")).as("n_b"))
-        .where(col("common").cast("double") /
-          (col("n_a") + col("n_b") - col("common")) >= minJaccard)
-        .select(col("id_a"), col("id_b"))
-      verifyExactJaccard(pairs, sh, minJaccard, cappedCands = true)
-    }
+      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .agg(count(lit(1)).as("common"), first(col("a.n_sh")).as("n_a"),
+        first(col("b.n_sh")).as("n_b"))
+      .select(col("id_a"), col("id_b"),
+        (col("common").cast("double") /
+          (col("n_a") + col("n_b") - col("common"))).as("jaccard"))
+      .where(col("jaccard") >= minJaccard)
   }
 
   /** Exact n-gram CONTAINMENT near-dup pairs — the asymmetric companion to
@@ -1345,16 +1193,13 @@ object Dedup {
     * direction reaches `minContainment`; the consumer reads which side is
     * the contained one off the two columns.
     *
-    * Same posting-list-bucket shape and `maxDocFreq` discipline as the
-    * Jaccard form, with ONE deliberate difference: no length prefilter —
-    * Jaccard's `min ≥ t·max` necessary condition is exactly the size
-    * asymmetry containment exists to keep. Under a cap the sub-cap count
-    * is a lower bound on |A∩B|, hence on both containments, so the
-    * pre-filter admits no false positives and survivors re-score on full
-    * shingle sets (the capped-Jaccard contract, directionally applied).
+    * Same posting-list-bucket shape as the Jaccard form, with ONE
+    * deliberate difference: no length prefilter — Jaccard's `min ≥ t·max`
+    * necessary condition is exactly the size asymmetry containment exists
+    * to keep.
     *
-    * `prefixFilter = true` is the EXACT scale path (no recall contract,
-    * unlike the cap): a qualifying pair needs `|A∩B| ≥ ⌈t·min(|A|,|B|)⌉`,
+    * `prefixFilter = true` is the EXACT scale path (no recall contract):
+    * a qualifying pair needs `|A∩B| ≥ ⌈t·min(|A|,|B|)⌉`,
     * so the SMALLER doc's df-ordered prefix (its first `n − ⌈t·n⌉ + 1`
     * rarest shingles, [[pfOrderedEntries]]) must hit the larger doc's FULL
     * set — candidate generation is a prefix-vs-full equi-join, Σ
@@ -1367,8 +1212,8 @@ object Dedup {
     * survivors re-score exactly ([[verifyContainment]]).
     *
     * `prefixDfCap > 0` is the SCALE path (round 14) — rarest-prefix
-    * candidate generation under an audited bucket cap, combining the two
-    * mechanisms above one level deeper than either alone:
+    * candidate generation under an audited bucket cap, combining the prefix
+    * filter above with a document-frequency cap:
     *
     *  - '''Rarest-prefix witnesses.''' A qualifying pair needs
     *    `|A∩B| ≥ ⌈t·|S|⌉` on its SMALLER side S, so S has at most
@@ -1380,7 +1225,7 @@ object Dedup {
     *    and equal-size pairs share their witness bound symmetrically).
     *    This is the `prefixFilter` guarantee re-expressed in the ONE-SHUFFLE
     *    posting-bucket shape (prefix members × all members per bucket,
-    *    `Σ prefix_df·df` instead of the capped path's `Σ df²` — and the
+    *    `Σ prefix_df·df` instead of `Σ df²` — and the
     *    prefix mass concentrates on RARE shingles, which is where df is
     *    small), instead of the entries⋈entries join that re-shuffles the
     *    full index and was measured exhausting scratch at 5M docs.
@@ -1389,12 +1234,12 @@ object Dedup {
     *    cannot do (dropping a dense shingle might drop a pair's ONLY
     *    witness) and what makes the hot prefix-bucket case (identical or
     *    template docs whose RAREST shingles are still corpus-dense) bounded.
-    *    The recall contract is PER-DOC and auditable, unlike the capped
-    *    path's per-pair score contract: a pair can be missed as soon as
-    *    over-cap buckets eat into the `min(e+1, α)` witness quota of the
-    *    smaller side's e-extended prefix — a SINGLE over-cap shared
-    *    shingle in that window can already drop a qualifying pair below
-    *    quota; only a fully under-cap extended prefix is provably safe.
+    *    The recall contract is PER-DOC and auditable: a pair can be missed
+    *    as soon as over-cap buckets eat into the `min(e+1, α)` witness
+    *    quota of the smaller side's e-extended prefix — a SINGLE over-cap
+    *    shared shingle in that window can already drop a qualifying pair
+    *    below quota; only a fully under-cap extended prefix is provably
+    *    safe.
     *    [[ngramContainmentAtRisk]] (same arguments) lists exactly the docs
     *    with ANY over-cap entry in that window; when it returns empty the
     *    result is provably identical to the uncapped operator's —
@@ -1410,18 +1255,14 @@ object Dedup {
       idCol: String = "doc_id",
       shingleSize: Int = 3,
       minContainment: Double = 0.9,
-      maxDocFreq: Int = 0,
       prefixFilter: Boolean = false,
       prefixDfCap: Int = 0,
       stageDir: String = ""): DataFrame = {
     require(minContainment > 0 && minContainment <= 1.0,
       s"minContainment in (0, 1]: $minContainment")
-    require(!(prefixFilter && maxDocFreq > 0),
-      "prefixFilter is the exact replacement for the df cap — combining " +
-        "them would silently restore the capped-recall contract")
-    require(prefixDfCap <= 0 || (maxDocFreq <= 0 && !prefixFilter),
+    require(prefixDfCap <= 0 || !prefixFilter,
       "prefixDfCap is a complete candidate-generation mode of its own — " +
-        "combine with neither maxDocFreq nor prefixFilter")
+        "do not combine it with prefixFilter")
     require(stageDir.isEmpty || prefixDfCap > 0,
       "stageDir bounds the witness path's live scratch — it requires prefixDfCap")
     val sh = containmentShingleSets(docs, textCol, idCol, shingleSize)
@@ -1473,34 +1314,18 @@ object Dedup {
       return verifyContainment(cand, sh, minContainment, cappedCands = false)
     }
     val inv = sh.select(col("id"), col("n_sh"), explode(col("sh")).as("g"))
-    val buckets = postingBuckets(inv, maxDocFreq)
-    val counted = buckets
+    val common = col("common").cast("double")
+    postingBuckets(inv)
       .select(explode(col("members")).as("a"), col("members"))
       .select(col("a"), explode(col("members")).as("b"))
       .where(col("a.id") < col("b.id")) // no length filter — see scaladoc
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("common"), first(col("a.n_sh")).as("n_a"),
         first(col("b.n_sh")).as("n_b"))
-    def cScores(common: Column, na: Column, nb: Column) = (
-      common.cast("double") / na.cast("double"),
-      common.cast("double") / nb.cast("double"))
-    if (maxDocFreq <= 0) {
-      val (ca, cb) = cScores(col("common"), col("n_a"), col("n_b"))
-      counted
-        .select(col("id_a"), col("id_b"),
-          round(ca, 4).as("c_a_in_b"), round(cb, 4).as("c_b_in_a"))
-        .where(greatest(col("c_a_in_b"), col("c_b_in_a")) >= minContainment)
-    } else {
-      val (ca, cb) = cScores(col("common"), col("n_a"), col("n_b"))
-      // Round the lower-bound scores to the SAME 4dp the final filter (and
-      // the uncapped path / the oracle) applies: rounding is monotone, so
-      // round(capped) <= round(true) and the prefilter stays lossless while
-      // keeping boundary pairs whose true score rounds UP to the threshold.
-      val candidates = counted
-        .where(greatest(round(ca, 4), round(cb, 4)) >= minContainment)
-        .select(col("id_a"), col("id_b"))
-      verifyContainment(candidates, sh, minContainment, cappedCands = true)
-    }
+      .select(col("id_a"), col("id_b"),
+        round(common / col("n_a").cast("double"), 4).as("c_a_in_b"),
+        round(common / col("n_b").cast("double"), 4).as("c_b_in_a"))
+      .where(greatest(col("c_a_in_b"), col("c_b_in_a")) >= minContainment)
   }
 
   /** Audit for [[ngramContainmentPairs]]'s `prefixDfCap` mode: the docs
@@ -1554,25 +1379,6 @@ object Dedup {
       .select(col("id"), col("sh"), size(col("sh")).as("n_sh"))
     prefixWitnessAtRisk(sh, pfThresholdNum(minJaccard), prefixDfCap)
   }
-
-  /** Audit for [[ngramJaccardPairs]]'s document-frequency cap: the shingles
-    * a given `maxDocFreq` would exclude from candidate generation, as
-    * (shingle, doc_freq), highest-frequency first. At corpus scale the top
-    * of this list is boilerplate (headers, license blocks) — reviewing it is
-    * how a pipeline author picks the cap.
-    */
-  def ngramStopShingles(
-      docs: DataFrame,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      shingleSize: Int = 3,
-      maxDocFreq: Int = 256): DataFrame =
-    docs
-      .select(col(idCol).as("id"), explode(shingles(col(textCol), shingleSize)).as("g"))
-      .groupBy(col("g"))
-      .agg(count(lit(1)).as("doc_freq"))
-      .where(col("doc_freq") > maxDocFreq)
-      .orderBy(col("doc_freq").desc, col("g"))
 
   /** Edit-distance (Levenshtein) near-dup pairs at or below `maxDist` —
     * the character-level complement of the token-set family: catches
@@ -1637,11 +1443,12 @@ object Dedup {
 
   /** `maxSegmentBucket = 0` (default) is fully exact. With a positive cap,
     * segment buckets shared by MORE than that many documents are dropped
-    * from CANDIDATE GENERATION (the e11 `maxDocFreq` discipline): surviving
-    * pairs still verify with the exact DP, so reported distances never
-    * change — the only semantic difference is that a pair whose EVERY
-    * matching segment is capped boilerplate is not considered. Audit what a
-    * cap excludes with [[editDistanceHotSegments]] — never silent.
+    * from CANDIDATE GENERATION (an audited cap, as with `prefixDfCap`):
+    * surviving pairs still verify with the exact DP, so reported
+    * distances never change — the only semantic difference is that a pair
+    * whose EVERY matching segment is capped boilerplate is not considered.
+    * Audit what a cap excludes with [[editDistanceHotSegments]] — never
+    * silent.
     *
     * '''Rarest-segment selection''' (`nSegments`/`indexSegments`) is the
     * EXACT hot-bucket drain (round-13; the cap above is a recall contract,
@@ -1704,7 +1511,6 @@ object Dedup {
       maxSegmentBucket: Int = 0,
       nSegments: Int = 0,
       indexSegments: Int = 0,
-      qgramFilter: Int = 0,
       candidateSlices: Int = 1,
       stageDir: Option[String] = None): DataFrame = {
     require(maxDist >= 0, s"maxDist must be >= 0: $maxDist")
@@ -1807,17 +1613,6 @@ object Dedup {
 
     // id-only candidate pairs; keys re-join AFTER the distinct, so the
     // multi-segment/multi-shift duplication never carries string payloads.
-    // qgramFilter > 0 layers Gravano-style positional q-gram COUNT
-    // filtering (Gravano et al., "Approximate String Joins in a Database
-    // (Almost) for Free", VLDB 2001) between the candidates and the DP:
-    // ed(A,B) ≤ d allows at most d·q of A's positional q-grams to miss B
-    // within shift d, so pairs with fewer than (|A|−q+1) − d·q matches are
-    // provably out — the filter can only shrink the DP set, never the
-    // result. NOTE it runs AFTER the candidate distinct (the strings are
-    // deliberately not carried through the segment join), so it bounds DP
-    // work, not the candidate exchange that dominates at rehearsal scale —
-    // kept as a measured A/B knob, off by default (the round-14 docs5m
-    // A/B is recorded in BASELINE.md).
     def verified(probe: DataFrame, indexed: DataFrame): DataFrame = {
       val pairs0 = probe.join(indexed, Seq("lb", "i", "sub"))
         .where(col("id_a") < col("id_b"))
@@ -1841,24 +1636,11 @@ object Dedup {
       // candidate pair stream TWICE with the comparison key attached; the
       // build side is the corpus-sized (id, key) table, which hashes per
       // partition in ~tens of MB at any rehearsed scale
-      val joined = pairs
+      pairs
         .join(keyed.select(col("id").as("id_a"), col("k").as("k_a"))
           .hint("shuffle_hash"), Seq("id_a"))
         .join(keyed.select(col("id").as("id_b"), col("k").as("k_b"))
           .hint("shuffle_hash"), Seq("id_b"))
-      val prefiltered =
-        if (qgramFilter <= 0) joined
-        else {
-          val q = qgramFilter
-          val nA = length(col("k_a")) - (q - 1)
-          val thr = nA - lit(d * q)
-          val matches = size(filter(
-            sequence(lit(1), greatest(nA, lit(1))),
-            i => exists(sequence(greatest(i - d, lit(1)), i + d),
-              j => col("k_b").substr(j, lit(q)) === col("k_a").substr(i, lit(q)))))
-          joined.where(when(thr <= 0, lit(true)).otherwise(matches >= thr))
-        }
-      prefiltered
         .select(col("id_a"), col("id_b"),
           levenshtein(col("k_a"), col("k_b"), maxDist).cast("long").as("dist"))
         .where(col("dist") >= 0)
@@ -1965,11 +1747,10 @@ object Dedup {
       // materialize the pair list ONCE (often the output of an expensive
       // candidate join): the CC loop AND the node-universe union both read
       // it, and without the cut each reference would recompute the whole
-      // pair generation. Left persisted — the operator-internal cache
-      // convention (see Curate's release-behind for pipeline-scale use).
-      val pc = pairs
-        .select(col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b"))
-        .localCheckpoint(true)
+      // pair generation. The pinned blocks belong to the returned frame
+      // (see [[graft.ops.Layout.pin]]).
+      val pc = graft.ops.Layout.pin(pairs.select(
+        col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b")))
       val ep = pc.select(col("id_a").as("node"))
         .union(pc.select(col("id_b").as("node")))
       val labels = ccLargeSmallStar(pc)
@@ -2058,11 +1839,7 @@ object Dedup {
         .select(col("node").as("u"), col("m").as("v"))
         .distinct()
       val (next, nextHeld) = pinCut(ss)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $round pinned at +${System.nanoTime() / 1e9}")
       val cur = fingerprint(next)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $round fp=$cur at +${System.nanoTime() / 1e9}")
       held.foreach(_.unpersist(blocking = false))
       edges = next; held = nextHeld
       converged = cur == prev
@@ -2085,7 +1862,7 @@ object Dedup {
 
   /** The same groups→keepers tail for ANY pair generator — every near-dup
     * family here emits the same (id_a, id_b, …) pair shape, so
-    * [[ngramJaccardPairs]], [[simhashNearDup]], [[editDistancePairs]],
+    * [[ngramJaccardPairs]], [[ngramContainmentPairs]], [[editDistancePairs]],
     * [[embeddingNearDup]], or a union of several can drive the pass:
     * `nearDedupRowsFrom(docs, editDistancePairs(docs, maxDist = 2))`.
     */
@@ -2562,8 +2339,9 @@ object Dedup {
     * bucket occupancy instead: `bits = ⌈log₂(n / 64)⌉` clamped to
     * [minBits, maxBits], `nPlanes = bands · bits`. The trade is recall on
     * NON-IDENTICAL near-dups (P[band match] = (1 − θ/π)^bits per band;
-    * exact copies collide at any width) — measured with the DedupProbe
-    * planted-pair harness per round; at the verify corpus (≤4k vectors)
+    * exact copies collide at any width) — measured with a planted-pair
+    * harness per round (last in-tree at c7bf663, BASELINE.md carries the
+    * numbers); at the verify corpus (≤4k vectors)
     * the rule lands exactly on the historical 32 planes, so the static
     * oracle mirror stays valid and [[graft.Verify]] pre-flights that.
     */
@@ -2589,16 +2367,18 @@ object Dedup {
     * expected candidate volume `bands / 2^bits` (per-row bucket occupancy
     * is `n/2^bits` per band). At minCosine 0.95, R 0.9 this lands on
     * 7 bands × 9 bits = 63 planes — ~96% theoretical recall at LOWER cost
-    * than fixed-32's 89% (n/73 vs n/64 candidate mass) — measured in
-    * DedupProbe's e93band section. The frontier is corpus-size-INDEPENDENT
-    * within one signature word: every option's candidate volume scales
-    * ∝ n²; past ~10⁹ rows per partition-group the answer is more signature
-    * WORDS (bands beyond 63/bits), not a different split of 63 bits —
+    * than fixed-32's 89% (n/73 vs n/64 candidate mass) — measured with
+    * the planted-pair harness (BASELINE.md, e93band). The frontier is
+    * corpus-size-INDEPENDENT within one signature word: every option's
+    * candidate volume scales ∝ n²; past ~10⁹ rows per partition-group
+    * the answer is more signature WORDS (bands beyond 63/bits), not a
+    * different split of 63 bits —
     * IMPLEMENTED (round 14): pass `maxSignatureBits > 63` and feed the
     * resulting (nPlanes, bands) to [[embeddingNearDupMd5]] /
     * [[embeddingNearDup]], which assemble each band's ≤63-bit key directly
     * from its own plane subset, so a signature may span any number of
-    * words. The DedupProbe `e93wide` harness measures the frontier break:
+    * words. The planted-pair harness measured the frontier break
+    * (BASELINE.md, e93wide):
     * at minCosine 0.9, occupancy-driven minBits 12, NO single-word split
     * reaches 95% recall (4×13 tops out at ~43% theoretical) while
     * 20 bands × 12 bits (240 planes) does.

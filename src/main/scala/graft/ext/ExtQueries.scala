@@ -58,8 +58,8 @@ object ExtQueries {
     * shortens the SMALLER side, so candidate volume stays ~Σ df².
     * `prefixFilter = true` stays available (DedupSpec pins it ≡ naive) as
     * the exact-recall path for df-heavy real corpora where the
-    * ngramStopShingles audit shows a cap dropping true pairs — choose by
-    * measured df skew, not corpus size.
+    * ngramJaccardAtRisk / ngramContainmentAtRisk audit shows a cap
+    * dropping true pairs — choose by measured df skew, not corpus size.
     */
 
   // E1 exact dedup over a deliberately doubled documents corpus: keeper id +
@@ -256,18 +256,17 @@ object ExtQueries {
       val doubled = graft.ops.Layout.repairScanParallelism(
         d.unionAll(d.withColumn("doc_id", col("doc_id") + 100000L)))
       // witness-counted rarest-prefix candidates at EVERY scale (round-15
-      // A/B at 5M docs: 133.0 s vs the round-13 winner maxDocFreq=1000's
-      // 222.6 s, IDENTICAL 256k pairs, ngramJaccardAtRisk empty — the e106
-      // generator transferred to the symmetric family). cap=1000 is
-      // inactive at verify scale — df cannot exceed the doubled corpus's
-      // doc count, graft.Verify pre-flights both 2·|documents| <= 1000 AND
-      // an empty ngramJaccardAtRisk, so the claim trips loudly if testdata
-      // grows instead of surfacing as an opaque hash mismatch; the
+      // A/B at 5M docs: 133.0 s vs 222.6 s for the round-13 winner, a
+      // plain df cap of 1000; IDENTICAL 256k pairs, ngramJaccardAtRisk
+      // empty — the e106 generator transferred to the symmetric family).
+      // cap=1000 is inactive at verify scale — df cannot exceed the
+      // doubled corpus's doc count, graft.Verify pre-flights both
+      // 2·|documents| <= 1000 AND an empty ngramJaccardAtRisk, so the
+      // claim trips loudly if testdata grows instead of surfacing as an
+      // opaque hash mismatch; the
       // constant stays FIXED rather than corpus-derived because at
-      // rehearsal scale the cap IS the recall contract. maxDocFreq remains
-      // the small-corpus default (count-based aggregation wins under ~10k
-      // docs — the round-3 regime note); prefixFilter remains the exact-
-      // recall escape hatch for df-heavy corpora.
+      // rehearsal scale the cap IS the recall contract. prefixFilter
+      // remains the exact-recall escape hatch for df-heavy corpora.
       Dedup.ngramJaccardPairs(doubled, minJaccard = 0.8, prefixDfCap = 1000)
         .orderBy(col("id_a"), col("id_b"))
     },
@@ -485,10 +484,11 @@ object ExtQueries {
   // brute-forces every pair with DuckDB's own levenshtein — identical
   // classic edit-distance metric, so the surviving (id_a, id_b, dist) rows
   // hash-match exactly.
-  // maxSegmentBucket = 500 follows the e11 maxDocFreq convention: provably
+  // maxSegmentBucket = 500 follows the e11 prefixDfCap convention: provably
   // INACTIVE at verify scale (sf0.01 max segment bucket < 100, sf0.1 max 192
-  // — DedupProbe hotseg audit, identical pair sets with and without the
-  // cap), while at rehearsal scale it bounds the Σ bucket² candidate volume.
+  // — Dedup.editDistanceHotSegments audit, identical pair sets with and
+  // without the cap), while at rehearsal scale it bounds the Σ bucket²
+  // candidate volume.
   // The sf10 probe (5M docs) fixed the value: stopword-led prefix segments
   // reach ~19k docs and both the uncapped form AND cap=2000 OOM'd the
   // 48g heap, while cap=500 completes (2.2M pairs, 349 s) — a pair matching
@@ -1740,7 +1740,8 @@ object ExtQueries {
     Some(Dedup.simhashMd5Sql("documents")))
 
   // E1d MinHash-LSH near-dup pairs, CANONICAL oracle form (replaces the
-  // retired rows-only e09_minhash_neardup) over the doubled corpus:
+  // retired rows-only e09_minhash_neardup, whose spark.ml operator is
+  // deleted) over the doubled corpus:
   // md5-derived signatures + plain-text band keys, so band assignment, the
   // candidate pair set, and the exact-Jaccard verification all replay in
   // DuckDB (SQL GENERATED — Dedup.minhashNearDupMd5Sql, same constants).
@@ -2243,8 +2244,9 @@ object ExtQueries {
   private def containmentPairsFresh(s: SparkSession, dir: String): DataFrame = {
     // rarest-prefix candidates under an audited bucket cap at every scale
     // (round 14): candidate volume is Σ prefix_df·df on prefix mass that
-    // concentrates on RARE shingles, vs the retired maxDocFreq path's
-    // Σ df² count-aggregation (143 GB spill at 500k docs / 570 s at 5M)
+    // concentrates on RARE shingles, vs the retired df-capped posting
+    // path's Σ df² count-aggregation (143 GB spill at 500k docs / 570 s at
+    // 5M)
     // and the retired entries⋈entries prefixFilter (scratch-exhausted at
     // 5M — its full-index side re-shuffled Σ prefix_df·df rows through a
     // string-keyed join). Recall is per-doc auditable: a pair can be lost
@@ -2252,10 +2254,8 @@ object ExtQueries {
     // (Dedup.ngramContainmentAtRisk); graft.Verify pre-flights that the
     // audit is EMPTY at verify scale, so the exact all-pairs oracle binds
     // bit-for-bit by construction, not by luck.
-    val pairs = Dedup.ngramContainmentPairs(containmentCorpus(s, dir),
-        minContainment = 0.9, prefixDfCap = 2000)
-      .localCheckpoint(true)
-    pairs
+    graft.ops.Layout.pin(Dedup.ngramContainmentPairs(containmentCorpus(s, dir),
+      minContainment = 0.9, prefixDfCap = 2000))
   }
 
   private val e106 = Q(

@@ -131,7 +131,7 @@ object Ranking {
     * characteristic terms from the data). tf·idf with the classic
     * `idf = ln(N / df)`; terms outside `[minDf, maxDfFrac·N]` are pruned
     * (singleton noise below, stopword-grade ubiquity above — df-pruning is
-    * also what keeps the per-term join bounded, the e11 `maxDocFreq`
+    * also what keeps the per-term join bounded, the e11 `prefixDfCap`
     * argument applied to ranking).
     *
     * Scale shape: ONE corpus scan explodes to (doc, term) pairs and

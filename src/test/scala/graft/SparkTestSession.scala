@@ -3,19 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run (spark_guide: one
-  * session per suite, lazy). Mirrors the Verify/Bench session config.
+  * session per suite, lazy): the [[Session]] config on four cores.
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.local(4)
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump a named SUBSET of declared queries + their oracle SQL so
   * `tools/local_check.py` can DuckDB-compare just the queries under active
   * development, without paying the full 144-query Verify gate per iteration.
@@ -12,14 +10,7 @@ object VerifySubset {
     val sfDir = args(0)
     val outDir = args(1)
     val names = args(2).split(",").toSet
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(8)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => names(q._1)).foreach { case (name, fn) =>
       fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -59,13 +59,6 @@ class DedupSpec extends AnyFunSuite {
       .collect().foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
 
-  test("simhashNearDup pairs exact copies at hamming 0") {
-    val pairs = Dedup.simhashNearDup(docs, maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 5L)))
-    assert(pairs.contains((1L, 2L)))
-  }
-
   test("simhashMd5 portable fingerprint: copies agree, near/far ordering holds, empty -> 0") {
     import spark.implicits._
     val h = docs.select(col("doc_id"), Dedup.simhashMd5(col("text")).as("sh"))
@@ -103,13 +96,6 @@ class DedupSpec extends AnyFunSuite {
     val native = asSet(Dedup.minhashNearDupNative(doubled, minJaccard = 0.7))
     assert(portable == native,
       s"portable minus native: ${portable -- native}; native minus portable: ${native -- portable}")
-  }
-
-  test("minhash LSH finds exact and near duplicates, not the unrelated doc") {
-    val pairs = Dedup.minhashNearDup(docs, numHashTables = 16, maxJaccardDistance = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 5L)), s"missing exact pair in $pairs")
-    assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L), s"unrelated doc paired: $pairs")
   }
 
   test("native MinHashSig expression is bit-identical to the HOF signature fold") {
@@ -272,7 +258,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("PPJoin prefixFilter jaccard ≡ default path: same pairs, same scores (exact recall)") {
     // the round-13 scale path: df-ordered prefix + positional filtering is
-    // EXACT (no recall contract, unlike maxDocFreq) — pin it against the
+    // EXACT (no recall contract, unlike a df cap) — pin it against the
     // default path on the real doubled corpus at two thresholds
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -290,9 +276,9 @@ class DedupSpec extends AnyFunSuite {
 
   test("prefixFilter keeps the boilerplate-only pair the df cap drops (exactness, not a contract)") {
     import spark.implicits._
-    // the capped-recall-contract corpus: (100, 101) qualify ONLY via
-    // df=22 boilerplate shingles — the cap drops them BY DESIGN, the prefix
-    // filter must keep them because it is exact
+    // (100, 101) qualify ONLY via df=22 boilerplate shingles — a df cap
+    // drops them by design, the prefix filter must keep them because it is
+    // exact
     val boiler = "please read our terms of service"
     val corpus = ((1L to 20L).map(i => (i, s"$boiler filler$i")) ++ Seq(
         (100L, s"$boiler appendix"),
@@ -305,11 +291,6 @@ class DedupSpec extends AnyFunSuite {
     assert(pf == plain,
       s"missing=${plain.keySet -- pf.keySet} extra=${pf.keySet -- plain.keySet}")
     assert(pf.contains((100L, 101L)))
-    // combining the exact filter with the capped contract is refused loudly
-    assertThrows[IllegalArgumentException] {
-      Dedup.ngramJaccardPairs(corpus, minJaccard = 0.5, maxDocFreq = 5,
-        prefixFilter = true)
-    }
   }
 
   test("prefixFilter jaccard ≡ default on 120 randomized docs (seeded)") {
@@ -374,7 +355,7 @@ class DedupSpec extends AnyFunSuite {
     assert(pairsOf(Dedup.ngramJaccardPairs(docs, minJaccard = 0.9, prefixDfCap = 30)) == un)
     // mode exclusivity is refused loudly, as in the containment family
     assertThrows[IllegalArgumentException] {
-      Dedup.ngramJaccardPairs(docs, minJaccard = 0.9, prefixDfCap = 10, maxDocFreq = 5)
+      Dedup.ngramJaccardPairs(docs, minJaccard = 0.9, prefixDfCap = 10, prefixFilter = true)
     }
   }
 
@@ -503,63 +484,6 @@ class DedupSpec extends AnyFunSuite {
       prefixDfCap = 30).count() == 0L)
     assert(pairsOf(Dedup.ngramContainmentPairs(docs, minContainment = 0.9,
       prefixDfCap = 30)) == un)
-  }
-
-  test("ngram jaccard DF cap: stop-shingles excluded from candidates, scores exact") {
-    import spark.implicits._
-    val boiler = "subscribe to our newsletter for daily updates today"
-    // 20 docs sharing only boilerplate (its internal shingles have DF=20,
-    // a d^2 join bucket) + one genuine near-dup pair on rare shingles
-    val corpus = ((1L to 20L).map(i =>
-        (i, s"story$i alpha$i beta$i gamma$i delta$i epsilon$i $boiler")) ++ Seq(
-        (100L, "the quick brown fox jumps over the lazy dog in the morning sun"),
-        (101L, "the quick brown fox jumps over the lazy dog in the evening sun")))
-      .toDF("doc_id", "text")
-    val uncapped = Dedup.ngramJaccardPairs(corpus, minJaccard = 0.05)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val capped = Dedup.ngramJaccardPairs(corpus, minJaccard = 0.05, maxDocFreq = 5)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    // uncapped pairs every boilerplate-sharing doc combo; the cap removes all
-    // of them and keeps ONLY the genuine near-dup
-    assert(uncapped.keySet.exists(p => p._1 <= 20L && p._2 <= 20L))
-    assert(!capped.keySet.exists(p => p._1 <= 20L && p._2 <= 20L), s"boilerplate pair survived: $capped")
-    assert(capped.contains((100L, 101L)))
-    // verification re-join keeps the score EXACT, not approximated
-    assert(capped((100L, 101L)) == uncapped((100L, 101L)))
-    // the audit names exactly the capped shingles, each with its true DF
-    val stops = Dedup.ngramStopShingles(corpus, maxDocFreq = 5).collect()
-    assert(stops.nonEmpty)
-    assert(stops.forall(_.getAs[Long]("doc_freq") == 20L), stops.mkString(","))
-    assert(stops.forall(r => boiler.contains(r.getAs[String]("g").split(" ").head)))
-  }
-
-  test("ngram jaccard DF cap recall CONTRACT: a pair over-threshold only via capped shingles is not reported") {
-    import spark.implicits._
-    // The r9 pre-filter changed the capped-mode contract: candidates must
-    // reach minJaccard on SUB-CAP co-occurrence alone (a lower bound on the
-    // true Jaccard); a pair pushed over the line only by capped boilerplate
-    // is dropped by design, not re-scored on full sets. This pins that
-    // semantic (ADVICE r9) with a pair whose FULL-set Jaccard passes while
-    // its sub-cap Jaccard cannot: A/B share 4 boilerplate shingles
-    // (df = 22 > cap) and ZERO sub-cap shingles → full J = 4/6 ≥ 0.5,
-    // sub-cap co-occurrence 0.
-    val boiler = "please read our terms of service"
-    val corpus = ((1L to 20L).map(i => (i, s"$boiler filler$i")) ++ Seq(
-        (100L, s"$boiler appendix"),
-        (101L, s"$boiler glossary")))
-      .toDF("doc_id", "text")
-    val uncapped = Dedup.ngramJaccardPairs(corpus, minJaccard = 0.5)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    // full-set arithmetic really does pass the threshold for (100, 101)
-    assert(math.abs(uncapped((100L, 101L)) - 4.0 / 6.0) < 1e-12)
-    val capped = Dedup.ngramJaccardPairs(corpus, minJaccard = 0.5, maxDocFreq = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(!capped.contains((100L, 101L)),
-      "pair with no sub-cap overlap must not be reported under a cap")
-    // sanity: a pair that DOES reach the threshold on sub-cap shingles alone
-    // still comes through with its exact full-set score (the main cap test
-    // covers this on a richer corpus)
-    assert(capped.isEmpty || capped.subsetOf(uncapped.keySet))
   }
 
   test("dupGroups collapses transitive chains A~B~C into one component") {
@@ -764,18 +688,6 @@ class DedupSpec extends AnyFunSuite {
     } yield (a, b) -> dist.toLong).toMap
     assert(got == brute,
       s"missing=${brute.keySet -- got.keySet} extra=${got.keySet -- brute.keySet}")
-  }
-
-  test("editDistancePairs qgramFilter is a pure DP prefilter: identical output") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    def pairs(q: Int) = Dedup.editDistancePairs(docs, maxDist = 5,
-        prefixLen = 40, qgramFilter = q)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val off = pairs(0)
-    assert(off.nonEmpty)
-    assert(pairs(3) == off)
-    assert(pairs(2) == off)
   }
 
   test("editDistancePairs candidateSlices: identical pairs, cap composes, rarest-k refuses") {
@@ -1380,25 +1292,16 @@ class DedupSpec extends AnyFunSuite {
     assert(got == Map((1L, 2L) -> ((0.2222, 1.0))))
     val jac = Dedup.ngramJaccardPairs(docs, minJaccard = 0.9).collect()
     assert(jac.isEmpty) // the symmetric family is blind to this pair
-  }
-
-  test("ngramContainmentPairs: capped run rescores exactly (≡ uncapped)") {
-    import spark.implicits._
-    val docs = (1L to 30L).map { i =>
+    // on a denser corpus, every reported pair clears the threshold on its
+    // larger direction
+    val dense = (1L to 30L).map { i =>
       val words = (0 until 12).map(j => s"w${(i * 7 + j * 3) % 17}")
       (i, words.mkString(" "))
     }.toDF("doc_id", "text")
       .unionByName(Seq((100L, "w0 w3 w6 w9"), (101L, "w0 w3 w6 w9 x y z"))
         .toDF("doc_id", "text"))
-    val uncapped = Dedup.ngramContainmentPairs(docs, minContainment = 0.8)
-      .collect().toSeq
-    val capped = Dedup.ngramContainmentPairs(docs, minContainment = 0.8,
-      maxDocFreq = 100).collect().toSeq
-    assert(uncapped.sortBy(r => (r.getLong(0), r.getLong(1))) ==
-      capped.sortBy(r => (r.getLong(0), r.getLong(1))))
-    assert(uncapped.nonEmpty)
-    // every reported pair really clears the threshold on the larger side
-    assert(uncapped.forall(r =>
+    val densePairs = Dedup.ngramContainmentPairs(dense, minContainment = 0.8).collect()
+    assert(densePairs.nonEmpty && densePairs.forall(r =>
       math.max(r.getDouble(2), r.getDouble(3)) >= 0.8))
   }
 

@@ -173,7 +173,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("autoSaltFor detects the probe's hot key and no-ops on uniform keys") {
     import spark.implicits._
-    // 90%-hot key (the SkewProbe shape): MG on a 10% sample must see it
+    // 90%-hot key (the skew-join probe shape in BASELINE.md): MG on a 10% sample must see it
     val skewed = (1 to 20000)
       .map(i => (if (i % 10 != 0) 7L else i.toLong, i)).toDF("k", "v")
     val saltSkewed = Layout.autoSaltFor(skewed, "k", sampleFraction = 0.1)

@@ -1,12 +1,14 @@
 #!/bin/bash
-# Run a graft probe main in its own JVM without sbt — probes can then run
-# in the background while sbt compiles/tests in the foreground (sbt holds
-# a project-level lock; two sbt processes cannot share /root/repo).
+# Run a graft main (e.g. graft.examples.ScaleUp or StageProf) in its own
+# JVM without sbt — it can then run in the background while sbt
+# compiles/tests in the foreground (sbt holds a project-level lock; two sbt
+# processes cannot share /root/repo).
 #
 #   tools/probe.sh <MainClass> [args...]
 #
-# Env: PROBE_MEM (default 96g) sizes the driver heap; SPARK_GRAFT_CPUS and
-# the GRAFT_* knobs pass through to the main. The --add-opens list matches
+# Env: PROBE_MEM (default 96g) sizes the driver heap; the main's own
+# variables (SPARK_GRAFT_CPUS, SPARK_GRAFT_SF_DIR, GRAFT_SCALEUP_TABLES)
+# pass through to it. The --add-opens list matches
 # build.sbt's jdk17AddOpens (Spark 4.x on JDK 17 outside spark-submit).
 set -euo pipefail
 CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
