@@ -950,7 +950,7 @@ object Dedup {
     * outlive every action on the result.
     *
     * The capped entries are `pfOrderedEntries(sh).where(gdf <= cap)` with
-    * the cap pushed BETWEEN the two windows (round 15): the df window runs
+    * the cap pushed BETWEEN the two windows: the df window runs
     * as before (one source pass), but over-cap entries are dropped BEFORE
     * the per-doc rank shuffle instead of after it — the rank window's
     * exchange and sort never see the corpus-dense boilerplate entries the

@@ -2,7 +2,7 @@
 # Run a graft main (e.g. graft.examples.ScaleUp or StageProf) in its own
 # JVM without sbt — it can then run in the background while sbt
 # compiles/tests in the foreground (sbt holds a project-level lock; two sbt
-# processes cannot share /root/repo).
+# processes cannot share one checkout).
 #
 #   tools/probe.sh <MainClass> [args...]
 #
