@@ -67,8 +67,7 @@ object Curate {
     val out = graft.ops.Layout.pin(df)
     // everything newly persisted by the materialization job belongs to
     // this stage: the checkpoint RDD itself, plus any operator-internal
-    // persists (e.g. GraphX's) that are dead weight once the checkpoint
-    // holds the output
+    // persists that are dead weight once the checkpoint holds the output
     pinned(out) = (sc.getPersistentRDDs.keySet -- before).toSeq
       .flatMap(sc.getPersistentRDDs.get)
     out
@@ -112,7 +111,7 @@ object Curate {
     drop(gated)
     mark("diversity")
 
-    // 2. exact dedup, then transitive near-dedup (MinHash → GraphX groups)
+    // 2. exact dedup, then transitive near-dedup (MinHash → CC groups)
     val exact = pin(Dedup.exactRows(diverse))
     val near = pin(Dedup.nearDedupRows(exact, minJaccard = 0.7))
     println(s"[curate] dedup: exact ${exact.count()} -> near ${near.count()} docs")

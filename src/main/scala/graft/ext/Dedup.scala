@@ -125,8 +125,7 @@ object Dedup {
   /** Md5 twin of [[minhashBandedIds]] — the engine-portable banding used by
     * [[minhashNearDupMd5]]: md5-derived signatures, PLAIN-TEXT band keys
     * (the joined signature values, no second hash an engine could disagree
-    * on). Shared with [[minhashBucketOverflow]]'s `md5 = true` audit so the
-    * audited buckets are exactly the ones the md5 cap truncates.
+    * on).
     */
   private def minhashBandedIdsMd5(
       docs: DataFrame, textCol: String, idCol: String,
@@ -161,14 +160,10 @@ object Dedup {
     * parallel codegen'd scan, the standard Spark trade of CPU for memory
     * safety.
     *
-    * `maxBucket = 0` (default) applies NO bucket cap: no candidate pair is
-    * ever silently dropped. A degenerate bucket of B members still yields
-    * B²/2 candidate pairs downstream — if the corpus may contain exact-dup
-    * clusters, run [[exactRows]] first (the cheap operator that removes
-    * them), and audit with [[minhashBucketOverflow]] before choosing a cap.
-    * With `maxBucket > 0`, each bucket keeps its `maxBucket` smallest ids
-    * (deterministic) and the overflow is observable via
-    * [[minhashBucketOverflow]] with the same arguments — never silent.
+    * No bucket is capped, so no candidate pair is ever dropped. A degenerate
+    * bucket of B members still yields B²/2 candidate pairs downstream — if
+    * the corpus may contain exact-dup clusters, run [[exactRows]] first (the
+    * cheap operator that removes them).
     */
   def minhashNearDupNative(
       docs: DataFrame,
@@ -177,15 +172,12 @@ object Dedup {
       shingleSize: Int = 3,
       bands: Int = 4,
       rowsPerBand: Int = 4,
-      minJaccard: Double = 0.7,
-      maxBucket: Int = 0): DataFrame = {
+      minJaccard: Double = 0.7): DataFrame = {
     val banded = minhashBandedIds(docs, textCol, idCol, shingleSize, bands, rowsPerBand)
-    // Bucket → ordered candidate id pairs. collect_list over longs only;
-    // array_sort makes the optional cap deterministic (smallest ids kept).
-    val ids0 = banded.groupBy(col("bk"))
+    // Bucket → ordered candidate id pairs. collect_list over longs only.
+    val ids = banded.groupBy(col("bk"))
       .agg(array_sort(collect_list(col("id"))).as("ids"))
       .where(size(col("ids")) > 1)
-    val ids = if (maxBucket > 0) ids0.select(slice(col("ids"), 1, maxBucket).as("ids")) else ids0
     val pairs = ids
       .select(explode(col("ids")).as("id_a"), col("ids"))
       .select(col("id_a"), explode(col("ids")).as("id_b"))
@@ -196,38 +188,8 @@ object Dedup {
     // joined back by id.
     val sh = docs.select(col(idCol).as("id"),
       shingles(col(textCol), shingleSize).as("sh"))
-    verifyExactJaccard(pairs, sh, minJaccard, cappedCands = maxBucket > 0)
+    verifyExactJaccard(pairs, sh, minJaccard, cappedCands = false)
   }
-
-  /** Overflow audit for [[minhashNearDupNative]]'s optional bucket cap:
-    * returns every band bucket larger than `maxBucket` as (band, key,
-    * n_members, n_dropped). Run it (same banding arguments) before enabling
-    * a cap — or after, to quantify exactly what the cap dropped. This is the
-    * explicit alternative to silent truncation: at 100 TB a handful of
-    * degenerate buckets is an upstream data-quality signal (exact-dup
-    * clusters, boilerplate), not something to swallow.
-    */
-  def minhashBucketOverflow(
-      docs: DataFrame,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      shingleSize: Int = 3,
-      bands: Int = 4,
-      rowsPerBand: Int = 4,
-      maxBucket: Int = 256,
-      md5: Boolean = false): DataFrame =
-    // `md5 = true` audits [[minhashNearDupMd5]]'s buckets: md5 band keys
-    // come from md5 signatures, so bucket MEMBERSHIPS differ from the
-    // native xxhash64 banding — auditing the native buckets would not
-    // enumerate what the md5 cap drops (ADVICE r14). The key column is a
-    // long (native) or the plain-text joined signature (md5).
-    (if (md5) minhashBandedIdsMd5(docs, textCol, idCol, shingleSize, bands, rowsPerBand)
-     else minhashBandedIds(docs, textCol, idCol, shingleSize, bands, rowsPerBand))
-      .groupBy(col("bk.band").as("band"), col("bk.key").as("key"))
-      .agg(count(lit(1)).as("n_members"))
-      .where(col("n_members") > maxBucket)
-      .select(col("band"), col("key"), col("n_members"),
-        (col("n_members") - maxBucket).as("n_dropped"))
 
   /** 64-bit SimHash (Charikar 2002) over the token stream — entirely
     * codegen'd Catalyst higher-order functions, no UDF, no shuffle:
@@ -350,8 +312,10 @@ object Dedup {
     * (mirror: [[minhashNearDupMd5Sql]]). The xxhash64 native form stays
     * the fast path — md5 costs a digest per (permutation, shingle) vs one
     * codegen'd xxhash64 — with the same bucket posture: the aggregation
-    * touches (id, band-key) only, never shingle arrays, and verification
-    * re-derives shingles just for candidate-pair members.
+    * touches (id, band-key) only, never shingle arrays, no bucket is
+    * capped, and verification re-derives shingles just for candidate-pair
+    * members. This is the declared e84 form, where the DuckDB oracle
+    * brute-forces all pairs.
     */
   def minhashNearDupMd5(
       docs: DataFrame,
@@ -360,33 +324,20 @@ object Dedup {
       shingleSize: Int = 3,
       bands: Int = 4,
       rowsPerBand: Int = 4,
-      minJaccard: Double = 0.7,
-      maxBucket: Int = 0): DataFrame = {
-    // maxBucket mirrors [[minhashNearDupNative]]'s audited bucket cap
-    // (keep each bucket's maxBucket smallest ids — deterministic; audit
-    // with [[minhashBucketOverflow]] passing `md5 = true`, which buckets by
-    // THESE md5 band keys — the native-signature audit has different bucket
-    // memberships and would not enumerate what this cap drops): the
-    // round-14 1000× probe measured the UNCAPPED form as the first dedup
-    // family to break (>70 GB scratch at 50M docs, unfinished at 35 min —
-    // Σ bucket² over band buckets). 0 (default) keeps the fully exact
-    // candidate set — the declared e84 form, where the DuckDB oracle
-    // brute-forces all pairs.
+      minJaccard: Double = 0.7): DataFrame = {
     val sh = docs
       .select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
       .where(size(col("sh")) > 0)
-    val ids0 = minhashBandedIdsMd5(docs, textCol, idCol, shingleSize, bands, rowsPerBand)
+    val ids = minhashBandedIdsMd5(docs, textCol, idCol, shingleSize, bands, rowsPerBand)
       .groupBy(col("bk"))
       .agg(array_sort(collect_list(col("id"))).as("ids"))
       .where(size(col("ids")) > 1)
-    val ids = if (maxBucket > 0) ids0.select(slice(col("ids"), 1, maxBucket).as("ids"))
-      else ids0
     val pairs = ids
       .select(explode(col("ids")).as("id_a"), col("ids"))
       .select(col("id_a"), explode(col("ids")).as("id_b"))
       .where(col("id_a") < col("id_b"))
       .distinct()
-    verifyExactJaccard(pairs, sh, minJaccard, cappedCands = maxBucket > 0)
+    verifyExactJaccard(pairs, sh, minJaccard, cappedCands = false)
   }
 
   /** Generated DuckDB mirror of [[minhashNearDupMd5]] over `idCol, textCol`
@@ -932,23 +883,6 @@ object Dedup {
     * [[ngramJaccardAtRisk]] list the docs whose witness window holds any
     * over-cap shingle.
     *
-    * `stageDir` (round 15) bounds LIVE shuffle scratch on a single box by
-    * materializing the two natural stage boundaries to parquet and
-    * releasing the upstream shuffle files before the next stage runs. The
-    * measured 50M-doc single-box first-to-break (BASELINE.md round-15
-    * table) is NOT candidate volume — it is the ranking windows' and the
-    * candidate join's full-index shuffle files being live SIMULTANEOUSLY
-    * (~2–3× the index vs the box's free scratch). Staging splits the
-    * pipeline into sequential jobs — (1) rank + cap the entries →
-    * `$dir/entries`, (2) witness join → `$dir/cands` (witness-bounded,
-    * tiny), (3) exact verify — so peak live scratch is ONE stage's, not
-    * their sum. EAGER when set (the writes run at call time); leave unset
-    * on a cluster, where the one-job plan pipelines and hash-partitions
-    * perfectly. Each call stages under its own fresh subdirectory of
-    * `stageDir` (calls sharing one `stageDir` never read each other's
-    * candidates), and the returned frame reads it lazily: `stageDir` must
-    * outlive every action on the result.
-    *
     * The capped entries are `pfOrderedEntries(sh).where(gdf <= cap)` with
     * the cap pushed BETWEEN the two windows: the df window runs
     * as before (one source pass), but over-cap entries are dropped BEFORE
@@ -970,32 +904,20 @@ object Dedup {
     * identical 26,916 candidates — OPTIMIZATION_r15.md).
     */
   private def prefixWitnessCands(sh: DataFrame, tNum: Long,
-      prefixDfCap: Int, lengthBound: Boolean,
-      stageDir: Option[String] = None): DataFrame = {
+      prefixDfCap: Int, lengthBound: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val e = PrefixWitnessExt
-    val kept0 = pfHashedInv(sh)
+    // pin (round 16): the probe AND index legs both embed this subtree,
+    // so an unpinned plan runs the df+rank window pipeline TWICE —
+    // StageProf measured the rank-window stage duplicated (2× 1.2 s of
+    // e94's cold pair generation). One eager materialization whose
+    // blocks are released with the frames built on it.
+    val kept = graft.ops.Layout.pin(pfHashedInv(sh)
       .withColumn("gdf", count(lit(1)).over(Window.partitionBy(col("g"))))
       .where(col("gdf") <= prefixDfCap)
       .withColumn("pos", row_number().over(
         Window.partitionBy(col("id")).orderBy(col("gdf"), col("g"))) - 1)
-      .select(col("id"), col("n_sh"), col("pos"), col("g"), col("gdf"))
-    val stage = stageDir.map(callStageDir)
-    val kept = stage match {
-      case Some(dir) =>
-        kept0.write.mode("overwrite").parquet(s"$dir/entries")
-        // hand the ranking windows' now-unreachable shuffle files to the
-        // ContextCleaner before the join stage claims its own scratch
-        System.gc()
-        sh.sparkSession.read.parquet(s"$dir/entries")
-      case None =>
-        // pin (round 16): the probe AND index legs both embed this subtree,
-        // so an unpersisted plan runs the df+rank window pipeline TWICE —
-        // StageProf measured the rank-window stage duplicated (2× 1.2 s of
-        // e94's cold pair generation). One eager materialization whose
-        // blocks are released with the frames built on it.
-        graft.ops.Layout.pin(kept0)
-    }
+      .select(col("id"), col("n_sh"), col("pos"), col("g"), col("gdf")))
     val probe = kept
       .where(col("pos") <= col("n_sh") - pfAlpha(col("n_sh"), tNum) + e)
       .select(col("id").as("id_p"), col("n_sh").as("n_p"),
@@ -1011,7 +933,7 @@ object Dedup {
       if (lengthBound) joined.where(
         lit(PfScale) * col("n_p") >= lit(tNum) * col("n_i"))
       else joined
-    val cand = sized
+    sized
       // positional bound relaxed by e — valid for the j-th shared entry,
       // j ≤ e+1 (suffixes must still cover α − e), so every counted
       // witness survives it
@@ -1023,21 +945,7 @@ object Dedup {
       .agg(count(lit(1)).as("__w"), first(col("n_p")).as("__n_p"))
       .where(col("__w") >= least(lit(e + 1), pfAlpha(col("__n_p"), tNum)))
       .select(col("id_a"), col("id_b"))
-    stage match {
-      case Some(dir) =>
-        cand.write.mode("overwrite").parquet(s"$dir/cands")
-        System.gc() // release the witness join's shuffle files pre-verify
-        sh.sparkSession.read.parquet(s"$dir/cands")
-      case None => cand
-    }
   }
-
-  /** A fresh subdirectory of a caller's `stageDir` for one call's staged
-    * boundaries, so calls sharing a `stageDir` cannot overwrite each
-    * other's files while an earlier call's result still reads them.
-    */
-  private def callStageDir(stageDir: String): String =
-    s"$stageDir/${java.util.UUID.randomUUID()}"
 
   /** Shared body of [[ngramContainmentAtRisk]] / [[ngramJaccardAtRisk]]:
     * docs with ≥1 over-cap shingle inside the e-extended prefix witness
@@ -1120,15 +1028,12 @@ object Dedup {
       shingleSize: Int = 3,
       minJaccard: Double = 0.8,
       prefixFilter: Boolean = false,
-      prefixDfCap: Int = 0,
-      stageDir: String = ""): DataFrame = {
+      prefixDfCap: Int = 0): DataFrame = {
     require(minJaccard > 0 && minJaccard <= 1.0,
       s"minJaccard in (0, 1]: $minJaccard")
     require(prefixDfCap <= 0 || !prefixFilter,
       "prefixDfCap is a complete candidate-generation mode of its own — " +
         "do not combine it with prefixFilter")
-    require(stageDir.isEmpty || prefixDfCap > 0,
-      "stageDir bounds the witness path's live scratch — it requires prefixDfCap")
     val sh = docs
       .select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
       .select(col("id"), col("sh"), size(col("sh")).as("n_sh"))
@@ -1138,8 +1043,7 @@ object Dedup {
       // contract via [[ngramJaccardAtRisk]], candidates additionally
       // pruned by the Jaccard length bound (see [[prefixWitnessCands]]).
       val cand = prefixWitnessCands(sh, pfThresholdNum(minJaccard),
-        prefixDfCap, lengthBound = true,
-        stageDir = Option(stageDir).filter(_.nonEmpty))
+        prefixDfCap, lengthBound = true)
       return verifyExactJaccard(cand, sh, minJaccard, cappedCands = true)
     }
     if (prefixFilter) {
@@ -1256,15 +1160,12 @@ object Dedup {
       shingleSize: Int = 3,
       minContainment: Double = 0.9,
       prefixFilter: Boolean = false,
-      prefixDfCap: Int = 0,
-      stageDir: String = ""): DataFrame = {
+      prefixDfCap: Int = 0): DataFrame = {
     require(minContainment > 0 && minContainment <= 1.0,
       s"minContainment in (0, 1]: $minContainment")
     require(prefixDfCap <= 0 || !prefixFilter,
       "prefixDfCap is a complete candidate-generation mode of its own — " +
         "do not combine it with prefixFilter")
-    require(stageDir.isEmpty || prefixDfCap > 0,
-      "stageDir bounds the witness path's live scratch — it requires prefixDfCap")
     val sh = containmentShingleSets(docs, textCol, idCol, shingleSize)
     if (prefixDfCap > 0) {
       // the cap filters the hashed-key entry stream directly (one cheap
@@ -1288,8 +1189,7 @@ object Dedup {
       // precision), turning the exact verify join from the operator's
       // dominant cost into noise. Shared generator: [[prefixWitnessCands]].
       val cand = prefixWitnessCands(sh, pfThresholdNum(minContainment),
-        prefixDfCap, lengthBound = false,
-        stageDir = Option(stageDir).filter(_.nonEmpty))
+        prefixDfCap, lengthBound = false)
       return verifyContainment(cand, sh, minContainment, cappedCands = true)
     }
     if (prefixFilter) {
@@ -1449,58 +1349,6 @@ object Dedup {
     * whose EVERY matching segment is capped boilerplate is not considered.
     * Audit what a cap excludes with [[editDistanceHotSegments]] — never
     * silent.
-    *
-    * '''Rarest-segment selection''' (`nSegments`/`indexSegments`) is the
-    * EXACT hot-bucket drain (round-13; the cap above is a recall contract,
-    * this is not): partition each string into `nSegments` > d+1 segments
-    * and index only each doc's `indexSegments` ≥ d+1 segments with the
-    * LOWEST bucket document-frequency. The pigeonhole survives the
-    * generalization — d edits touch at most d of the segments (each edit
-    * lands inside exactly one), so of k ≥ d+1 indexed segments at least
-    * k − d ≥ 1 is untouched and appears EXACTLY in the partner within
-    * shift d. Position-fixed boilerplate (templated prefixes — the sf10
-    * 19k-doc buckets) sorts to each doc's UNSELECTED tail whenever the doc
-    * has anything rarer, so Σ bucket² collapses at the source instead of
-    * being capped after the fact. The probe side enumerates all
-    * `nSegments` positions (it cannot know which k the partner kept);
-    * per-doc probe rows grow ∝ nSegments while index rows stay d+1 — the
-    * trade is probe fan-out for bucket drain. `nSegments = 0` keeps the
-    * classic d+1 layout (no selection possible; segments at their longest
-    * and most selective — right for corpora without aligned boilerplate).
-    *
-    * '''Bounded live scratch''' (`candidateSlices`, round 15): the family's
-    * measured single-box ceiling is not candidate VOLUME (the cap bounds
-    * that) but the candidate exchange being ONE shuffle — at 5M docs the
-    * Σ bucket² pair stream's join + distinct hold >62 GB of live shuffle
-    * files and the box dies before any executor does. `candidateSlices = K`
-    * partitions the SEGMENT-BUCKET keyspace by hash into K slices and runs
-    * the join → distinct → DP pipeline once per slice, materializing each
-    * slice's verified pairs (tiny — true-pair-sized) and releasing the
-    * slice's shuffle files before the next slice starts, so peak live
-    * scratch is ~1/K of the exchange. EXACT: a bucket lives wholly in one
-    * slice, so every candidate pair is generated in the slice(s) of its
-    * matching bucket(s) and the final `dropDuplicates` collapses the pairs
-    * that matched in buckets of different slices (their DP distances are
-    * identical by determinism). The bucket cap composes unchanged (a
-    * bucket's count is computed inside its own slice — the same rows the
-    * global computation would see). NOTE `candidateSlices > 1` EXECUTES
-    * EAGERLY (K sequential jobs; the returned frame reads their
-    * materialized results) and requires the classic all-indexed layout
-    * (`indexSegments = nSegments`): rarest-segment selection ranks each
-    * doc's segments across ALL buckets, which a bucket-hash slice cannot
-    * see. On a cluster, prefer `candidateSlices = 1` — the one-shuffle plan
-    * hash-partitions perfectly; slicing trades wall-clock (K passes over
-    * the corpus-side segment generation) for bounded scratch on a single
-    * fat box.
-    *
-    * `stageDir` (round 16) is the lighter single-box scratch bound — the
-    * [[prefixWitnessCands]] staging discipline ported to this family: ONE
-    * materialization of the candidate-distinct boundary (id pairs only,
-    * parquet) releases the Σ bucket² segment-join/distinct shuffle files
-    * before the verify joins run, without the K-pass corpus re-reads of
-    * slicing. Mutually exclusive with `candidateSlices > 1`. As there, each
-    * call stages under its own fresh subdirectory, and `stageDir` must
-    * outlive every action on the result.
     */
   def editDistancePairs(
       docs: DataFrame,
@@ -1508,65 +1356,21 @@ object Dedup {
       idCol: String = "doc_id",
       maxDist: Int = 5,
       prefixLen: Int = 0,
-      maxSegmentBucket: Int = 0,
-      nSegments: Int = 0,
-      indexSegments: Int = 0,
-      candidateSlices: Int = 1,
-      stageDir: Option[String] = None): DataFrame = {
+      maxSegmentBucket: Int = 0): DataFrame = {
     require(maxDist >= 0, s"maxDist must be >= 0: $maxDist")
-    require(stageDir.isEmpty || candidateSlices == 1,
-      "stageDir and candidateSlices are alternative scratch bounds — " +
-        "slices already materialize per-slice; set one or the other")
     val d = maxDist
-    val m = if (nSegments > 0) nSegments else d + 1
-    require(m >= d + 1, s"nSegments must be >= maxDist + 1: $nSegments vs d=$d")
-    val k = if (indexSegments > 0) indexSegments else m
-    require(k >= d + 1 && k <= m,
-      s"indexSegments must be in [maxDist + 1, nSegments]: $k vs d=$d m=$m")
-    require(candidateSlices >= 1, s"candidateSlices must be >= 1: $candidateSlices")
-    require(candidateSlices == 1 || k >= m,
-      "candidateSlices composes with the classic all-indexed layout only " +
-        s"(indexSegments = nSegments): got k=$k m=$m")
+    val m = d + 1
     val keyed = edKeyed(docs, textCol, idCol, prefixLen)
-    val indexedAll = edSegments(keyed, m)
-    // slice restriction on the segment-bucket key (lb, i, sub) — None is
-    // the whole keyspace (the classic one-shuffle plan). A bucket's every
-    // row lands in the same slice, so per-slice bucket counts (the cap) and
-    // per-slice candidate generation see exactly the rows the global
-    // computation would.
-    def inSlice(df: DataFrame, s: Option[Int]): DataFrame = s match {
-      case Some(i) => df.where(pmod(xxhash64(col("lb"), col("i"), col("sub")),
-        lit(candidateSlices.toLong)) === i)
-      case None => df
-    }
-    // rarest-segment selection: rank each doc's segments by their bucket's
-    // corpus-wide df (ties by segment index — total, deterministic) and
-    // keep the k rarest. Strings too short to fill every segment rank the
-    // empty-suffix segments by df like any other (an empty `sub` bucket is
-    // maximally hot, so selection naturally avoids it when possible).
-    def indexedOf(s: Option[Int]): DataFrame = {
-      val base = inSlice(indexedAll, s)
-      val indexed0 =
-        if (k >= m) base
-        else {
-          val segDf = base.groupBy(col("lb"), col("i"), col("sub"))
-            .agg(count(lit(1)).as("__bdf"))
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("id_b")).orderBy(col("__bdf"), col("i"))
-          base.join(segDf, Seq("lb", "i", "sub"))
-            .withColumn("__rk", row_number().over(w))
-            .where(col("__rk") <= k)
-            .select(col("id_b"), col("lb"), col("i"), col("sub"))
-        }
-      if (maxSegmentBucket <= 0) indexed0
+    val segments = edSegments(keyed, m)
+    val indexed =
+      if (maxSegmentBucket <= 0) segments
       else {
-        val hot = indexed0.groupBy(col("lb"), col("i"), col("sub"))
+        val hot = segments.groupBy(col("lb"), col("i"), col("sub"))
           .agg(count(lit(1)).as("__n"))
           .where(col("__n") > maxSegmentBucket)
           .select(col("lb"), col("i"), col("sub"))
-        indexed0.join(hot, Seq("lb", "i", "sub"), "left_anti")
+        segments.join(hot, Seq("lb", "i", "sub"), "left_anti")
       }
-    }
 
     // probe side: for every corpus length within ±d (a broadcast dimension
     // of DISTINCT lengths — not a row explosion over the corpus), every
@@ -1580,94 +1384,52 @@ object Dedup {
     // which shrinks the segment join's output, the Σ bucket² candidate
     // stream, and the distinct exchange behind e18's rehearsal spill.
     //
-    // When EVERY segment is indexed (the classic k = m layout), the bound
-    // tightens further with the SEGMENT INDEX (round 15 — the paper's full
-    // multi-match-aware selection): take the FIRST untouched segment i of
-    // the indexed side as the witness. Its i earlier segments are then all
-    // touched, and each edit position lies in exactly one of them, so the
-    // edits strictly before the witness number ≥ max(i, |δ|) (the same
-    // early edits pay both the touches and the displacement) while the
-    // edits after still number ≥ |Δ−δ| — disjoint sets, so
-    // max(i, |δ|) + |Δ−δ| ≤ d. EXACT for k = m: if an earlier segment is
-    // untouched, the pair is generated from THAT segment's probe row
-    // (whose own bound holds by the same argument — induction on i). Under
-    // rarest-k selection (k < m) the probe cannot know which earlier
-    // segments the partner indexed, so only the index-free bound applies.
+    // Because EVERY segment is indexed, the bound tightens further with
+    // the SEGMENT INDEX (round 15 — the paper's full multi-match-aware
+    // selection): take the FIRST untouched segment i of the indexed side
+    // as the witness. Its i earlier segments are then all touched, and
+    // each edit position lies in exactly one of them, so the edits
+    // strictly before the witness number ≥ max(i, |δ|) (the same early
+    // edits pay both the touches and the displacement) while the edits
+    // after still number ≥ |Δ−δ| — disjoint sets, so
+    // max(i, |δ|) + |Δ−δ| ≤ d. EXACT: if an earlier segment is untouched,
+    // the pair is generated from THAT segment's probe row (whose own bound
+    // holds by the same argument — induction on i).
     val lengths = keyed.select(col("l").as("lb")).distinct()
     val probeSubs = array((for { i <- 0 until m; delta <- -d to d } yield {
       val p = edSegStart(col("lb"), i, m) + delta
       val len = edSegLen(col("lb"), i, m)
       struct(lit(i).as("i"), p.as("p"), len.as("len"), lit(delta).as("dl"))
     }): _*)
-    val beforeEdits =
-      if (k >= m) greatest(col("ps.i"), abs(col("ps.dl"))) else abs(col("ps.dl"))
-    def probeOf(lengthsDf: DataFrame, s: Option[Int]): DataFrame = inSlice(
-      keyed
-        .join(broadcast(lengthsDf), abs(col("l") - col("lb")) <= d)
-        .select(col("id").as("id_a"), col("k").as("k_a"), col("l").as("la"),
-          col("lb"), explode(probeSubs).as("ps"))
-        .where(col("ps.p") >= 0 && col("ps.p") + col("ps.len") <= col("la") &&
-          beforeEdits + abs(col("la") - col("lb") - col("ps.dl")) <= d)
-        .select(col("id_a"), col("lb"), col("ps.i").as("i"),
-          col("k_a").substr(col("ps.p") + 1, col("ps.len")).as("sub")), s)
+    val beforeEdits = greatest(col("ps.i"), abs(col("ps.dl")))
+    val probe = keyed
+      .join(broadcast(lengths), abs(col("l") - col("lb")) <= d)
+      .select(col("id").as("id_a"), col("k").as("k_a"), col("l").as("la"),
+        col("lb"), explode(probeSubs).as("ps"))
+      .where(col("ps.p") >= 0 && col("ps.p") + col("ps.len") <= col("la") &&
+        beforeEdits + abs(col("la") - col("lb") - col("ps.dl")) <= d)
+      .select(col("id_a"), col("lb"), col("ps.i").as("i"),
+        col("k_a").substr(col("ps.p") + 1, col("ps.len")).as("sub"))
 
     // id-only candidate pairs; keys re-join AFTER the distinct, so the
     // multi-segment/multi-shift duplication never carries string payloads.
-    def verified(probe: DataFrame, indexed: DataFrame): DataFrame = {
-      val pairs0 = probe.join(indexed, Seq("lb", "i", "sub"))
-        .where(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"))
-        .distinct() // a pair can match via several segments/shifts
-      // stageDir (round 16 — the prefixWitnessCands discipline ported to
-      // the PassJoin family): materialize the candidate-distinct boundary
-      // to parquet and release the segment join's + distinct's shuffle
-      // files before the verify joins claim their own scratch, so peak
-      // LIVE shuffle scratch on one box is a single stage's. EAGER when
-      // set; leave unset on a cluster (the one-job plan pipelines).
-      val pairs = stageDir.map(callStageDir) match {
-        case Some(dir) =>
-          pairs0.write.mode("overwrite").parquet(s"$dir/edcands")
-          System.gc()
-          docs.sparkSession.read.parquet(s"$dir/edcands")
-        case None => pairs0
-      }
-      // shuffle-HASH the two key-attach joins (round 16 — the
-      // verifyContainment discipline): sort-merge would external-sort the
-      // candidate pair stream TWICE with the comparison key attached; the
-      // build side is the corpus-sized (id, key) table, which hashes per
-      // partition in ~tens of MB at any rehearsed scale
-      pairs
-        .join(keyed.select(col("id").as("id_a"), col("k").as("k_a"))
-          .hint("shuffle_hash"), Seq("id_a"))
-        .join(keyed.select(col("id").as("id_b"), col("k").as("k_b"))
-          .hint("shuffle_hash"), Seq("id_b"))
-        .select(col("id_a"), col("id_b"),
-          levenshtein(col("k_a"), col("k_b"), maxDist).cast("long").as("dist"))
-        .where(col("dist") >= 0)
-    }
-
-    if (candidateSlices == 1) verified(probeOf(lengths, None), indexedOf(None))
-    else {
-      // eager sequential slices: each slice's verified pairs are
-      // materialized (true-pair-sized blocks), then the slice's join /
-      // distinct shuffle files — unreachable once the checkpoint exists —
-      // are handed to the ContextCleaner via an explicit GC so the next
-      // slice starts with the scratch back. The corpus-side inputs are
-      // persisted across slices (keyed is narrow: id + the comparison key).
-      keyed.persist()
-      val lengthsCk = lengths.localCheckpoint(true)
-      try {
-        val parts = (0 until candidateSlices).map { s =>
-          val out = verified(probeOf(lengthsCk, Some(s)), indexedOf(Some(s)))
-            .localCheckpoint(true)
-          System.gc()
-          out
-        }
-        // a pair that matched in buckets of DIFFERENT slices appears once
-        // per slice with identical (deterministic) distances — collapse
-        parts.reduce(_ unionAll _).dropDuplicates("id_a", "id_b")
-      } finally keyed.unpersist()
-    }
+    val pairs = probe.join(indexed, Seq("lb", "i", "sub"))
+      .where(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"))
+      .distinct() // a pair can match via several segments/shifts
+    // shuffle-HASH the two key-attach joins (round 16 — the
+    // verifyContainment discipline): sort-merge would external-sort the
+    // candidate pair stream TWICE with the comparison key attached; the
+    // build side is the corpus-sized (id, key) table, which hashes per
+    // partition in ~tens of MB at any rehearsed scale
+    pairs
+      .join(keyed.select(col("id").as("id_a"), col("k").as("k_a"))
+        .hint("shuffle_hash"), Seq("id_a"))
+      .join(keyed.select(col("id").as("id_b"), col("k").as("k_b"))
+        .hint("shuffle_hash"), Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        levenshtein(col("k_a"), col("k_b"), maxDist).cast("long").as("dist"))
+      .where(col("dist") >= 0)
   }
 
   /** Audit for [[editDistancePairs]]'s candidate volume: segment buckets
@@ -1703,23 +1465,19 @@ object Dedup {
     * — each round is two hash-aggregate + join passes over the edge list,
     * entirely inside Tungsten/whole-stage-codegen and under AQE, converging
     * in O(log² n) rounds (vs O(diameter) for plain label propagation; on
-    * the clique-shaped dedup graphs both are a handful). `useGraphX = true`
-    * keeps the previous Pregel formulation — retained as the equivalence
-    * reference (spec-pinned identical), not as a production path: the RDD
-    * loop gets no codegen, no AQE, and Kryo-serializes every row per
-    * iteration.
+    * the clique-shaped dedup graphs both are a handful). GraphX's Pregel
+    * connected components is the equivalence reference in test scope
+    * (DedupSpec pins identical labels).
     *
     * Returns (id, group_id); docs absent from `pairs` are their own group.
     */
   def dupGroups(allIds: DataFrame, pairs: DataFrame,
-      idCol: String = "doc_id", useGraphX: Boolean = false): DataFrame = {
-    val spark = allIds.sparkSession
-    // Vertex ids are Long (GraphX requires it; the DF path keeps the same
-    // contract so group ids are comparable). A silent cast("long") on a
-    // string/UUID id column yields nulls and garbage components — refuse
-    // non-integral ids loudly instead. Hash string ids to long upstream
-    // (xxhash64(col) — collision odds ~n²/2⁶⁵) and keep the mapping to
-    // join back.
+      idCol: String = "doc_id"): DataFrame = {
+    // Vertex ids are Long (the pair list and the node universe are cast to
+    // long below). A silent cast("long") on a string/UUID id column yields
+    // nulls and garbage components — refuse non-integral ids loudly
+    // instead. Hash string ids to long upstream (xxhash64(col) — collision
+    // odds ~n²/2⁶⁵) and keep the mapping to join back.
     def requireIntegral(df: DataFrame, c: String): Unit = {
       import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
       df.schema(c).dataType match {
@@ -1733,35 +1491,23 @@ object Dedup {
     requireIntegral(allIds, idCol)
     requireIntegral(pairs, "id_a")
     requireIntegral(pairs, "id_b")
-    if (useGraphX) {
-      import org.apache.spark.graphx.{Edge, Graph}
-      val vertices = allIds.select(col(idCol).cast("long")).distinct()
-        .rdd.map(r => (r.getLong(0), ()))
-      val edges = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
-        .rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-      val graph = Graph(vertices, edges)
-      val cc = org.apache.spark.graphx.lib.ConnectedComponents.run(graph)
-      spark.createDataFrame(cc.vertices.map { case (id, group) => (id, group) })
-        .toDF(idCol, "group_id")
-    } else {
-      // materialize the pair list ONCE (often the output of an expensive
-      // candidate join): the CC loop AND the node-universe union both read
-      // it, and without the cut each reference would recompute the whole
-      // pair generation. The pinned blocks belong to the returned frame
-      // (see [[graft.ops.Layout.pin]]).
-      val pc = graft.ops.Layout.pin(pairs.select(
-        col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b")))
-      val ep = pc.select(col("id_a").as("node"))
-        .union(pc.select(col("id_b").as("node")))
-      val labels = ccLargeSmallStar(pc)
-      // GraphX parity: the node universe is allIds ∪ edge endpoints;
-      // unlabeled nodes (singletons and component minima) label themselves
-      allIds.select(col(idCol).cast("long").as("node"))
-        .union(ep).where(col("node").isNotNull).distinct()
-        .join(labels, Seq("node"), "left")
-        .select(col("node").as(idCol),
-          coalesce(col("group_id"), col("node")).as("group_id"))
-    }
+    // materialize the pair list ONCE (often the output of an expensive
+    // candidate join): the CC loop AND the node-universe union both read
+    // it, and without the cut each reference would recompute the whole
+    // pair generation. The pinned blocks belong to the returned frame
+    // (see [[graft.ops.Layout.pin]]).
+    val pc = graft.ops.Layout.pin(pairs.select(
+      col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b")))
+    val ep = pc.select(col("id_a").as("node"))
+      .union(pc.select(col("id_b").as("node")))
+    val labels = ccLargeSmallStar(pc)
+    // the node universe is allIds ∪ edge endpoints; unlabeled nodes
+    // (singletons and component minima) label themselves
+    allIds.select(col(idCol).cast("long").as("node"))
+      .union(ep).where(col("node").isNotNull).distinct()
+      .join(labels, Seq("node"), "left")
+      .select(col("node").as(idCol),
+        coalesce(col("group_id"), col("node")).as("group_id"))
   }
 
   /** Alternating large-star / small-star connected components (Kiveris et
@@ -1792,7 +1538,7 @@ object Dedup {
     * NOT its component's minimum; minima (and nodes absent from `pairs`)
     * are the caller's to label themselves.
     */
-  private[graft] def ccLargeSmallStar(pairs: DataFrame,
+  private def ccLargeSmallStar(pairs: DataFrame,
       maxRounds: Int = 50): DataFrame = {
     val sc = pairs.sparkSession.sparkContext
     def pinCut(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {

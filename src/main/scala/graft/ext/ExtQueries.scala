@@ -349,12 +349,13 @@ object ExtQueries {
         |  CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split
         |FROM b ORDER BY doc_id""".stripMargin))
 
-  // E1f transitive duplicate clusters: the GraphX connected-components
-  // labeling (dupGroups) under a DuckDB oracle — min-reachable-id per node
-  // via a recursive CTE over the e11 pair graph. Both engines label a
-  // component with its minimum doc_id, so the (doc_id, group_id) frames
-  // hash-compare exactly; the size-4/6 components in the doubled corpus
-  // exercise transitivity (A~B~C collapsing without a direct A~C edge).
+  // E1f transitive duplicate clusters: the large-star/small-star
+  // connected-components labeling (dupGroups) under a DuckDB oracle —
+  // min-reachable-id per node via a recursive CTE over the e11 pair graph.
+  // Both engines label a component with its minimum doc_id, so the
+  // (doc_id, group_id) frames hash-compare exactly; the size-4/6
+  // components in the doubled corpus exercise transitivity (A~B~C
+  // collapsing without a direct A~C edge).
   private val e14 = Q(
     "e14_dup_clusters",
     (s, dir) => {

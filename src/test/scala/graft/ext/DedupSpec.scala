@@ -151,51 +151,9 @@ class DedupSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val n = Dedup.minhashNearDupNative(clones, minJaccard = 0.99).count()
     assert(n == 300L * 299L / 2, s"expected ${300 * 299 / 2} pairs, got $n")
-  }
-
-  test("minhash md5: maxBucket mirrors the native cap (deterministic smallest ids)") {
-    import spark.implicits._
-    val clones = (1L to 120L).map(i => (i, "all work and no play makes jack a dull boy"))
-      .toDF("doc_id", "text")
-    // uncapped: the full clique
-    assert(Dedup.minhashNearDupMd5(clones, minJaccard = 0.99).count() == 120L * 119 / 2)
-    // capped: exactly C(30,2) pairs among the 30 smallest ids — the
-    // round-14 1000× probe measured the uncapped md5 form as the first
-    // family to break at 50M docs, so the cap knob must exist here too
-    val rows = Dedup.minhashNearDupMd5(clones, minJaccard = 0.99, maxBucket = 30)
-      .collect()
-    assert(rows.length == 30 * 29 / 2, s"got ${rows.length}")
-    assert(rows.forall(r => r.getLong(0) <= 30 && r.getLong(1) <= 30))
-    // the md5-scheme audit enumerates exactly this cap's overflow (md5 band
-    // keys ≠ native band keys, so the native audit would count different
-    // bucket memberships — ADVICE r14): 4 bands × one 120-clone bucket,
-    // keyed by the plain-text joined signature
-    val overflow = Dedup.minhashBucketOverflow(clones, maxBucket = 30, md5 = true)
-      .collect()
-    assert(overflow.length == 4, s"expected 4 overflowing md5 band buckets, got ${overflow.length}")
-    overflow.foreach { r =>
-      assert(r.getAs[Long]("n_members") == 120L)
-      assert(r.getAs[Long]("n_dropped") == 90L)
-      assert(r.getAs[String]("key").nonEmpty)
-    }
-  }
-
-  test("minhash native: explicit cap is deterministic and its overflow is observable") {
-    import spark.implicits._
-    val clones = (1L to 300L).map(i => (i, "all work and no play makes jack a dull boy"))
-      .toDF("doc_id", "text")
-    val capped = Dedup.minhashNearDupNative(clones, minJaccard = 0.99, maxBucket = 50)
-    // smallest 50 ids kept per bucket -> exactly C(50,2) pairs, ids all <= 50
-    val rows = capped.collect()
-    assert(rows.length == 50 * 49 / 2)
-    assert(rows.forall(r => r.getLong(0) <= 50 && r.getLong(1) <= 50))
-    // the audit reports the same cap's overflow: 4 bands x one bucket of 300
-    val overflow = Dedup.minhashBucketOverflow(clones, maxBucket = 50).collect()
-    assert(overflow.length == 4, s"expected 4 overflowing band buckets, got ${overflow.length}")
-    overflow.foreach { r =>
-      assert(r.getAs[Long]("n_members") == 300L)
-      assert(r.getAs[Long]("n_dropped") == 250L)
-    }
+    // the engine-portable md5 form keeps the same full clique
+    val m = Dedup.minhashNearDupMd5(clones, minJaccard = 0.99).count()
+    assert(m == 300L * 299L / 2, s"md5: expected ${300 * 299 / 2} pairs, got $m")
   }
 
   test("ngram jaccard: exact copy scores 1.0, near copy high, unrelated absent") {
@@ -359,64 +317,6 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("stageDir: staged witness path ≡ in-memory on both families; requires prefixDfCap") {
-    import spark.implicits._
-    val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val doubled = d.unionAll(d.select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-    def jm(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    def cm(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r =>
-        ((r.getLong(0), r.getLong(1)), (r.getDouble(2), r.getDouble(3)))).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft_stage").toString
-    val j = jm(Dedup.ngramJaccardPairs(doubled, minJaccard = 0.8, prefixDfCap = 2000))
-    assert(j.nonEmpty)
-    assert(jm(Dedup.ngramJaccardPairs(doubled, minJaccard = 0.8, prefixDfCap = 2000,
-      stageDir = s"$dir/j")) == j)
-    val c = cm(Dedup.ngramContainmentPairs(doubled, minContainment = 0.9,
-      prefixDfCap = 2000))
-    assert(c.nonEmpty)
-    assert(cm(Dedup.ngramContainmentPairs(doubled, minContainment = 0.9,
-      prefixDfCap = 2000, stageDir = s"$dir/c")) == c)
-    // both stage boundaries were actually materialized, under the call's
-    // own subdirectory of stageDir
-    val jCalls = new java.io.File(s"$dir/j").listFiles().filter(_.isDirectory)
-    assert(jCalls.length == 1 && new java.io.File(jCalls.head, "entries").exists &&
-      new java.io.File(jCalls.head, "cands").exists, jCalls.toSeq)
-    // calls sharing one stageDir each read their own staged candidates:
-    // every frame is built (its staging writes run) before any is read.
-    // editDistancePairs verifies its staged candidates lazily, so a later
-    // call staging into the same place would replace them under it
-    def em(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val shared = s"$dir/shared"
-    val half = d.where(col("doc_id") % 2 === 0)
-    val jShared = Dedup.ngramJaccardPairs(doubled, minJaccard = 0.8,
-      prefixDfCap = 2000, stageDir = shared)
-    val cShared = Dedup.ngramContainmentPairs(doubled, minContainment = 0.9,
-      prefixDfCap = 2000, stageDir = shared)
-    val allShared = Dedup.editDistancePairs(d, maxDist = 5, prefixLen = 40,
-      stageDir = Some(shared))
-    val halfShared = Dedup.editDistancePairs(half, maxDist = 5, prefixLen = 40,
-      stageDir = Some(shared))
-    assert(jm(jShared) == j)
-    assert(cm(cShared) == c)
-    val all = em(Dedup.editDistancePairs(d, maxDist = 5, prefixLen = 40))
-    val halfPairs = em(Dedup.editDistancePairs(half, maxDist = 5, prefixLen = 40))
-    assert(all.size > halfPairs.size && halfPairs.nonEmpty)
-    assert(em(allShared) == all)
-    assert(em(halfShared) == halfPairs)
-    // staging is a property of the witness path only — refused elsewhere
-    assertThrows[IllegalArgumentException] {
-      Dedup.ngramJaccardPairs(doubled, minJaccard = 0.8, stageDir = s"$dir/x")
-    }
-    assertThrows[IllegalArgumentException] {
-      Dedup.ngramContainmentPairs(doubled, minContainment = 0.9,
-        prefixFilter = true, stageDir = s"$dir/y")
-    }
-  }
-
   test("prefixFilter containment ≡ default path on planted excerpts (exact recall)") {
     // the e106 shape: half-length excerpts are fully contained in their
     // originals; prefix mode (smaller-side prefix vs full index) must land
@@ -448,6 +348,13 @@ class DedupSpec extends AnyFunSuite {
       assert(capped == plain,
         s"t=$t missing=${plain.keySet -- capped.keySet} extra=${capped.keySet -- plain.keySet}")
     }
+    // the witness path on the doubled corpus (exact copies): same pairs as
+    // the default path, and not vacuously
+    val doubled = d.unionAll(d.select((col("doc_id") + 100000L).as("doc_id"), col("text")))
+    val plainDoubled = collectPairs(Dedup.ngramContainmentPairs(doubled, minContainment = 0.9))
+    assert(plainDoubled.nonEmpty)
+    assert(collectPairs(Dedup.ngramContainmentPairs(doubled, minContainment = 0.9,
+      prefixDfCap = 2000)) == plainDoubled)
   }
 
   test("prefixDfCap containment: candidate superset under the cap, audit names every exposed doc") {
@@ -508,26 +415,38 @@ class DedupSpec extends AnyFunSuite {
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val dfPath = asMap(Dedup.dupGroups(realIds, realPairs))
-    val gxPath = asMap(Dedup.dupGroups(realIds, realPairs, useGraphX = true))
+    val gxPath = asMap(GraphXComponents.groups(realIds, realPairs))
     assert(dfPath == gxPath, "DataFrame CC must match GraphX on real pairs")
     assert(dfPath.nonEmpty)
     // adversarial shapes: a long path (forces multiple alternation rounds),
-    // a clique, a singleton, and an edge endpoint absent from allIds
+    // a clique, singletons, an edge endpoint absent from allIds, self-loops,
+    // one edge listed in both orientations, a repeated edge, and a 200-leaf
+    // star whose hub is one hot key (its leaves sit on both sides of it)
     val ids = (1L to 12L).toDF("doc_id")
     val path = (20L to 27L).sliding(2).map(s => (s(1), s(0))).toSeq // 20..27 chain, absent from ids
+    val hub = 1100L
+    val star = ((1000L until hub) ++ (hub + 1 to hub + 100)).zipWithIndex
+      .map { case (leaf, j) => if (j % 2 == 0) (hub, leaf) else (leaf, hub) }
     val pairs = (Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), // path graph
-      (8L, 9L), (9L, 10L), (8L, 10L)) ++ path) // triangle + external chain
+      (8L, 9L), (9L, 10L), (8L, 10L), // triangle
+      (7L, 7L), (3L, 3L), (30L, 30L), // self-loops: singleton, path node, outside allIds
+      (11L, 12L), (12L, 11L), // both orientations
+      (9L, 8L), (8L, 9L)) ++ path ++ star) // repeated edge + external chain + star
       .toDF("id_a", "id_b")
     val got = asMap(Dedup.dupGroups(ids, pairs))
-    val gx = asMap(Dedup.dupGroups(ids, pairs, useGraphX = true))
+    val gx = asMap(GraphXComponents.groups(ids, pairs))
     assert(got == gx, "shape graphs must match GraphX exactly")
     (1L to 6L).foreach(i => assert(got(i) == 1L))
-    assert(got(7L) == 7L && got(11L) == 11L && got(12L) == 12L) // singletons
+    assert(got(7L) == 7L && got(30L) == 30L) // self-loop only: own group
+    assert(got(11L) == 11L && got(12L) == 11L)
     Seq(8L, 9L, 10L).foreach(i => assert(got(i) == 8L))
     (20L to 27L).foreach(i => assert(got(i) == 20L)) // endpoints outside allIds
+    assert(star.size == 200)
+    (1000L to hub + 100).foreach(i => assert(got(i) == 1000L))
     // empty pair list: everyone is their own group
     val none = asMap(Dedup.dupGroups(ids, pairs.where(lit(false))))
     assert(none == (1L to 12L).map(i => i -> i).toMap)
+    assert(none == asMap(GraphXComponents.groups(ids, pairs.where(lit(false)))))
   }
 
   test("nearDedupRows keeps one doc per near-dup cluster") {
@@ -690,30 +609,6 @@ class DedupSpec extends AnyFunSuite {
       s"missing=${brute.keySet -- got.keySet} extra=${got.keySet -- brute.keySet}")
   }
 
-  test("editDistancePairs candidateSlices: identical pairs, cap composes, rarest-k refuses") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val plain = pairs(Dedup.editDistancePairs(docs, maxDist = 5, prefixLen = 40))
-    assert(plain.nonEmpty)
-    // sliced ≡ unsliced — every bucket lands in exactly one slice, and the
-    // final dropDuplicates collapses pairs that matched across slices
-    assert(pairs(Dedup.editDistancePairs(docs, maxDist = 5, prefixLen = 40,
-      candidateSlices = 4)) == plain)
-    // the audited cap composes: per-slice bucket counts see the same rows
-    val capped = pairs(Dedup.editDistancePairs(docs, maxDist = 5,
-      prefixLen = 40, maxSegmentBucket = 500))
-    assert(pairs(Dedup.editDistancePairs(docs, maxDist = 5, prefixLen = 40,
-      maxSegmentBucket = 500, candidateSlices = 3)) == capped)
-    // rarest-segment selection ranks across ALL buckets — a bucket-hash
-    // slice cannot see that, so the combination refuses loudly
-    assertThrows[IllegalArgumentException] {
-      Dedup.editDistancePairs(docs, maxDist = 5, prefixLen = 40,
-        nSegments = 8, indexSegments = 6, candidateSlices = 2)
-    }
-  }
-
   test("editDistanceHotSegments surfaces aligned boilerplate buckets") {
     import spark.implicits._
     // 5 docs share the identical 12-char prefix (template boilerplate)
@@ -759,6 +654,32 @@ class DedupSpec extends AnyFunSuite {
     capped.foreach { case (k, v) => assert(exact(k) == v) }
     // the genuine near-dup (1,2) must survive: its tail segments are unique
     assert(capped.contains((1L, 2L)), capped.toString)
+    // aligned boilerplate (a templated 24-char prefix) on 42 docs: the
+    // uncapped operator still finds exactly the brute-force pairs
+    val boiler = "common header text here "
+    val templated = (1L to 40L).map(i => (i, f"$boiler$i%03d-unique-suffix")) ++ Seq(
+      (100L, s"${boiler}payload alpha"),
+      (101L, s"${boiler}payload alphb")) // 1 edit apart
+    def pairsAt(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val tFrame = templated.toDF("doc_id", "text")
+    val tExact = pairsAt(Dedup.editDistancePairs(tFrame, maxDist = 2))
+    val tBrute = (for {
+      (ia, ta) <- templated; (ib, tb) <- templated if ia < ib
+      dd = levenshteinRef(ta, tb) if dd <= 2
+    } yield (ia, ib) -> dd.toLong).toMap
+    assert(tExact == tBrute,
+      s"missing=${tBrute.keySet -- tExact.keySet} extra=${tExact.keySet -- tBrute.keySet}")
+    assert(tExact.contains((100L, 101L)))
+    // e18's declared shape (sf0.001 documents, maxDist 5, prefixLen 40, cap
+    // 500): the cap is inactive there, so capped ≡ uncapped — the claim
+    // graft.Verify's e18 pre-flight checks at verify scale
+    val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val plain = pairsAt(Dedup.editDistancePairs(real, maxDist = 5, prefixLen = 40))
+    assert(plain.nonEmpty)
+    assert(pairsAt(Dedup.editDistancePairs(real, maxDist = 5, prefixLen = 40,
+      maxSegmentBucket = 500)) == plain)
   }
 
   test("editDistancePairs ≡ brute force on 80 randomized strings (seeded)") {
@@ -796,76 +717,6 @@ class DedupSpec extends AnyFunSuite {
     assert(got == brute,
       s"missing=${(brute.keySet -- got.keySet).take(5)} extra=${(got.keySet -- brute.keySet).take(5)}")
     assert(brute.nonEmpty, "seeded corpus produced no near pairs — test is vacuous")
-  }
-
-  test("rarest-segment selection ≡ brute force on the randomized corpus (exact recall)") {
-    import spark.implicits._
-    // the generalized pigeonhole: m = 8 segments, index the k = d+1 = 4
-    // rarest per doc — same pairs and distances as the classic layout and
-    // the brute-force reference, on the adversarial random corpus
-    val rnd = new scala.util.Random(1234)
-    def randStr(n: Int) = (1 to n).map(_ => ('a' + rnd.nextInt(3)).toChar).mkString
-    def mutate(s: String, edits: Int): String = {
-      var cur = s
-      (1 to edits).foreach { _ =>
-        val op = rnd.nextInt(3)
-        val p = if (cur.isEmpty) 0 else rnd.nextInt(cur.length)
-        cur = op match {
-          case 0 if cur.nonEmpty => cur.updated(p, ('a' + rnd.nextInt(3)).toChar)
-          case 1 => cur.take(p) + ('a' + rnd.nextInt(3)).toChar + cur.drop(p)
-          case _ if cur.nonEmpty => cur.take(p) + cur.drop(p + 1)
-          case _ => cur
-        }
-      }
-      cur
-    }
-    val bases = (0 until 60).map(i => (i.toLong, randStr(5 + rnd.nextInt(20))))
-    val mutants = (0 until 20).map { j =>
-      val (_, base) = bases(rnd.nextInt(bases.size))
-      (100L + j, mutate(base, 1 + rnd.nextInt(4)))
-    }
-    val all = bases ++ mutants
-    val got = Dedup.editDistancePairs(all.toDF("doc_id", "text"), maxDist = 3,
-        nSegments = 8, indexSegments = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val brute = (for {
-      (ia, ta) <- all; (ib, tb) <- all if ia < ib
-      dd = levenshteinRef(ta, tb) if dd <= 3
-    } yield (ia, ib) -> dd.toLong).toMap
-    assert(brute.nonEmpty)
-    assert(got == brute,
-      s"missing=${(brute.keySet -- got.keySet).take(5)} extra=${(got.keySet -- brute.keySet).take(5)}")
-    // parameter validation is loud
-    assertThrows[IllegalArgumentException] {
-      Dedup.editDistancePairs(all.toDF("doc_id", "text"), maxDist = 3,
-        nSegments = 3) // < d + 1
-    }
-    assertThrows[IllegalArgumentException] {
-      Dedup.editDistancePairs(all.toDF("doc_id", "text"), maxDist = 3,
-        nSegments = 8, indexSegments = 3) // < d + 1
-    }
-  }
-
-  test("rarest-segment selection drains aligned-boilerplate hot buckets, same pairs") {
-    import spark.implicits._
-    // the e18 sf10 failure shape: every doc opens with the SAME templated
-    // prefix, so position-fixed segments land in one giant bucket. With
-    // m = 8 / k = 4 each doc indexes its distinctive tail segments instead;
-    // pairs are unchanged (pigeonhole), and the hot prefix buckets hold
-    // far fewer index entries.
-    val boiler = "common header text here " // 24 chars — covers leading segments
-    val corpus = ((1L to 40L).map(i => (i, f"$boiler${i}%03d-unique-suffix")) ++ Seq(
-      (100L, s"${boiler}payload alpha"),
-      (101L, s"${boiler}payload alphb"))) // 1 edit apart
-      .toDF("doc_id", "text")
-    val classic = Dedup.editDistancePairs(corpus, maxDist = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val rare = Dedup.editDistancePairs(corpus, maxDist = 2,
-        nSegments = 8, indexSegments = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(classic.contains((100L, 101L)))
-    assert(rare == classic,
-      s"missing=${classic.keySet -- rare.keySet} extra=${rare.keySet -- classic.keySet}")
   }
 
   test("nearDedupRowsFrom composes with any pair family (edit-distance source)") {

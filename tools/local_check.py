@@ -2,8 +2,9 @@
 """Local approximation of the driver's correctness gate: run each oracle SQL
 in DuckDB over the same sf parquet tables, compare against graft.Verify's
 parquet dumps (column names sorted, values compared exactly / with float
-tolerance reporting so we can see HOW far off a mismatch is)."""
-import json, sys, glob, os
+tolerance reporting so we can see HOW far off a mismatch is). Each oracle
+query is timed; the ten slowest are listed after the per-query lines."""
+import json, sys, glob, os, time
 import duckdb
 import pandas as pd
 
@@ -18,6 +19,7 @@ for t in ("region nation customer supplier part orders lineitem events "
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 fail = 0
+oracle_s = {}
 for name in sorted(os.listdir(out_dir)):
     d = f"{out_dir}/{name}"
     if not os.path.isdir(d):
@@ -27,7 +29,9 @@ for name in sorted(os.listdir(out_dir)):
     if name not in oracle:
         print(f"[rows-only] {name}: rows={len(got) if got is not None else 0}")
         continue
+    t0 = time.perf_counter()
     want = con.execute(oracle[name]).df()
+    oracle_s[name] = time.perf_counter() - t0
     got = got[sorted(got.columns)].reset_index(drop=True)
     want = want[sorted(want.columns)].reset_index(drop=True)
     status = []
@@ -58,5 +62,9 @@ for name in sorted(os.listdir(out_dir)):
         print(f"[FAIL] {name}: " + "; ".join(status))
     else:
         print(f"[ok]   {name}: {len(got)} rows")
+print(f"slowest oracle queries (of {len(oracle_s)}, "
+      f"{sum(oracle_s.values()):.1f} s in all):")
+for name, secs in sorted(oracle_s.items(), key=lambda kv: -kv[1])[:10]:
+    print(f"  {secs:8.2f} s  {name}")
 print("FAILURES:", fail)
 sys.exit(1 if fail else 0)
