@@ -125,14 +125,10 @@ object Dedup {
   /** Md5 twin of [[minhashBandedIds]] — the engine-portable banding used by
     * [[minhashNearDupMd5]]: md5-derived signatures, PLAIN-TEXT band keys
     * (the joined signature values, no second hash an engine could disagree
-    * on).
+    * on), over the `(id, sh)` shingle sets the verification reads too.
     */
   private def minhashBandedIdsMd5(
-      docs: DataFrame, textCol: String, idCol: String,
-      shingleSize: Int, bands: Int, rowsPerBand: Int): DataFrame = {
-    val sh = docs
-      .select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
-      .where(size(col("sh")) > 0)
+      sh: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
     // native one-pass digest fold — bit-identical to the HOF
     // minhashSignatureMd5 (DedupSpec pin), ~k interpreted array traversals
     // with hex-string decoding collapsed into whole-stage codegen
@@ -154,11 +150,9 @@ object Dedup {
     * shingle array into the bucket aggregation — the bucket stage touches
     * ONLY (id, band-key): a degenerate bucket of a million identical docs
     * costs 8 MB of ids in the aggregation buffer, not gigabytes of arrays.
-    * Shingles are computed a second time, but only for docs that appear in
-    * some candidate pair (semi-join pushdown) — at real near-dup rates that
-    * is a small fraction of the corpus, and recompute is an embarrassingly
-    * parallel codegen'd scan, the standard Spark trade of CPU for memory
-    * safety.
+    * Shingles are computed a second time, into the keyed shingle pin the
+    * verification joins read in place — an embarrassingly parallel
+    * codegen'd scan, the standard Spark trade of CPU for memory safety.
     *
     * No bucket is capped, so no candidate pair is ever dropped. A degenerate
     * bucket of B members still yields B²/2 candidate pairs downstream — if
@@ -183,12 +177,8 @@ object Dedup {
       .select(col("id_a"), explode(col("ids")).as("id_b"))
       .where(col("id_a") < col("id_b"))
       .distinct() // the same pair can surface from several bands
-    // Verification: shingles recomputed for candidate docs only (the
-    // semi-join inside verifyExactJaccard pushes down to the doc scan),
-    // joined back by id.
-    val sh = docs.select(col(idCol).as("id"),
-      shingles(col(textCol), shingleSize).as("sh"))
-    verifyExactJaccard(pairs, sh, minJaccard, cappedCands = false)
+    verifyExactJaccard(pairs,
+      keyedShingleSets(docs, textCol, idCol, shingleSize), minJaccard)
   }
 
   /** 64-bit SimHash (Charikar 2002) over the token stream — entirely
@@ -313,8 +303,8 @@ object Dedup {
     * the fast path — md5 costs a digest per (permutation, shingle) vs one
     * codegen'd xxhash64 — with the same bucket posture: the aggregation
     * touches (id, band-key) only, never shingle arrays, no bucket is
-    * capped, and verification re-derives shingles just for candidate-pair
-    * members. This is the declared e84 form, where the DuckDB oracle
+    * capped; the signatures and the verification read one keyed shingle
+    * pin. This is the declared e84 form, where the DuckDB oracle
     * brute-forces all pairs.
     */
   def minhashNearDupMd5(
@@ -325,10 +315,10 @@ object Dedup {
       bands: Int = 4,
       rowsPerBand: Int = 4,
       minJaccard: Double = 0.7): DataFrame = {
-    val sh = docs
-      .select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
-      .where(size(col("sh")) > 0)
-    val ids = minhashBandedIdsMd5(docs, textCol, idCol, shingleSize, bands, rowsPerBand)
+    val sh = keyedShingleSets(docs, textCol, idCol, shingleSize)
+    // an empty set's all-MaxValue signature would band every such doc
+    // together
+    val ids = minhashBandedIdsMd5(sh.where(col("n_sh") > 0), bands, rowsPerBand)
       .groupBy(col("bk"))
       .agg(array_sort(collect_list(col("id"))).as("ids"))
       .where(size(col("ids")) > 1)
@@ -337,7 +327,7 @@ object Dedup {
       .select(col("id_a"), explode(col("ids")).as("id_b"))
       .where(col("id_a") < col("id_b"))
       .distinct()
-    verifyExactJaccard(pairs, sh, minJaccard, cappedCands = false)
+    verifyExactJaccard(pairs, sh, minJaccard)
   }
 
   /** Generated DuckDB mirror of [[minhashNearDupMd5]] over `idCol, textCol`
@@ -679,54 +669,62 @@ object Dedup {
   /** Hamming distance between two packed 64-bit SimHashes. */
   def hammingDist(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** Exact-Jaccard verification for candidate id pairs: full shingle sets
-    * are fetched ONLY for docs that appear in some pair (semi-join pushdown
-    * into the `sh` frame's scan) and joined back by id, then
-    * |A∩B| / (|A|+|B|−|A∩B|) filters at `minJaccard`. Shared by every
-    * candidate-generation strategy (prefix filter, witness prefix) —
-    * whatever pruned the candidates, the scores this emits are those of
-    * the naive all-pairs operator. `dropDuplicates` guards 2×-loaded
-    * inputs (same id twice) against double-counted intersections.
+  /** The `(id, sh, n_sh)` shingle sets of the documents. Lazy: for the
+    * single-consumer paths and the audits. An empty set explodes to no
+    * index entry, so it never reaches a candidate pair in either family;
+    * it is not filtered here, because the optimizer would push that filter
+    * below the projection and shingle every document twice.
     */
-  /** Exact-Jaccard re-score for candidate id pairs. With
-    * `cappedCands = true` (an AUDITED upstream cap bounds candidate volume)
-    * the candidate-ID semi-join is force-BROADCAST: the ids are bare longs
-    * (~8 B each — tens of MB even at millions of candidate docs), where the
-    * default sort-merge semi-join shuffles the CORPUS side's shingle-array
-    * table — measured as the round-14 first-to-break: ~65 GB of scratch at
-    * 50M docs, task death on a 76 GB disk, for a semi-join whose output was
-    * 1/10th of its shuffled input. With `cappedCands = false` (no upstream
-    * cap — the exact modes) the hint is NOT forced: an explicit broadcast
-    * bypasses autoBroadcastJoinThreshold, and a degenerate uncapped corpus
-    * could turn a slow-but-completing shuffle semi-join into a driver OOM
-    * or the 8 GB broadcast hard limit (ADVICE r14); AQE still promotes the
-    * plain semi-join to broadcast at runtime whenever the id set measures
-    * small. The two array-attaching joins are shuffle-hash either way, for
-    * the verifyContainment reason (sort-merge would external-sort pair
-    * streams with ~KB arrays attached).
+  private def shingleSets(docs: DataFrame, textCol: String, idCol: String,
+      shingleSize: Int): DataFrame =
+    docs
+      .select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
+      .select(col("id"), col("sh"), size(col("sh")).as("n_sh"))
+
+  /** [[shingleSets]] as a keyed pin by id — the one shingle pass of every
+    * verifying path. The documents are hash-partitioned by id BEFORE
+    * shingling: that one shuffle spreads the shingle stage over
+    * `spark.sql.shuffle.partitions` tasks whatever the scan's split (a
+    * single-row-group file scans as one task), deduplicates a 2×-loaded
+    * input (the same id and text twice) with a partition-local
+    * aggregation, and is the layout the pin declares, so the pin adds no
+    * second shuffle. Every later join on the document id — the
+    * verification joins, the prefix modes' per-document windows — reads
+    * the pinned rows in place.
+    */
+  private def keyedShingleSets(docs: DataFrame, textCol: String,
+      idCol: String, shingleSize: Int): DataFrame = {
+    val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val byId = docs.select(col(idCol), col(textCol))
+      .repartition(n, col(idCol)).distinct()
+    graft.ops.Layout.pin(shingleSets(byId, textCol, idCol, shingleSize), "id")
+  }
+
+  /** Candidate pairs with both members' shingle sets attached, from the
+    * keyed shingle pin `sh` ([[keyedShingleSets]]): each join hashes the
+    * pair side (shuffled once to the pin's layout) and streams the pinned
+    * sets in place, so the corpus-side arrays are never shuffled — the
+    * first join's output, pair plus one array, is what moves to meet the
+    * second. Shuffle-HASH on purpose: a sort-merge join would
+    * external-sort the pair stream with ~1 KB arrays attached (the
+    * round-14 sf10 probe: ~15 GB of spill at 17M candidates).
+    */
+  private def withShingleSets(pairs: DataFrame, sh: DataFrame): DataFrame =
+    pairs.hint("shuffle_hash")
+      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
+      .hint("shuffle_hash")
+      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+
+  /** Exact-Jaccard re-score of candidate id pairs against the keyed
+    * shingle pin `sh`: |A∩B| / (|A|+|B|−|A∩B|) on the FULL sets, filtered
+    * at `minJaccard`. Shared by every candidate generator (MinHash banding,
+    * prefix filter, witness prefix) — whatever pruned the candidates, the
+    * scores this emits are those of the naive all-pairs operator.
     */
   private def verifyExactJaccard(
-      pairs0: DataFrame, sh: DataFrame, minJaccard: Double,
-      cappedCands: Boolean): DataFrame = {
-    // pin (round 16): the candidate subtree is embedded THREE times below
-    // (both candIds legs + the scoring join) — unpinned, the whole
-    // candidate join re-ran per leg (StageProf: e94's witness join stages
-    // ×3–4 on a cold run). One eager materialization of the id pairs.
-    val pairs = graft.ops.Layout.pin(pairs0)
-    val candIds0 = pairs.select(col("id_a").as("id"))
-      .union(pairs.select(col("id_b").as("id")))
-      .distinct()
-    val candIds = if (cappedCands) broadcast(candIds0) else candIds0
-    // pin: BOTH attach joins embed candSh — unpinned, the corpus
-    // scan+shingle pass behind it ran twice (round 16, StageProf)
-    val candSh = graft.ops.Layout.pin(sh.join(candIds, Seq("id"), "left_semi")
-      .select(col("id"), col("sh")).dropDuplicates("id"))
+      pairs: DataFrame, sh: DataFrame, minJaccard: Double): DataFrame = {
     val common = size(array_intersect(col("sh_a"), col("sh_b")))
-    pairs
-      .join(candSh.select(col("id").as("id_a"), col("sh").as("sh_a"))
-        .hint("shuffle_hash"), Seq("id_a"))
-      .join(candSh.select(col("id").as("id_b"), col("sh").as("sh_b"))
-        .hint("shuffle_hash"), Seq("id_b"))
+    withShingleSets(pairs, sh)
       .select(col("id_a"), col("id_b"),
         (common.cast("double") /
           (size(col("sh_a")) + size(col("sh_b")) - common)).as("jaccard"))
@@ -743,42 +741,16 @@ object Dedup {
       .agg(collect_list(struct(col("id"), col("n_sh"))).as("members"))
       .where(size(col("members")) > 1)
 
-  /** Exact containment verification for candidate id pairs — the
-    * directional twin of [[verifyExactJaccard]]: full shingle sets are
-    * fetched only for docs appearing in some pair, and both containment
-    * directions are computed 4dp-rounded on the FULL sets, so whatever
-    * pruned the candidates, the emitted rows are those of the naive
-    * all-pairs operator.
+  /** Exact containment re-score of candidate id pairs — the directional
+    * twin of [[verifyExactJaccard]], on the same keyed shingle pin: both
+    * containment directions computed 4dp-rounded on the FULL sets, so
+    * whatever pruned the candidates, the emitted rows are those of the
+    * naive all-pairs operator.
     */
   private def verifyContainment(
-      pairs0: DataFrame, sh: DataFrame, minContainment: Double,
-      cappedCands: Boolean): DataFrame = {
-    // pin — see verifyExactJaccard: three embeds of the candidate subtree
-    val pairs = graft.ops.Layout.pin(pairs0)
-    val candIds0 = pairs.select(col("id_a").as("id"))
-      .union(pairs.select(col("id_b").as("id")))
-      .distinct()
-    // broadcast semi-join when an audited cap bounds candidates — the
-    // corpus-side array table must never shuffle for a candidate-doc
-    // selection (the verifyExactJaccard lesson: ~65 GB of semi-join shuffle
-    // at 50M docs; candidate ids are bare longs). Uncapped exact modes keep
-    // the plain semi-join (AQE promotes it when small) — a forced broadcast
-    // of an unbounded id set is a driver-OOM risk (ADVICE r14).
-    val candIds = if (cappedCands) broadcast(candIds0) else candIds0
-    // pin — see verifyExactJaccard: both attach joins embed candSh
-    val candSh = graft.ops.Layout.pin(sh.join(candIds, Seq("id"), "left_semi")
-      .select(col("id"), col("sh")).dropDuplicates("id"))
+      pairs: DataFrame, sh: DataFrame, minContainment: Double): DataFrame = {
     val common = size(array_intersect(col("sh_a"), col("sh_b")))
-    // shuffle-HASH both joins: sort-merge would sort the pair stream WITH
-    // the ~1 KB shingle array attached by the first join — the round-14
-    // sf10 probe measured that as ~15 GB of external-sort spill at 17M
-    // candidates, where hashing the doc-sized build side (the arrays are
-    // build-side either way) spills nothing
-    pairs
-      .join(candSh.select(col("id").as("id_a"), col("sh").as("sh_a"))
-        .hint("shuffle_hash"), Seq("id_a"))
-      .join(candSh.select(col("id").as("id_b"), col("sh").as("sh_b"))
-        .hint("shuffle_hash"), Seq("id_b"))
+    withShingleSets(pairs, sh)
       .select(col("id_a"), col("id_b"),
         round(common.cast("double") / size(col("sh_a")).cast("double"), 4)
           .as("c_a_in_b"),
@@ -901,30 +873,35 @@ object Dedup {
     * attachment was A/B'd at 500k docs and REJECTED: it re-scans and
     * re-shingles the corpus for the df table, and the second source pass
     * costs more than the avoided sort (49.2 s window vs 50.8 s join,
-    * identical 26,916 candidates — OPTIMIZATION_r15.md).
+    * identical 26,916 candidates — OPTIMIZATION_r15.md); that second pass
+    * is gone now that `sh` is pinned, so the trade is worth re-measuring.
+    *
+    * Layout: `sh` is the keyed shingle pin ([[keyedShingleSets]]), and the
+    * capped entries are pinned keyed by `g`, so the probe⋈index join runs
+    * co-partitioned — no exchange and no broadcast on either side, the
+    * probe (prefix) side hashed per partition.
     */
   private def prefixWitnessCands(sh: DataFrame, tNum: Long,
       prefixDfCap: Int, lengthBound: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val e = PrefixWitnessExt
-    // pin (round 16): the probe AND index legs both embed this subtree,
-    // so an unpinned plan runs the df+rank window pipeline TWICE —
-    // StageProf measured the rank-window stage duplicated (2× 1.2 s of
-    // e94's cold pair generation). One eager materialization whose
-    // blocks are released with the frames built on it.
+    // keyed pin by the shingle hash: the probe AND index legs both read
+    // it (unpinned, the df+rank window pipeline ran twice), and the join
+    // of the two on g then needs no exchange on either side. The probe
+    // side (the prefixes, a fraction of the entries) is the hash build.
     val kept = graft.ops.Layout.pin(pfHashedInv(sh)
       .withColumn("gdf", count(lit(1)).over(Window.partitionBy(col("g"))))
       .where(col("gdf") <= prefixDfCap)
       .withColumn("pos", row_number().over(
         Window.partitionBy(col("id")).orderBy(col("gdf"), col("g"))) - 1)
-      .select(col("id"), col("n_sh"), col("pos"), col("g"), col("gdf")))
+      .select(col("id"), col("n_sh"), col("pos"), col("g")), "g")
     val probe = kept
       .where(col("pos") <= col("n_sh") - pfAlpha(col("n_sh"), tNum) + e)
       .select(col("id").as("id_p"), col("n_sh").as("n_p"),
         col("pos").as("pos_p"), col("g"))
     val index = kept.select(col("id").as("id_i"), col("n_sh").as("n_i"),
       col("pos").as("pos_i"), col("g"))
-    val joined = probe.join(index, Seq("g"))
+    val joined = probe.hint("shuffle_hash").join(index, Seq("g"))
       // the probe doc must be the pair's designated smaller side (ties
       // by id): its prefix is where the pigeonhole guarantees witnesses
       .where(col("n_p") < col("n_i") ||
@@ -964,17 +941,6 @@ object Dedup {
         max(col("gdf")).as("max_df"))
       .where(col("n_overcap") > 0)
       .orderBy(col("n_overcap").desc, col("id"))
-
-  /** The (id, |set|, set) shingle-set projection shared by
-    * [[ngramContainmentPairs]] and its [[ngramContainmentAtRisk]] audit —
-    * empty-set docs dropped (containment against an empty set is 0/0).
-    */
-  private def containmentShingleSets(docs: DataFrame, textCol: String,
-      idCol: String, shingleSize: Int): DataFrame =
-    docs
-      .select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
-      .select(col("id"), col("sh"), size(col("sh")).as("n_sh"))
-      .where(col("n_sh") > 0)
 
   /** Exact n-gram Jaccard near-dup pairs at or above `minJaccard`, via
     * posting-list buckets: explode shingles → ONE shuffle grouping the
@@ -1034,19 +1000,18 @@ object Dedup {
     require(prefixDfCap <= 0 || !prefixFilter,
       "prefixDfCap is a complete candidate-generation mode of its own — " +
         "do not combine it with prefixFilter")
-    val sh = docs
-      .select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
-      .select(col("id"), col("sh"), size(col("sh")).as("n_sh"))
     if (prefixDfCap > 0) {
       // round-15 (verdict item 6): the e106 witness-counted rarest-prefix
       // generator transferred to the symmetric family — audited recall
       // contract via [[ngramJaccardAtRisk]], candidates additionally
       // pruned by the Jaccard length bound (see [[prefixWitnessCands]]).
+      val sh = keyedShingleSets(docs, textCol, idCol, shingleSize)
       val cand = prefixWitnessCands(sh, pfThresholdNum(minJaccard),
         prefixDfCap, lengthBound = true)
-      return verifyExactJaccard(cand, sh, minJaccard, cappedCands = true)
+      return verifyExactJaccard(cand, sh, minJaccard)
     }
     if (prefixFilter) {
+      val sh = keyedShingleSets(docs, textCol, idCol, shingleSize)
       val tNum = pfThresholdNum(minJaccard)
       val entries = pfOrderedEntries(sh)
       // prefix: pos ≤ n − ⌈t·n⌉ (0-based; prefix length n − α + 1)
@@ -1068,9 +1033,10 @@ object Dedup {
             pfAlpha(greatest(col("a.n_sh"), col("b.n_sh")), tNum))
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
         .distinct()
-      return verifyExactJaccard(cand, sh, minJaccard, cappedCands = false)
+      return verifyExactJaccard(cand, sh, minJaccard)
     }
-    val inv = sh.select(col("id"), col("n_sh"), explode(col("sh")).as("g"))
+    val inv = shingleSets(docs, textCol, idCol, shingleSize)
+      .select(col("id"), col("n_sh"), explode(col("sh")).as("g"))
     // every co-occurrence is counted, so the count IS |A∩B|
     postingBuckets(inv)
       .select(explode(col("members")).as("a"), col("members"))
@@ -1166,7 +1132,6 @@ object Dedup {
     require(prefixDfCap <= 0 || !prefixFilter,
       "prefixDfCap is a complete candidate-generation mode of its own — " +
         "do not combine it with prefixFilter")
-    val sh = containmentShingleSets(docs, textCol, idCol, shingleSize)
     if (prefixDfCap > 0) {
       // the cap filters the hashed-key entry stream directly (one cheap
       // projection — df is already attached per entry); candidate
@@ -1188,11 +1153,13 @@ object Dedup {
       // pairs collapse to 604k at e=2 against 602k true pairs (99.8%
       // precision), turning the exact verify join from the operator's
       // dominant cost into noise. Shared generator: [[prefixWitnessCands]].
+      val sh = keyedShingleSets(docs, textCol, idCol, shingleSize)
       val cand = prefixWitnessCands(sh, pfThresholdNum(minContainment),
         prefixDfCap, lengthBound = false)
-      return verifyContainment(cand, sh, minContainment, cappedCands = true)
+      return verifyContainment(cand, sh, minContainment)
     }
     if (prefixFilter) {
+      val sh = keyedShingleSets(docs, textCol, idCol, shingleSize)
       val tNum = pfThresholdNum(minContainment)
       val entries = pfOrderedEntries(sh)
       val probe = entries
@@ -1211,9 +1178,10 @@ object Dedup {
         .select(least(col("id_p"), col("id_i")).as("id_a"),
           greatest(col("id_p"), col("id_i")).as("id_b"))
         .distinct()
-      return verifyContainment(cand, sh, minContainment, cappedCands = false)
+      return verifyContainment(cand, sh, minContainment)
     }
-    val inv = sh.select(col("id"), col("n_sh"), explode(col("sh")).as("g"))
+    val inv = shingleSets(docs, textCol, idCol, shingleSize)
+      .select(col("id"), col("n_sh"), explode(col("sh")).as("g"))
     val common = col("common").cast("double")
     postingBuckets(inv)
       .select(explode(col("members")).as("a"), col("members"))
@@ -1255,7 +1223,7 @@ object Dedup {
       s"minContainment in (0, 1]: $minContainment")
     require(prefixDfCap > 0, s"need a positive cap: $prefixDfCap")
     prefixWitnessAtRisk(
-      containmentShingleSets(docs, textCol, idCol, shingleSize),
+      shingleSets(docs, textCol, idCol, shingleSize),
       pfThresholdNum(minContainment), prefixDfCap)
   }
 
@@ -1274,10 +1242,8 @@ object Dedup {
     require(minJaccard > 0 && minJaccard <= 1.0,
       s"minJaccard in (0, 1]: $minJaccard")
     require(prefixDfCap > 0, s"need a positive cap: $prefixDfCap")
-    val sh = docs
-      .select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
-      .select(col("id"), col("sh"), size(col("sh")).as("n_sh"))
-    prefixWitnessAtRisk(sh, pfThresholdNum(minJaccard), prefixDfCap)
+    prefixWitnessAtRisk(shingleSets(docs, textCol, idCol, shingleSize),
+      pfThresholdNum(minJaccard), prefixDfCap)
   }
 
   /** Edit-distance (Levenshtein) near-dup pairs at or below `maxDist` —

@@ -33,8 +33,10 @@ object ExtQueries {
     * kept for the regex/shingle/digest and exact-DECIMAL-moment queries
     * (e87 2.9→1.1 s, e103 3.5→2.3 s, e35/e63/e75/e100 −0.3..−0.7 s) and
     * the doubled/excerpt unions (e11/e14/e94/e99/e106 — repaired after
-    * the union); REVERTED on ~30 light queries where it measured as pure
-    * tax (e31 +1.0 s, e47 +0.9 s, e92 +0.9 s, e56/e60/e61/e66 +0.3–0.6 s).
+    * the union, until the witness path's own hash partitioning by doc id
+    * replaced the repair; e107's keep-best leg keeps it); REVERTED on ~30
+    * light queries where it measured as pure tax (e31 +1.0 s, e47 +0.9 s,
+    * e92 +0.9 s, e56/e60/e61/e66 +0.3–0.6 s).
     */
   private def tp(s: SparkSession, dir: String, name: String): DataFrame =
     graft.ops.Layout.repairScanParallelism(t(s, dir, name))
@@ -251,10 +253,9 @@ object ExtQueries {
     "e11_ngram_jaccard",
     (s, dir) => {
       val d = t(s, dir, "documents")
-      // repair AFTER doubling: the 2-branch union of single-row-group scans
-      // caps the shingle stage at 2 tasks (see [[tp]])
-      val doubled = graft.ops.Layout.repairScanParallelism(
-        d.unionAll(d.withColumn("doc_id", col("doc_id") + 100000L)))
+      // no scan repair: the witness path hash-partitions the documents by
+      // id before it shingles them (one shuffle, full-width shingle stage)
+      val doubled = d.unionAll(d.withColumn("doc_id", col("doc_id") + 100000L))
       // witness-counted rarest-prefix candidates at EVERY scale (round-15
       // A/B at 5M docs: 133.0 s vs 222.6 s for the round-13 winner, a
       // plain df cap of 1000; IDENTICAL 256k pairs, ngramJaccardAtRisk
@@ -360,9 +361,8 @@ object ExtQueries {
     "e14_dup_clusters",
     (s, dir) => {
       val d = t(s, dir, "documents")
-      // repair AFTER doubling — see e11's note
-      val doubled = graft.ops.Layout.repairScanParallelism(
-        d.unionAll(d.withColumn("doc_id", col("doc_id") + 100000L)))
+      // no scan repair — see e11's note
+      val doubled = d.unionAll(d.withColumn("doc_id", col("doc_id") + 100000L))
       // same witness-counted path as e11 — cap inactive at verify scale,
       // see e11's note
       val pairs = Dedup.ngramJaccardPairs(doubled, minJaccard = 0.8,
@@ -1964,9 +1964,13 @@ object ExtQueries {
   // E-graph triangle counting over the e11 near-dup pair graph — the
   // cluster-cohesion diagnostic beside e14's transitive groups: doubled
   // near-identical docs form cliques (high triangle support) while a
-  // chain-merge bridge sits on zero triangles. Degree-oriented equi-join
-  // enumeration (each triangle found exactly once); DuckDB replays the
-  // e11 pair CTEs + the same orientation/join (SQL GENERATED —
+  // chain-merge bridge sits on zero triangles. The whole path runs on
+  // keyed pins: one shingle pass pinned by doc id, the witness join
+  // co-partitioned by shingle hash, the candidate pairs verified in place
+  // against the shingle pin, and triangles counted by intersecting
+  // degree-oriented adjacency arrays (each triangle found exactly once).
+  // DuckDB replays the e11 pair CTEs and counts with an independent
+  // three-way join under the same orientation (SQL GENERATED —
   // Triangles.triangleCountsSql — so the orientation rule can't drift).
   private val e94Prelude =
     """doubled AS (
@@ -1992,9 +1996,8 @@ object ExtQueries {
     "e94_triangles",
     (s, dir) => {
       val d = t(s, dir, "documents")
-      // repair AFTER doubling — see e11's note
-      val doubled = graft.ops.Layout.repairScanParallelism(
-        d.unionAll(d.withColumn("doc_id", col("doc_id") + 100000L)))
+      // no scan repair — see e11's note
+      val doubled = d.unionAll(d.withColumn("doc_id", col("doc_id") + 100000L))
       // same witness-counted path as e11 (measured winner at 5M docs)
       val pairs = Dedup.ngramJaccardPairs(doubled, minJaccard = 0.8,
         prefixDfCap = 1000)
@@ -2052,9 +2055,8 @@ object ExtQueries {
     "e99_adamic_adar",
     (s, dir) => {
       val d = t(s, dir, "documents")
-      // repair AFTER doubling — see e11's note
-      val doubled = graft.ops.Layout.repairScanParallelism(
-        d.unionAll(d.withColumn("doc_id", col("doc_id") + 100000L)))
+      // no scan repair — see e11's note
+      val doubled = d.unionAll(d.withColumn("doc_id", col("doc_id") + 100000L))
       // same witness-counted path as e11 — cap inactive at verify scale,
       // see e11's note
       val pairs = Dedup.ngramJaccardPairs(doubled, minJaccard = 0.8,
@@ -2237,10 +2239,9 @@ object ExtQueries {
     val k = greatest(floor(size(toks) / 2), lit(3)).cast("int")
     val exc = d.select((col("doc_id") + 200000L).as("doc_id"),
       concat_ws(" ", slice(toks, lit(1), k)).as("text"))
-    // repair AFTER the union — the 2-branch single-row-group scan caps the
-    // shingle stage at 2 tasks (see [[tp]] / e11's note)
-    graft.ops.Layout.repairScanParallelism(
-      d.select(col("doc_id"), col("text")).unionAll(exc))
+    // no scan repair: the witness path hash-partitions by id before it
+    // shingles (e11's note); e107's keep-best leg repairs its own copy
+    d.select(col("doc_id"), col("text")).unionAll(exc)
   }
   private def containmentPairsFresh(s: SparkSession, dir: String): DataFrame = {
     // rarest-prefix candidates under an audited bucket cap at every scale
@@ -2305,7 +2306,9 @@ object ExtQueries {
   private val e107 = Q(
     "e107_keep_best",
     (s, dir) => {
-      val corpus = containmentCorpus(s, dir)
+      // repair AFTER the union — the 2-branch single-row-group scan caps
+      // the keep-best stages at 2 tasks (see [[tp]])
+      val corpus = graft.ops.Layout.repairScanParallelism(containmentCorpus(s, dir))
         .withColumn("score", length(col("text")).cast("long"))
       // pair generation is computed fresh (round 16 — no cross-query memo;
       // see containmentCorpus's note), then clustering + argmax keepers

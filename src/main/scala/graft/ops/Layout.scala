@@ -66,7 +66,8 @@ object Layout {
     * query, the embedded lineage otherwise grows into millions of
     * characters of plan text rebuilt on every stage update. Under adaptive
     * execution the leaf reports an unknown output partitioning, so a join
-    * or aggregate on the source's own key exchanges the pinned rows again.
+    * or aggregate on the source's own key exchanges the pinned rows again;
+    * the keyed overload below keeps that partitioning.
     *
     * Ownership: the blocks belong to the returned frame. Spark's
     * ContextCleaner releases them once that frame (and every plan built on
@@ -75,6 +76,30 @@ object Layout {
     * executor fails instead of re-running the upstream.
     */
   def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
+
+  /** Keyed pin: [[pin]] of `df` hash-partitioned by `key +: keys` into
+    * `spark.sql.shuffle.partitions` partitions, whose leaf DECLARES that
+    * partitioning — so a join or aggregation on the keys plans no exchange
+    * over the pinned rows (each side of a self-join included), and a frame
+    * joined to it is shuffled once to meet it. This is the co-partitioned
+    * layout of vertex-centric engines (Pregelix): state pinned by vertex id,
+    * each message round a local join. When `df` already ends in a hash
+    * exchange on the same keys and partition count (an aggregation on
+    * them), the planner drops the repartition and the pin adds no shuffle.
+    *
+    * Refuses a key column `df` does not have, and a checkpoint that does
+    * not come back with the expected partition count (the declared layout
+    * would be false). Ownership and lineage as for the unkeyed [[pin]].
+    */
+  def pin(df: DataFrame, key: String, keys: String*): DataFrame = {
+    val all = key +: keys
+    val missing = all.filterNot(df.columns.contains)
+    require(missing.isEmpty, s"keyed pin: no column ${missing.mkString(", ")} " +
+      s"in ${df.columns.mkString(", ")}")
+    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    org.apache.spark.sql.graftshim.KeyedLeaf.hashPartitioned(
+      pin(df.repartition(n, all.map(col): _*)), all, n)
+  }
 
   /** Salted join for skewed keys: explode the small side into `salt`
     * replicas, scatter the big side's hot keys across them, join on

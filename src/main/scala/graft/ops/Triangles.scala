@@ -14,72 +14,91 @@ import org.apache.spark.sql.functions._
   * on none, so `n_triangles = 0` inside a multi-doc group flags exactly
   * the merges worth re-verifying.
   *
-  * Algorithm (compact-forward / degree orientation, the standard
-  * distributed formulation — cf. Suri & Vassilvitskii, WWW'11 "Counting
-  * triangles and the curse of the last reducer"): orient every edge from
-  * its lower endpoint to its higher endpoint under the total order
-  * (degree, id). The orientation is acyclic, and on 3 vertices an acyclic
-  * tournament has exactly one source/middle/sink — so joining oriented
-  * edges u→v, v→w and probing u→w enumerates each triangle EXACTLY once,
-  * and the join fan-out is Σ outdeg² where outdeg is bounded by O(√m)
-  * (a vertex of degree d only points at neighbors of degree ≥ d) — the
-  * hub explosion a naive neighbor join suffers cannot happen. All three
-  * steps are hash equi-joins over the edge list: no vertex neighbor sets
-  * are ever materialized, AQE handles residual skew.
+  * Algorithm (compact-forward over adjacency arrays — Suri &
+  * Vassilvitskii, WWW'11 "Counting triangles and the curse of the last
+  * reducer"): orient every edge from its lower endpoint to its higher
+  * endpoint under the total order (degree, id). The orientation is
+  * acyclic, and on 3 vertices an acyclic tournament has exactly one
+  * source/middle/sink — so intersecting `out(u) ∩ out(v)` for every
+  * oriented edge u→v finds each triangle EXACTLY once (at the edge from
+  * its source to its middle), and `|out(u)|` is bounded by O(√m) (a vertex
+  * of degree d only points at neighbours of degree ≥ d) — the hub explosion
+  * a naive neighbour join suffers cannot happen. Steps, each one shuffle:
+  *  1. one explode reads both orientations of every edge, and one
+  *     aggregation builds `N(x)` as a set (duplicate and reversed edges
+  *     collapse there, self-loops and null endpoints are dropped before);
+  *  2. one message round: every x sends `(deg x, x)` to each neighbour y,
+  *     and y keeps the senders above itself in the order — its degree is
+  *     the number of messages it receives, so no join is needed. The
+  *     result is the out-adjacency `(v, out)`, a keyed pin by v;
+  *  3. each oriented edge v→w carries `out(v)` to w (the only shuffle into
+  *     the co-partitioned out-adjacency) and intersects it with `out(w)`;
+  *  4. one aggregation sums the credits (|C| to v and w, 1 to each member
+  *     of C) together with a zero for every vertex.
   *
   * Output: `(id, n_triangles)` for EVERY vertex incident to an edge
   * (zero-triangle vertices kept — absence of support is the signal),
   * totally ordered by id. Self-loops and duplicate/reversed edges are
   * tolerated and collapsed.
   *
-  * Pin lifetime: the deduped edge list and its orientation are pinned
-  * (deg reads edges twice; the triangle join reads the orientation three
-  * times) — bounded by the edge count, released with the returned frame,
-  * the graft-wide convention (see Drift's scaladoc).
+  * Pin lifetime: only the out-adjacency is pinned (step 3 reads it on both
+  * sides of its join and step 4 reads its vertices); the edge arrays and
+  * the undirected adjacency have one consumer each and stay lazy. The pin
+  * is bounded by the edge count and released with the returned frame, the
+  * graft-wide convention (see Drift's scaladoc).
   */
 object Triangles {
 
   def triangleCounts(edges: DataFrame, aCol: String = "id_a",
       bCol: String = "id_b"): DataFrame = {
-    val und = edges
-      .select(least(col(aCol), col(bCol)).as("lo"),
-        greatest(col(aCol), col(bCol)).as("hi"))
-      .where(col("lo") =!= col("hi") && col("lo").isNotNull)
-      .distinct()
-      .transform(Layout.pin)
-    val deg = und.select(col("lo").as("id"))
-      .unionAll(und.select(col("hi").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("d"))
-    val dl = deg.select(col("id").as("lo"), col("d").as("d_lo"))
-    val dh = deg.select(col("id").as("hi"), col("d").as("d_hi"))
-    val fwd = col("d_lo") < col("d_hi") ||
-      (col("d_lo") === col("d_hi") && col("lo") < col("hi"))
-    val o = und.join(dl, "lo").join(dh, "hi")
-      .select(when(fwd, col("lo")).otherwise(col("hi")).as("u"),
-        when(fwd, col("hi")).otherwise(col("lo")).as("v"))
-      .transform(Layout.pin)
-    val e1 = o.select(col("u").as("t_u"), col("v").as("t_v"))
-    val e2 = o.select(col("u").as("t_v"), col("v").as("t_w"))
-    val e3 = o.select(col("u").as("t_u"), col("v").as("t_w"))
-    val tri = e1.join(e2, "t_v").join(e3, Seq("t_u", "t_w"))
-    val credit = tri
-      .select(explode(array(col("t_u"), col("t_v"), col("t_w"))).as("id"))
-      .groupBy(col("id")).agg(count(lit(1)).as("n"))
-    deg.select(col("id"))
-      .join(credit, Seq("id"), "left")
-      .select(col("id"), coalesce(col("n"), lit(0L)).as("n_triangles"))
+    // 1. N(x): both orientations from one read, collapsed into a set
+    val nbrs = edges
+      .select(inline(array(
+        struct(col(aCol).as("x"), col(bCol).as("y")),
+        struct(col(bCol).as("x"), col(aCol).as("y")))))
+      .where(col("x") =!= col("y"))
+      .groupBy(col("x")).agg(collect_set(col("y")).as("nbr"))
+    // 2. x tells each neighbour (deg x, x); v keeps the senders above it
+    val msgs = nbrs.select(explode(col("nbr")).as("v"),
+        struct(size(col("nbr")).as("d"), col("x").as("id")).as("m"))
+      .groupBy(col("v")).agg(collect_list(col("m")).as("ms"))
+    val d = size(col("ms"))
+    val out = Layout.pin(msgs.select(col("v"), array_sort(transform(
+      filter(col("ms"), m => m("d") > d || (m("d") === d && m("id") > col("v"))),
+      m => m("id"))).as("out")), "v")
+    // 3. out(v) travels along each oriented edge v→w to meet out(w)
+    val common = out.select(col("v"), explode(col("out")).as("w"),
+        col("out").as("out_v"))
+      .join(out.select(col("v").as("w"), col("out").as("out_w"))
+        .hint("shuffle_hash"), "w")
+      .select(col("v"), col("w"),
+        array_intersect(col("out_v"), col("out_w")).as("c"))
+    // 4. credits and a zero per vertex, one aggregation
+    val nc = size(col("c")).cast("long")
+    val credit = common.select(inline(concat(
+      array(struct(col("v").as("id"), nc.as("n")),
+        struct(col("w").as("id"), nc.as("n"))),
+      transform(col("c"), u => struct(u.as("id"), lit(1L).as("n"))))))
+    credit.unionAll(out.select(col("v").as("id"), lit(0L).as("n")))
+      .groupBy(col("id"))
+      .agg(coalesce(sum(col("n")), lit(0L)).as("n_triangles"))
       .orderBy(col("id"))
   }
 
-  /** DuckDB mirror of [[triangleCounts]] — generated; same orientation
-    * rule, same single-count join, same zero-fill. `edgesSql` is any
-    * query text producing `(id_a, id_b)` rows; it is spliced as a CTE, and
-    * `prelude` lets callers prepend further CTEs it depends on (the
-    * linearFitBySql convention).
+  /** DuckDB twin of [[triangleCounts]] — generated; an independent join
+    * formulation of the same result: the same (degree, id) orientation
+    * rule, but each triangle found by a three-way join of the oriented edge
+    * list, and the same zero-fill. `edgesSql` is any query text producing
+    * `(id_a, id_b)` rows; it is spliced as a MATERIALIZED CTE, so DuckDB
+    * evaluates it once instead of inlining it into every reader of `und`
+    * (callers pass all-pairs similarity joins: at sf0.01 e94's oracle ran
+    * 448.5 s inlined and 31.3 s materialized, same rows), and `prelude`
+    * lets callers prepend further CTEs it depends on (the linearFitBySql
+    * convention).
     */
   def triangleCountsSql(edgesSql: String, prelude: String = ""): String = {
     val pre = if (prelude.isEmpty) "" else s"$prelude "
-    s"""WITH ${pre}pairs_in AS (
+    s"""WITH ${pre}pairs_in AS MATERIALIZED (
        |$edgesSql
        |), und AS (
        |  SELECT DISTINCT least(id_a, id_b) AS lo, greatest(id_a, id_b) AS hi
@@ -178,7 +197,7 @@ object Triangles {
 
   /** DuckDB mirror of [[adamicAdar]] — generated; same orientation-free
     * wedge join, same fixed-point terms, same anti-join. `edgesSql` /
-    * `prelude` as in [[triangleCountsSql]].
+    * `prelude` as in [[triangleCountsSql]] (`pairs_in` MATERIALIZED).
     */
   def adamicAdarSql(edgesSql: String, prelude: String = "",
       maxDegree: Long = 1000L, includeExisting: Boolean = false): String = {
@@ -190,7 +209,7 @@ object Triangles {
           |WHERE NOT EXISTS (
           |  SELECT 1 FROM und WHERE und.lo = p.u AND und.hi = p.v
           |)""".stripMargin
-    s"""WITH ${pre}pairs_in AS (
+    s"""WITH ${pre}pairs_in AS MATERIALIZED (
        |$edgesSql
        |), und AS (
        |  SELECT DISTINCT least(id_a, id_b) AS lo, greatest(id_a, id_b) AS hi

@@ -393,6 +393,53 @@ class DedupSpec extends AnyFunSuite {
       prefixDfCap = 30)) == un)
   }
 
+  /** The sf0.001 documents plus an offset copy (exact duplicates exist),
+    * and the excerpt corpus of e106 (half-length excerpts are contained).
+    */
+  private def realCorpora: Seq[org.apache.spark.sql.DataFrame] = {
+    val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val toks = split(trim(col("text")), "\\s+")
+    val k = greatest(floor(size(toks) / 2), lit(3)).cast("int")
+    Seq(d.unionAll(d.select((col("doc_id") + 100000L).as("doc_id"), col("text"))),
+      d.unionAll(d.select((col("doc_id") + 200000L).as("doc_id"),
+        concat_ws(" ", slice(toks, lit(1), k)).as("text"))))
+  }
+
+  test("a 2×-loaded input (same id and text twice) gives the single load's pairs, both families") {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    realCorpora.foreach { once =>
+      val twice = once.unionAll(once)
+      val jaccard = (c: org.apache.spark.sql.DataFrame) =>
+        rows(Dedup.ngramJaccardPairs(c, minJaccard = 0.8, prefixDfCap = 1000))
+      val containment = (c: org.apache.spark.sql.DataFrame) =>
+        rows(Dedup.ngramContainmentPairs(c, minContainment = 0.9, prefixDfCap = 2000))
+      val prefix = (c: org.apache.spark.sql.DataFrame) =>
+        rows(Dedup.ngramJaccardPairs(c, minJaccard = 0.8, prefixFilter = true))
+      Seq(jaccard, containment, prefix).foreach { pairs =>
+        val want = pairs(once)
+        assert(want.nonEmpty)
+        assert(pairs(twice).sortBy(_.toString) == want.sortBy(_.toString))
+      }
+    }
+  }
+
+  test("witness path: no broadcast, and the keyed shingle pin is never shuffled") {
+    realCorpora.foreach { corpus =>
+      val o = graft.PlanProbe.observe(spark) {
+        Dedup.ngramJaccardPairs(corpus, minJaccard = 0.8, prefixDfCap = 1000).collect()
+        Dedup.ngramContainmentPairs(corpus, minContainment = 0.9, prefixDfCap = 2000)
+          .collect()
+      }
+      assert(o.plans.size >= 6, s"saw ${o.plans.size} executed plans")
+      o.plans.foreach { p =>
+        assert(graft.PlanProbe.broadcasts(p).isEmpty, s"broadcast in\n$p")
+        assert(graft.PlanProbe.shufflesOverLeaf(p, "sh").isEmpty,
+          s"exchange over the shingle pin in\n$p")
+      }
+    }
+  }
+
   test("dupGroups collapses transitive chains A~B~C into one component") {
     import spark.implicits._
     val ids = Seq(1L, 2L, 3L, 4L, 5L).toDF("doc_id")

@@ -287,6 +287,69 @@ class LayoutSpec extends AnyFunSuite {
     assert(four <= two + 64, s"4-pin plan renders $four chars vs $two for 2 pins")
   }
 
+  private def keyedSource: DataFrame =
+    spark.range(0, 6000, 1, 3)
+      .select((col("id") % 211).as("k"), col("id").as("v"))
+
+  test("keyed pin: aggregations and self-joins on the key plan no exchange (AQE on)") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    spark.catalog.clearCache()
+    val src = keyedSource
+    val pinned = Layout.pin(src, "k")
+    assert(pinned.collect().toSet == src.collect().toSet)
+    val agg = pinned.groupBy(col("k")).agg(count(lit(1)).as("n"), sum(col("v")).as("s"))
+    val self = pinned.hint("shuffle_hash")
+      .join(pinned.select(col("k"), col("v").as("v2")), "k")
+      .groupBy(col("k")).agg(count(lit(1)).as("n"))
+    Seq(agg, self).foreach { df =>
+      df.collect()
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"exchange over the keyed pin:\n$plan")
+    }
+    assert(agg.collect().toSet == src.groupBy(col("k"))
+      .agg(count(lit(1)).as("n"), sum(col("v")).as("s")).collect().toSet)
+    assert(self.collect().map(_.getLong(1)).toSet == Set(28L * 28L, 29L * 29L))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("keyed pin: a frame joined to it is shuffled to the pin's layout and meets its rows") {
+    // the declared layout must be the real one: an unpinned side hashed to
+    // meet the pin finds every matching row only if the pinned partition i
+    // holds exactly the keys that hash to i
+    val pinned = Layout.pin(keyedSource, "k")
+    val other = spark.range(0, 400, 1, 5)
+      .select((col("id") * 7 % 300).as("k"), col("id").as("w"))
+    val viaPin = pinned.hint("shuffle_hash").join(other, "k")
+    val direct = keyedSource.join(other, "k")
+    assert(viaPin.collect().toSet == direct.collect().toSet)
+    assert(graft.PlanProbe.shuffles(viaPin).size == 1,
+      s"expected one exchange (the unpinned side):\n${viaPin.queryExecution.executedPlan}")
+  }
+
+  test("keyed pin on several keys, and a pin over an aggregation on its key adds no shuffle") {
+    val two = Layout.pin(keyedSource.withColumn("j", col("v") % 3), "k", "j")
+    val byBoth = two.groupBy(col("k"), col("j")).agg(count(lit(1)).as("n"))
+    byBoth.collect()
+    assert(!byBoth.queryExecution.executedPlan.toString.contains("Exchange"))
+    val aggregated = keyedSource.groupBy(col("k")).agg(sum(col("v")).as("s"))
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // the pin's own repartition is dropped over the aggregation's exchange…
+    val reparted = aggregated.repartition(n, col("k"))
+    reparted.collect()
+    assert(graft.PlanProbe.shuffles(reparted).size == 1,
+      reparted.queryExecution.executedPlan.toString)
+    // …and that exchange keeps its n partitions, so the pin is accepted
+    val p = Layout.pin(aggregated, "k")
+    assert(p.rdd.getNumPartitions == n)
+    assert(p.collect().toSet == aggregated.collect().toSet)
+  }
+
+  test("keyed pin refuses a key column the frame does not have") {
+    val e = intercept[IllegalArgumentException](Layout.pin(keyedSource, "nope"))
+    assert(e.getMessage.contains("nope"))
+    intercept[IllegalArgumentException](Layout.pin(keyedSource, "k", "v", "nope"))
+  }
+
   test("custom SQL function registration (simhash64 via extensions)") {
     graft.GraftExtensions.register(spark)
     import spark.implicits._

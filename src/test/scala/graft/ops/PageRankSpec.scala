@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -11,7 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class PageRankSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  import scala.jdk.CollectionConverters._
 
   private def edgesDf(pairs: (Long, Long)*) = {
     import spark.implicits._
@@ -213,33 +211,10 @@ class PageRankSpec extends AnyFunSuite {
     case other => other.children.map(hashExchanges).sum
   }
 
-  /** Jobs started while `body` runs, seen by a listener. A one-task marker
-    * job opens and closes the window: the listener bus delivers events in
-    * order, so once the closing marker's start arrives every job before it
-    * has been counted.
-    */
+  /** Jobs started while `body` runs ([[graft.PlanProbe.observe]]). */
   private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = seen.add(j.jobId)
-    }
-    def marker(): Int = {
-      val f = sc.submitJob(sc.parallelize(Seq(0), 1), (_: Iterator[Int]) => (),
-        Seq(0), (_: Int, _: Unit) => (), ())
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-      f.jobIds.head
-    }
-    sc.addSparkListener(listener)
-    try {
-      val from = marker()
-      val result = body
-      val to = marker()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(to) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(to), "listener never saw the closing marker job")
-      (result, seen.asScala.count(id => id > from && id < to))
-    } finally sc.removeSparkListener(listener)
+    val o = graft.PlanProbe.observe(spark)(body)
+    (o.result, o.jobs)
   }
 
   test("one shuffle per superstep: exchange and job bounds for 5 iterations") {

@@ -80,6 +80,67 @@ class TrianglesSpec extends AnyFunSuite {
     assert(a == b)
   }
 
+  test("an empty edge frame gives an empty (id long, n_triangles long) frame") {
+    import spark.implicits._
+    val got = Triangles.triangleCounts(Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
+    assert(got.collect().isEmpty)
+    assert(got.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("id" -> "bigint", "n_triangles" -> "bigint"))
+  }
+
+  test("edges with a null endpoint are dropped, as the brute force drops them") {
+    import spark.implicits._
+    val edges = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)),
+      (Some(2L), Some(3L)), (Some(3L), Some(1L)), (Some(3L), None),
+      (None, Some(4L)), (None, None), (Some(4L), Some(1L)))
+    val got = Triangles.triangleCounts(edges.toDF("id_a", "id_b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val nonNull = edges.collect { case (Some(a), Some(b)) => (a, b) }
+    assert(got == brute(nonNull))
+    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 0L))
+  }
+
+  test("self-loops only give no vertices") {
+    assert(counts(Seq((1L, 1L), (2L, 2L), (2L, 2L))).isEmpty)
+  }
+
+  test("every edge duplicated and reversed counts as once") {
+    val edges = for {
+      i <- 0L until 25L; j <- (i + 1) until 25L
+      if (3 * i + j) % 4 == 0
+    } yield (i, j)
+    val messy = edges.flatMap { case (a, b) => Seq((a, b), (b, a), (a, b)) }
+    assert(counts(messy) == brute(edges))
+  }
+
+  test("equal-degree ties break by id: a cycle of triangles, every degree 4") {
+    // the square of a 9-cycle: 4-regular, so the orientation is decided by
+    // id alone on every edge
+    val edges = (0L until 9L).flatMap(i => Seq((i, (i + 1) % 9), (i, (i + 2) % 9)))
+    val got = counts(edges)
+    assert(got == brute(edges))
+    assert(got.values.toSet == Set(3L))
+  }
+
+  test("one hot key: a 200-leaf star with a K5 on its hub") {
+    val star = (1L to 200L).map(i => (0L, i))
+    val k5 = for (a <- 0L to 4L; b <- (a + 1) to 4L) yield (a, b)
+    val edges = star ++ k5
+    val got = counts(edges)
+    assert(got == brute(edges))
+    assert((0L to 4L).forall(got(_) == 6L) && got(200L) == 0L && got.size == 201)
+  }
+
+  test("output is totally ordered by id") {
+    import spark.implicits._
+    val edges = (for {
+      i <- 0L until 30L; j <- (i + 1) until 30L
+      if (i * j) % 5 == 1
+    } yield (j, i)).toDF("id_a", "id_b").repartition(5)
+    val ids = Triangles.triangleCounts(edges).collect().map(_.getLong(0)).toSeq
+    assert(ids.nonEmpty && ids == ids.sorted)
+  }
+
   private def aa(edges: Seq[(Long, Long)], maxDegree: Long = 1000L,
       includeExisting: Boolean = false): Map[(Long, Long), (Long, Double)] = {
     import spark.implicits._

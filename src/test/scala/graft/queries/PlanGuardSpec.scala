@@ -116,4 +116,38 @@ class PlanGuardSpec extends AnyFunSuite {
     val rendered = df.queryExecution.executedPlan.toString.length
     assert(rendered < 100000, s"e94_triangles executed plan renders $rendered chars")
   }
+
+  /** e94 from construction through `collect`: its jobs and executed plans. */
+  private def e94Observed() = graft.PlanProbe.observe(spark) {
+    graft.SparkEntry.queries("e94_triangles")(spark, dir).collect()
+  }
+
+  test("e94's job count from construction through collect stays under its bound") {
+    // keyed pins cut the near-dup → triangle path's job floor: at sf0.001
+    // it ran 34 jobs before them and 18 with them
+    val jobs = e94Observed().jobs
+    assert(jobs <= 26, s"e94_triangles ran $jobs jobs")
+  }
+
+  test("e94 plans the same way on every run") {
+    // ids that legitimately differ between runs of one plan: expression and
+    // lambda-variable, plan, RDD and query-stage ids. Anything else (a join
+    // strategy or build side picked by which stage finished first) is a
+    // plan change.
+    def normalized(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
+      p.toString
+        .replaceAll("#\\d+", "#_")
+        .replaceAll("\\bx_\\d+", "x__")
+        .replaceAll("plan_id=\\d+", "plan_id=_")
+        .replaceAll("QueryStage \\d+", "QueryStage _")
+        .replaceAll("\\[\\d+\\]", "[_]")
+        .split("\n").toSeq
+    val runs = (1 to 3).map(_ => e94Observed().plans.map(normalized)).distinct
+    if (runs.size > 1) {
+      val (a, b) = (runs(0).flatten, runs(1).flatten)
+      val i = a.indices.find(i => i >= b.size || a(i) != b(i)).getOrElse(a.size)
+      fail(s"${runs.size} distinct e94 plans; the first two differ at line $i:\n" +
+        a.slice(i - 2, i + 6).mkString("\n") + "\n---\n" + b.slice(i - 2, i + 6).mkString("\n"))
+    }
+  }
 }
