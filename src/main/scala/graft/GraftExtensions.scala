@@ -75,18 +75,6 @@ object GraftExtensions {
         case _ => throw new IllegalArgumentException(
           s"shingle_set takes 1 or 2 arguments, got ${exprs.length}")
       }),
-    // span_hashes(text[, n]) — xxhash64 of every n-token span, the
-    // string-free candidate pass of substring-level dedup (n is tree
-    // structure → literal)
-    ("span_hashes",
-      new ExpressionInfo(classOf[graft.functions.SpanHashes].getName, "span_hashes"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(text) => graft.functions.SpanHashes(text, 10)
-        case Seq(text, n) =>
-          graft.functions.SpanHashes(text, litInt(n, "span_hashes", "n"))
-        case _ => throw new IllegalArgumentException(
-          s"span_hashes takes 1 or 2 arguments, got ${exprs.length}")
-      }),
     // cosine_sim(a, b) — fused-loop cosine over two array<double> vectors,
     // SQL-text parity with graft.ext.Similarity.cosine
     ("cosine_sim",

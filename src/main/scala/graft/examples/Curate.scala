@@ -1,6 +1,6 @@
 package graft.examples
 
-import graft.ext.{Decontaminate, Dedup, Drift, LangModel, Multimodal, Packing, Similarity, TextStats}
+import graft.ext.{Decontaminate, Dedup, Drift, LangModel, Packing, Similarity, TextStats}
 import graft.ops.Splits
 import org.apache.spark.sql.functions._
 
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *   raw docs → quality gate → PII scrub → exact dedup → near-dedup
   *   (MinHash clusters) → benchmark decontamination → language mixing →
   *   per-source caps → deterministic train/val/test split → context-window
-  *   chunks → (int8-quantized) embeddings + ANN sanity probe.
+  *   chunks → (int8-quantized) embeddings + top-5 sanity probe.
   *
   * Run: `sbt "runMain graft.examples.Curate /root/testdata/sf0.001"`.
   * Every stage is a pure DataFrame transform: the same code curates 500
@@ -166,8 +166,6 @@ object Curate {
       Map("en" -> 100, "de" -> 70, "fr" -> 70, "es" -> 50, "zh" -> 50))
     val capped = pin(Splits.capPerGroup(mixed.drop("bucket"), "lang", k = 120))
     println(s"[curate] mixed ${mixed.count()} -> capped ${capped.count()} docs")
-    // raw's last consumer is the media stage's limit(100) — a 100-row
-    // parquet scan, cheaper re-read than a 50k-doc cache entry held live
     drop(clean, raw)
     mark("mix+cap")
 
@@ -203,7 +201,7 @@ object Curate {
     drop(chunks)
     mark("packing")
 
-    // 6. embeddings: int8 quantization (4x storage) + ANN sanity probe
+    // 6. embeddings: int8 quantization (4x storage) + top-5 sanity probe
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val q8 = Similarity.quantizeInt8(emb)
     val deq = Similarity.dequantizeInt8(q8)
@@ -212,16 +210,6 @@ object Curate {
     println(s"[curate] embeddings: ${q8.count()} int8 vectors; " +
       s"top-5 after quantization ${if (exactTop == quantTop) "UNCHANGED" else s"$quantTop vs $exactTop"}")
     mark("embeddings")
-
-    // 7. multimodal sidecar: features for synthetic media rows (real JDK
-    // codecs for image/audio/video payloads when present)
-    // fresh 100-row read — `raw` was dropped at mix+cap and a dropped
-    // localCheckpoint cannot be recomputed
-    val media = Multimodal.syntheticMedia(spark,
-      spark.read.parquet(s"$sfDir/documents.parquet").limit(100))
-    val feats = Multimodal.extractFeatures(media, Multimodal.ImageIoCodec, dim = 16)
-    println(s"[curate] media features: ${feats.count()} rows")
-    mark("media")
 
     println(f"[curate] OK — total ${(System.nanoTime() - t0) / 1e9}%.2f s")
     spark.stop()

@@ -76,27 +76,7 @@ object Pipeline {
       println(f"[demo] repetition: avg dup3gram_frac=$avgDup%.3f; hash split: $splits")
     }
 
-    // 5d. multimodal: REAL image decode via the JDK's javax.imageio —
-    // render PNGs, batch-extract luminance-grid features, probe metadata
-    {
-      import spark.implicits._
-      val png = {
-        val img = new java.awt.image.BufferedImage(32, 32,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until 32; x <- 0 until 32) img.setRGB(x, y, (x * 8) << 16)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos); bos.toByteArray
-      }
-      val media = Seq(graft.ext.Multimodal.MediaRow(
-        1L, "image", png, "image/png", 32, 32, -1, -1)).toDS()
-      val feat = graft.ext.Multimodal.extractFeatures(media,
-        codec = graft.ext.Multimodal.ImageIoCodec, dim = 16).head()
-      val meta = graft.ext.Multimodal.imageMeta(png).get
-      println(f"[demo] multimodal: decoded ${meta._3} ${meta._1}x${meta._2}, " +
-        f"mean luminance=${feat.feature.sum / feat.feature.length}%.3f")
-    }
-
-    // 5e. decontamination + data mixing + ranked retrieval: the rest of a
+    // 5d. decontamination + data mixing + ranked retrieval: the rest of a
     // curation pass — strip docs overlapping the "benchmark" slice, reweight
     // languages deterministically, then probe the corpus with BM25
     {
@@ -121,62 +101,14 @@ object Pipeline {
         s"$chunks chunks of <=20 tokens; funnel $funnelCounts")
     }
 
-    // 5f. video decode on the bare JDK: an MJPEG AVI built in-memory,
-    // frames extracted by the RIFF walker + javax.imageio
-    {
-      val jpg = { (shade: Int) =>
-        val img = new java.awt.image.BufferedImage(16, 16,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g2 = img.createGraphics()
-        g2.setColor(new java.awt.Color(shade, shade, shade))
-        g2.fillRect(0, 0, 16, 16); g2.dispose()
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "jpg", bos); bos.toByteArray
-      }
-      def chunk(id: String, body: Array[Byte]): Array[Byte] = {
-        val b = java.nio.ByteBuffer.allocate(8 + body.length + (body.length & 1))
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        b.put(id.getBytes("US-ASCII")).putInt(body.length).put(body); b.array()
-      }
-      val avih = java.nio.ByteBuffer.allocate(56).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      avih.putInt(0, 40000); avih.putInt(16, 3); avih.putInt(32, 16); avih.putInt(36, 16)
-      val avi = chunk("RIFF", "AVI ".getBytes("US-ASCII") ++
-        chunk("LIST", "hdrl".getBytes("US-ASCII") ++ chunk("avih", avih.array())) ++
-        chunk("LIST", "movi".getBytes("US-ASCII") ++
-          Seq(40, 128, 220).flatMap(s => chunk("00dc", jpg(s))).toArray))
-      val meta = graft.ext.VideoCodecs.aviMeta(avi).get
-      val feat = graft.ext.VideoCodecs.AviVideoCodec.decodeToFeature(avi, 4)
-      println(f"[demo] video: ${meta.totalFrames} frames @${meta.width}x${meta.height}, " +
-        f"mean-luma feature=${feat.sum / feat.length}%.3f")
-    }
-
-    // 6. similarity search: exact vs IVF probe over real embeddings
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val exact = graft.ext.Similarity.bruteForceTopK(emb, 0L, 5)
-      .collect().map(_.getLong(0)).toSeq
-    val ivf = graft.ext.Similarity.ivfTopK(emb, 0L, 5, nClusters = 8, nProbes = 4)
-      .collect().map(_.getLong(0)).toSeq
-    println(s"[demo] ann: exact top-5=$exact ivf top-5=$ivf " +
-      s"recall=${ivf.toSet.intersect(exact.toSet).size}/5")
-
-    // 7. streaming: same window op as batch, through readStream
-    val streamDir = java.nio.file.Files.createTempDirectory("demo_stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      streamDir.resolve("events.parquet"))
-    val stream = graft.streaming.EventStream.readEventStream(spark, streamDir.toString)
-    val windows = graft.streaming.EventStream.runToMemory(
-      graft.streaming.EventStream.tumbling(stream, "1 hour", "2 hours"), "demo_windows")
-    println(s"[demo] streaming: ${windows.count()} closed hourly windows emitted")
-
-    // 8. JDBC sink/source round-trip (embedded Derby)
+    // 6. JDBC sink/source round-trip (embedded Derby)
     val derby = java.nio.file.Files.createTempDirectory("demo_derby")
     val url = s"jdbc:derby:$derby/db;create=true"
     graft.sources.Jdbc.writeReplace(top, url, "revenue_by_flag")
     val back = graft.sources.Jdbc.read(spark, url, "revenue_by_flag").count()
     println(s"[demo] jdbc: round-tripped $back rows through Derby")
 
-    // 8b. single-pass grouped top-k (heap aggregator, no window sort)
+    // 6b. single-pass grouped top-k (heap aggregator, no window sort)
     val oTab0 = spark.read.parquet(s"$sfDir/orders.parquet")
     val topOrders = graft.functions.TopK.groupedTopK(
       oTab0.select(org.apache.spark.sql.functions.col("o_custkey").as("g"),
@@ -185,12 +117,12 @@ object Pipeline {
       "g", "id", "score", 2)
     println(s"[demo] grouped top-2 orders per customer: ${topOrders.count()} rows")
 
-    // 8c. ORC round-trip (source-format breadth)
+    // 6c. ORC round-trip (source-format breadth)
     val orcDir = java.nio.file.Files.createTempDirectory("demo_orc").toString
     graft.sources.Formats.writeOrc(oTab0, s"$orcDir/o")
     println(s"[demo] orc round-trip rows=${graft.sources.Formats.readOrc(spark, s"$orcDir/o").count()}")
 
-    // 8d. as-of join: attach each user's latest prior event value to the
+    // 6d. as-of join: attach each user's latest prior event value to the
     // hourly window starts (events as both sides, shifted semantics)
     {
       import spark.implicits._
@@ -203,13 +135,13 @@ object Pipeline {
       println(s"[demo] asof join: trade@10:00:05 gets bid=${asof.head().getAs[Double]("bid")}")
     }
 
-    // 9. custom SQL function through the session (extensions registration)
+    // 7. custom SQL function through the session (extensions registration)
     graft.GraftExtensions.register(spark)
     docs.limit(3).createOrReplaceTempView("demo_docs")
     val hashes = spark.sql("SELECT doc_id, simhash64(text) AS h FROM demo_docs ORDER BY doc_id")
     println(s"[demo] sql simhash64: ${hashes.collect().map(r => s"${r.getLong(0)}:${r.getLong(1)}").mkString(" ")}")
 
-    // 10. bucketed layout: co-located join with no shuffle exchange
+    // 8. bucketed layout: co-located join with no shuffle exchange
     val oTab = spark.read.parquet(s"$sfDir/orders.parquet")
     val lTab = spark.read.parquet(s"$sfDir/lineitem.parquet")
     graft.ops.Layout.writeBucketed(oTab, "demo_bt_orders", "o_orderkey", 8)
@@ -222,7 +154,7 @@ object Pipeline {
     spark.sql("DROP TABLE IF EXISTS demo_bt_orders")
     spark.sql("DROP TABLE IF EXISTS demo_bt_lineitem")
 
-    // 10b. shuffle reduction + data skipping: bloom-pruned join and
+    // 8b. shuffle reduction + data skipping: bloom-pruned join and
     // z-ordered layout
     {
       import org.apache.spark.sql.functions.col
@@ -240,7 +172,7 @@ object Pipeline {
         s"z-ordered lineitem into $zFiles files clustered on (orderkey, partkey)")
     }
 
-    // 11. graph centrality: PageRank over the user↔event-property
+    // 9. graph centrality: PageRank over the user↔event-property
     // co-occurrence graph (fixed-point integer recurrence, ops.PageRank)
     locally {
       import org.apache.spark.sql.functions.{col, get_json_object, lit}
@@ -256,7 +188,7 @@ object Pipeline {
       println(s"[demo] pagerank over ${pr.count()} nodes; top-3: $topNodes")
     }
 
-    // 12. classical stats + CDC diagnostics: correlation/independence over
+    // 10. classical stats + CDC diagnostics: correlation/independence over
     // the fact tables (exact decimal moments, ops.Stats) and an SCD2
     // history with a point-in-time lookup (ops.Scd)
     locally {
@@ -275,7 +207,7 @@ object Pipeline {
         s"scd2 intervals=${hist.count()}")
     }
 
-    // 13. data-quality gate + fuzzy matching: the pre-trust checks a new
+    // 11. data-quality gate + fuzzy matching: the pre-trust checks a new
     // drop runs (ops.Quality) and entity-resolution pairs via the native
     // jaro_winkler expression (blocked, never all-pairs)
     locally {
@@ -294,7 +226,7 @@ object Pipeline {
         s"orphan_lineitems=${fk.getLong(1)}; fuzzy token pairs@0.75=$fuzzy")
     }
 
-    // 14. forensics + corpus intelligence: Benford/Gini over order amounts,
+    // 12. forensics + corpus intelligence: Benford/Gini over order amounts,
     // Zipf health and diversity of the text corpus, the α-sampling mixture
     // ledger, and a hybrid lexical+semantic retrieval probe (RRF)
     locally {
@@ -359,8 +291,8 @@ object Pipeline {
         s"mean n_chars=${ci.getDouble(2)} ci=[${ci.getDouble(3)},${ci.getDouble(4)}]")
     }
 
-    // round-12 curation layer: corpus balance -> quality-ordered caps ->
-    // readability gate -> keyword labels -> incremental-dedup lifecycle
+    // curation layer: corpus balance -> quality-ordered caps ->
+    // readability gate -> keyword labels -> batch-vs-corpus dedup lookup
     locally {
       import org.apache.spark.sql.functions.{col, concat, lit}
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -372,22 +304,16 @@ object Pipeline {
       val kw = graft.ext.Ranking.tfIdfTopTerms(docs, k = 1)
         .where(col("doc_id") === 0L).take(1)
         .map(r => r.getString(1)).mkString
-      // incremental-dedup lifecycle on a real store: build from the corpus,
-      // ingest a perturbed batch, re-ingest the survivors
-      val store = java.nio.file.Files.createTempDirectory("graft_demo_mh").toString
-      Dedup.buildMinHashStore(docs, store)
+      // a perturbed batch looked up against the corpus by MinHash signature
       val batch = docs.where(col("doc_id") % 25 === 0)
         .select((col("doc_id") + 700000).as("doc_id"),
           concat(col("text"), lit(" ingest suffix")).as("text"))
-      val dups = Dedup.minHashStoreLookup(spark, store, batch)
-      val dupBatchIds = dups.select("batch_id").distinct().count()
-      Dedup.appendMinHashStore(spark, store,
-        batch.join(dups.select(col("batch_id").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti"))
+      val dupBatchIds = Dedup.minhashLookupMd5(batch, docs)
+        .select("batch_id").distinct().count()
       println(f"[demo] curation: source-gini=${g.getDouble(2)}%.4f over ${g.getLong(0)}%d " +
         s"sources; cap10/source keeps $capped; flesch>50: $readable docs; " +
-        s"doc0 keyword '$kw'; incr-dedup flagged $dupBatchIds/${batch.count()} " +
-        s"batch docs, survivors appended to the signature store")
+        s"doc0 keyword '$kw'; minhash lookup flagged $dupBatchIds/${batch.count()} " +
+        s"batch docs")
     }
 
     Ddl.dropDatabaseCascade(spark, "demo_db")

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for large-scale training-data pipelines (mandated
@@ -386,23 +386,20 @@ object Dedup {
   }
 
   /** Batch-vs-corpus MinHash near-dup lookup — the INCREMENTAL dedup
-    * shape: real corpora ingest daily batches, and "dedup the new batch
-    * against 100 TB" must not recompute anything corpus-sized
-    * ([[minhashNearDupMd5]] is the one-shot all-pairs form; this is its
-    * serving form, the [[Similarity.upsertIvfIndex]] argument applied to
-    * lexical dedup). Similarity is judged on SIGNATURES alone — the
-    * estimated Jaccard (fraction of agreeing MinHash slots, the unbiased
-    * resemblance estimator, Broder 1997) — because at scale the corpus
-    * side stores ~100 bytes/doc of signature, never shingle sets; exact
-    * re-verification is the caller's follow-up on the tiny candidate list
-    * if needed.
+    * shape: a daily batch is deduped against the corpus without an
+    * all-pairs pass ([[minhashNearDupMd5]] is the one-shot all-pairs
+    * form). Similarity is judged on SIGNATURES alone — the estimated
+    * Jaccard (fraction of agreeing MinHash slots, the unbiased resemblance
+    * estimator, Broder 1997) — so the corpus side travels as ~100
+    * bytes/doc of signature, never as shingle sets; exact re-verification
+    * is the caller's follow-up on the tiny candidate list if needed.
     *
-    * Scale shape: the batch side computes signatures for the BATCH only;
-    * candidates come from a (band, key) equi-join of batch band keys
-    * against corpus band keys (both derived from signatures by a
-    * projection); agreement scoring joins the two signature tables on the
-    * candidate ids. Nothing corpus-sized shuffles except the band-key join
-    * itself, whose corpus side is signature-width rows.
+    * Scale shape: each side reduces to an (id, sig) frame; candidates come
+    * from a (band, key) equi-join of batch band keys against corpus band
+    * keys (both derived from signatures by a projection); agreement
+    * scoring joins the two signature tables on the candidate ids. Nothing
+    * corpus-sized shuffles except the band-key join itself, whose corpus
+    * side is signature-width rows.
     *
     * Output: (batch_id, corpus_id, est_jaccard ≥ minEstJaccard), 4dp.
     * Engine-portable: md5 signatures, plain-text band keys — mirrored by
@@ -418,53 +415,18 @@ object Dedup {
       rowsPerBand: Int = 4,
       minEstJaccard: Double = 0.5): DataFrame = {
     val k = bands * rowsPerBand
-    lookupSigs(minhashSigsMd5(batch, textCol, idCol, shingleSize, k),
-      minhashSigsMd5(corpus, textCol, idCol, shingleSize, k),
-      bands, rowsPerBand, minEstJaccard)
-  }
-
-  /** (id, sig) MinHash signature frame of a corpus — the material a
-    * signature store persists. Docs with zero shingles are excluded (they
-    * have no resemblance to estimate). `portable = true` uses the md5
-    * permutation hashes (any engine can replay them — the oracle
-    * contract); `false` uses xxhash64 (one codegen'd primitive vs a digest
-    * per (permutation, shingle) — the production fast path: build 3.2×
-    * and lookup 2× cheaper, measured at 5M docs (the `store` probe,
-    * BASELINE.md; shingling + shuffle + write share the cost, so the
-    * digest swap is not a 10× lever). Identical banding/estimator THEORY
-    * but different concrete signatures, so a store commits to one hash at
-    * build time (pinned in `meta`).
-    */
-  private[graft] def minhashSigsMd5(docs: DataFrame, textCol: String,
-      idCol: String, shingleSize: Int, k: Int,
-      portable: Boolean = true): DataFrame = {
-    // portable path: native one-pass md5 digest fold, bit-identical to the
-    // HOF minhashSignatureMd5 (DedupSpec pin)
-    val sigCol =
-      if (portable)
-        graft.functions.MinHashMd5.minhashSigMd5(col("sh"), k)
-      else array(minhashSignature(col("sh"), k): _*)
-    docs.select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
-      .where(size(col("sh")) > 0)
-      .select(col("id"), sigCol.as("sig"))
-  }
-
-  private def sigBandKeys(bands: Int, rowsPerBand: Int): Seq[Column] =
-    (0 until bands).map { b =>
+    val bs = minhashSigsMd5(batch, textCol, idCol, shingleSize, k)
+    val cs = minhashSigsMd5(corpus, textCol, idCol, shingleSize, k)
+    val bk = (0 until bands).map { b =>
       struct(lit(b).as("band"),
         concat_ws(",", (0 until rowsPerBand).map(r =>
           element_at(col("sig"), b * rowsPerBand + r + 1)): _*).as("key"))
     }
-
-  private def lookupSigs(bs: DataFrame, cs: DataFrame, bands: Int,
-      rowsPerBand: Int, minEstJaccard: Double): DataFrame = {
-    val bk = sigBandKeys(bands, rowsPerBand)
     def bandRows(s: DataFrame, idAs: String) =
       s.select(col("id").as(idAs), explode(array(bk: _*)).as("bk"))
     val cand = bandRows(bs, "batch_id")
       .join(bandRows(cs, "corpus_id"), Seq("bk"))
       .select(col("batch_id"), col("corpus_id")).distinct()
-    val k = bands * rowsPerBand
     cand
       .join(bs.select(col("id").as("batch_id"), col("sig").as("sig_b")), Seq("batch_id"))
       .join(cs.select(col("id").as("corpus_id"), col("sig").as("sig_c")), Seq("corpus_id"))
@@ -475,136 +437,18 @@ object Dedup {
       .select(col("batch_id"), col("corpus_id"), col("est_jaccard"))
   }
 
-  /** Persist a MinHash signature store: `$path/sigs` (id, sig) parquet +
-    * `$path/meta` pinning (shingleSize, bands, rowsPerBand) so every later
-    * [[appendMinHashStore]]/[[minHashStoreLookup]] provably uses the SAME
-    * parameters (mixed-parameter signatures are silently meaningless).
+  /** (id, sig) md5 MinHash signature frame of a corpus (any engine can
+    * replay the md5 permutation hashes — the oracle contract). Docs with
+    * zero shingles are excluded (they have no resemblance to estimate).
+    * The native one-pass md5 digest fold is bit-identical to the HOF
+    * [[minhashSignatureMd5]] (DedupSpec pin).
     */
-  def buildMinHashStore(docs: DataFrame, path: String,
-      textCol: String = "text", idCol: String = "doc_id",
-      shingleSize: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
-      portable: Boolean = true): Unit = {
-    val spark = docs.sparkSession
-    minhashSigsMd5(docs, textCol, idCol, shingleSize, bands * rowsPerBand,
-        portable)
-      .write.mode("overwrite").parquet(s"$path/sigs")
-    import spark.implicits._
-    Seq((shingleSize, bands, rowsPerBand, portable))
-      .toDF("shingle_size", "bands", "rows_per_band", "portable")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  private def readStoreMeta(spark: SparkSession, path: String): (Int, Int, Int, Boolean) = {
-    val r = spark.read.parquet(s"$path/meta").head()
-    // stores written before the hash-choice column default to portable
-    val portable = if (r.schema.fieldNames.contains("portable"))
-      r.getAs[Boolean]("portable") else true
-    (r.getAs[Int]("shingle_size"), r.getAs[Int]("bands"),
-      r.getAs[Int]("rows_per_band"), portable)
-  }
-
-  /** Append a new batch's signatures to a [[buildMinHashStore]] store —
-    * append-only part-files, existing files never rewritten (the
-    * [[Similarity.upsertIvfIndex]] contract). Call AFTER
-    * [[minHashStoreLookup]] has decided which batch docs survive dedup.
-    */
-  def appendMinHashStore(spark: SparkSession, path: String, newDocs: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id"): Unit = {
-    val (sh, b, r, portable) = readStoreMeta(spark, path)
-    minhashSigsMd5(newDocs, textCol, idCol, sh, b * r, portable)
-      .write.mode("append").parquet(s"$path/sigs")
-  }
-
-  /** Auto-compaction trigger for [[buildMinHashStore]] stores — the file
-    * dimension only: signature rows never duplicate across appends (one
-    * row per doc), so the lookup's JOIN work is append-proof, but many
-    * small daily appends fragment the sigs table into tiny part files
-    * whose open/planning cost eventually dominates a batch lookup. One
-    * filesystem listing; no job.
-    */
-  def minHashStoreNeedsCompaction(spark: SparkSession, path: String,
-      maxPartFiles: Int = 256): Boolean =
-    storeDataFiles(spark, s"$path/sigs") > maxPartFiles
-
-  /** The compaction [[minHashStoreNeedsCompaction]] asks for: rewrite the
-    * sigs table at the session's default parallelism (no row merge exists
-    * to perform — signatures are append-disjoint; this is purely file
-    * consolidation). Staged through a localCheckpoint before the overwrite,
-    * like [[compactSpanStore]].
-    */
-  def compactMinHashStore(spark: SparkSession, path: String): Unit = {
-    val sigs = spark.read.parquet(s"$path/sigs").localCheckpoint(true)
-    sigs.repartition(spark.sparkContext.defaultParallelism)
-      .write.mode("overwrite").parquet(s"$path/sigs")
-  }
-
-  /** Dedup a new batch against a [[buildMinHashStore]] store: batch
-    * signatures are computed fresh, the corpus side is READ (never
-    * recomputed) — the incremental lifecycle is
-    * build → (lookup → filter → append)*. Result ≡ [[minhashLookupMd5]]
-    * on the store's source corpus (spec-pinned).
-    */
-  def minHashStoreLookup(spark: SparkSession, path: String, batch: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id",
-      minEstJaccard: Double = 0.5): DataFrame = {
-    val (sh, b, r, portable) = readStoreMeta(spark, path)
-    lookupSigs(minhashSigsMd5(batch, textCol, idCol, sh, b * r, portable),
-      spark.read.parquet(s"$path/sigs"), b, r, minEstJaccard)
-  }
-
-  /** One ingest step of the continuous-dedup lifecycle, as a single call:
-    * dedup `batch` against a [[buildMinHashStore]] store AND against
-    * itself, return the survivors, and (by default) append the survivors'
-    * signatures so the NEXT batch dedups against them too. The serving
-    * gate [[graft.streaming.EventStream.dedupStreamWithStore]] runs this
-    * per micro-batch.
-    *
-    *  - '''Store matches''': batch docs with estimated Jaccard ≥
-    *    `minEstJaccard` against any stored signature are dropped.
-    *    Same-id matches are excluded — a batch replayed after its append
-    *    (the at-least-once restart case) must not flag its own docs as
-    *    duplicates of themselves, so the step is replay-idempotent:
-    *    re-running it after its own append returns the same survivors.
-    *  - '''Within-batch matches''': GREEDY lowest-id-wins — a doc is
-    *    dropped iff some LOWER-id doc in the same batch estimates ≥ the
-    *    threshold against it directly (the serving-gate convention; the
-    *    cluster-transitive form is [[nearDedupRows]] — a gate must not
-    *    drop a doc because of a chain through an already-dropped one
-    *    unless that link itself clears the threshold).
-    *  - Docs with zero shingles have no resemblance to estimate: they
-    *    always survive and are never appended (no signature exists).
-    *
-    * Scale shape: batch signatures are computed once and pinned
-    * (localCheckpoint); the store side is READ, never recomputed; the only
-    * corpus-sized traffic is the band-key equi-join of
-    * [[minHashStoreLookup]].
-    */
-  def minHashStoreIngest(spark: SparkSession, path: String, batch: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id",
-      minEstJaccard: Double = 0.5,
-      appendSurvivors: Boolean = true): DataFrame = {
-    val (sh, b, r, portable) = readStoreMeta(spark, path)
-    val bs = minhashSigsMd5(batch, textCol, idCol, sh, b * r, portable)
-      .localCheckpoint(true)
-    val storeFlagged = lookupSigs(bs, spark.read.parquet(s"$path/sigs"),
-        b, r, minEstJaccard)
-      .where(col("corpus_id") =!= col("batch_id")) // replay idempotence
-      .select(col("batch_id").as("__drop_id"))
-    val intraFlagged = lookupSigs(bs, bs, b, r, minEstJaccard)
-      .where(col("corpus_id") < col("batch_id")) // greedy lowest-id-wins
-      .select(col("batch_id").as("__drop_id"))
-    val survivors = batch.join(
-      storeFlagged.unionAll(intraFlagged).distinct().hint("broadcast"),
-      col(idCol) === col("__drop_id"), "left_anti")
-    if (appendSurvivors) {
-      // append from the pinned signature frame — nothing recomputed, and
-      // unshingleable docs are naturally absent
-      bs.join(survivors.select(col(idCol).as("id")).hint("broadcast"),
-          Seq("id"), "left_semi")
-        .write.mode("append").parquet(s"$path/sigs")
-    }
-    survivors
-  }
+  private def minhashSigsMd5(docs: DataFrame, textCol: String,
+      idCol: String, shingleSize: Int, k: Int): DataFrame =
+    docs.select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
+      .where(size(col("sh")) > 0)
+      .select(col("id"),
+        graft.functions.MinHashMd5.minhashSigMd5(col("sh"), k).as("sig"))
 
   /** Generated DuckDB mirror of [[minhashLookupMd5]]: `batchSql` is a
     * parenthesized subquery producing (idCol, textCol) for the batch side;
@@ -1618,34 +1462,8 @@ object Dedup {
     docs.join(keepers, Seq(idCol), "left_semi").dropDuplicates(idCol)
   }
 
-  /** Deterministic pseudo-random hyperplane coefficient matrix: plane p,
-    * dim i → hash-derived double in [-1, 1). Same formula the per-row HOF
-    * used (xxhash64 of "p:i", seed 42, pmod-folded to [-1, 1) — pinned
-    * bit-identical in DedupSpec), but evaluated ONCE here: the coefficients
-    * are a pure function of (p, i), so hashing them per ROW was O(dim ×
-    * nPlanes) wasted hash evals on every vector in the corpus.
-    */
   // ---- substring-level dedup: repeated spans ACROSS documents ----
 
-  /** Flag every word-level `n`-token span that occurs verbatim in at least
-    * `minDocs` distinct documents — substring-level dedup, the companion to
-    * doc-level near-dup (Lee et al. 2022, "Deduplicating Training Data Makes
-    * Language Models Better": memorized spans repeat across documents long
-    * before whole documents do; the within-doc signal is
-    * [[TextStats.repetitionStats]]).
-    *
-    * Output: one row per (doc, position) covered by a cross-document span —
-    * (idCol, pos, span, n_docs), `pos` the 0-based token offset.
-    *
-    * Scale shape: posexplode of per-doc sliding windows (no shuffle), one
-    * hash-aggregate shuffle to count distinct docs, one shuffle back to
-    * join survivors. `hashSpanKey=false` (the oracle-exact form) shuffles
-    * the span TEXT as the aggregate key; `hashSpanKey=true` is the 100 TB
-    * default-in-spirit — the aggregate and join key is `xxhash64(span)`
-    * (8 bytes vs ~n tokens), cutting the aggregate's shuffle bytes ~n×. A
-    * 2⁻⁶⁴ hash collision can only ever FLAG an extra span, never miss one
-    * (spec-pinned equal to the exact form on real corpora).
-    */
   /** Per-doc sliding span seeds — (idCol, pos, span), pos 0-based. The
     * seed frame every span-family consumer joins survivors back onto.
     */
@@ -1660,39 +1478,39 @@ object Dedup {
         i => array_join(slice(col("__toks"), i + 1, lit(n)), " "))).as(Seq("pos", "span")))
   }
 
-  /** Distinct-document counts per span key — (__span_key, n_docs), the
-    * POSTING TABLE of the span family (and what [[buildSpanStore]]
-    * persists). The key is renamed because joining an aggregate back onto
-    * its own input on the SAME attribute trips Spark's ambiguous-self-join
-    * detection. Hashed mode counts over the native SpanHashes expression —
-    * the aggregate branch never materializes a span string (8-byte longs
-    * explode instead of n-token text); only the survivor branch carries
-    * text. SpanHashes ≡ xxhash64(span) bit-for-bit (DedupSpec pin).
+  /** Distinct-document counts per span — (__span_key, n_docs), the
+    * POSTING TABLE of the span family. The key is renamed because joining
+    * an aggregate back onto its own input on the SAME attribute trips
+    * Spark's ambiguous-self-join detection.
     */
-  private def spanDocCounts(docs: DataFrame, n: Int, hashSpanKey: Boolean,
-      idCol: String, textCol: String): DataFrame = {
-    val countSide =
-      if (hashSpanKey)
-        docs.select(col(idCol),
-          explode(graft.functions.SpanHash.spanHashes(col(textCol), n))
-            .as("__span_key"))
-      else spanSeeds(docs, n, idCol, textCol)
-        .select(col(idCol), col("span").as("__span_key"))
-    countSide
+  private def spanDocCounts(docs: DataFrame, n: Int,
+      idCol: String, textCol: String): DataFrame =
+    spanSeeds(docs, n, idCol, textCol)
+      .select(col(idCol), col("span").as("__span_key"))
       .groupBy(col("__span_key"))
       .agg(countDistinct(col(idCol)).as("n_docs"))
-  }
 
+  /** Flag every word-level `n`-token span that occurs verbatim in at least
+    * `minDocs` distinct documents — substring-level dedup, the companion to
+    * doc-level near-dup (Lee et al. 2022, "Deduplicating Training Data Makes
+    * Language Models Better": memorized spans repeat across documents long
+    * before whole documents do; the within-doc signal is
+    * [[TextStats.repetitionStats]]).
+    *
+    * Output: one row per (doc, position) covered by a cross-document span —
+    * (idCol, pos, span, n_docs), `pos` the 0-based token offset.
+    *
+    * Scale shape: posexplode of per-doc sliding windows (no shuffle), one
+    * hash-aggregate shuffle on the span text to count distinct docs, one
+    * shuffle back to join survivors.
+    */
   def repeatedSpans(docs: DataFrame, n: Int = 10, minDocs: Int = 2,
-      idCol: String = "doc_id", textCol: String = "text",
-      hashSpanKey: Boolean = false): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(n >= 2 && minDocs >= 2, s"need n >= 2 and minDocs >= 2: n=$n minDocs=$minDocs")
     val spans = spanSeeds(docs, n, idCol, textCol)
-    val key: Column => Column =
-      if (hashSpanKey) c => xxhash64(c) else identity
-    val shared = spanDocCounts(docs, n, hashSpanKey, idCol, textCol)
+    val shared = spanDocCounts(docs, n, idCol, textCol)
       .where(col("n_docs") >= minDocs)
-    spans.join(shared, key(col("span")) === col("__span_key"))
+    spans.join(shared, col("span") === col("__span_key"))
       .select(col(idCol), col("pos"), col("span"), col("n_docs"))
   }
 
@@ -1710,9 +1528,8 @@ object Dedup {
     * `end_pos` is exclusive: the region covers tokens [start_pos, end_pos).
     */
   def repeatedSpanRanges(docs: DataFrame, n: Int = 10, minDocs: Int = 2,
-      idCol: String = "doc_id", textCol: String = "text",
-      hashSpanKey: Boolean = false): DataFrame = {
-    val hits = repeatedSpans(docs, n, minDocs, idCol, textCol, hashSpanKey)
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val hits = repeatedSpans(docs, n, minDocs, idCol, textCol)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol)).orderBy(col("pos"))
     hits
@@ -1746,8 +1563,8 @@ object Dedup {
     */
   def maskRepeatedSpans(docs: DataFrame, n: Int = 10, minDocs: Int = 2,
       idCol: String = "doc_id", textCol: String = "text",
-      hashSpanKey: Boolean = false, keepFirst: Boolean = false): DataFrame = {
-    val hits = repeatedSpans(docs, n, minDocs, idCol, textCol, hashSpanKey)
+      keepFirst: Boolean = false): DataFrame = {
+    val hits = repeatedSpans(docs, n, minDocs, idCol, textCol)
     val flagged =
       if (!keepFirst) hits
       else {
@@ -1773,182 +1590,44 @@ object Dedup {
       .drop("__mask_id", "__starts", "__toks")
   }
 
-  /** Persist a SPAN-POSTING STORE — the incremental lifecycle for the
-    * substring-dedup family (the [[buildMinHashStore]] argument applied to
-    * spans): real corpora ingest daily batches, and "which of the batch's
-    * spans already repeat across the corpus" must not recompute a
-    * corpus-sized posting table per run. `$path/posting` holds
-    * `(__span_key, n_docs)` rows APPEND-ONLY (existing part-files are never
-    * rewritten — the [[Similarity.upsertIvfIndex]] contract; a key may
-    * appear once per appended batch and readers merge by SUM, which is
-    * exact because batch doc-id sets are disjoint — the ingest contract
-    * every store here shares). `$path/meta` pins `(n, hash_span_key)` so
-    * mixed-parameter postings are impossible. Periodically fold the append
-    * rows with [[compactSpanStore]] (read-side merge cost is one extra
-    * aggregate until then).
-    *
-    * `hashSpanKey = true` (default — the at-scale posture) stores 8-byte
-    * xxhash64 keys; `false` stores span TEXT, the engine-portable form the
-    * oracle replays.
-    */
-  def buildSpanStore(docs: DataFrame, path: String, n: Int = 10,
-      idCol: String = "doc_id", textCol: String = "text",
-      hashSpanKey: Boolean = true): Unit = {
-    val spark = docs.sparkSession
-    require(n >= 2, s"need n >= 2: $n")
-    spanDocCounts(docs, n, hashSpanKey, idCol, textCol)
-      .write.mode("overwrite").parquet(s"$path/posting")
-    import spark.implicits._
-    Seq((n, hashSpanKey)).toDF("n", "hash_span_key")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    writeStoreStats(spark, path, s"$path/posting")
-  }
-
-  /** Record the store's row count at its last compacted state (build or
-    * compact) — the reference point [[spanStoreNeedsCompaction]] thresholds
-    * on. Footer metadata of the just-written files; no extra job.
-    */
-  private def writeStoreStats(spark: SparkSession, path: String,
-      dataDir: String): Unit = {
-    import spark.implicits._
-    Seq(graft.ops.Layout.parquetRowCount(spark, dataDir)).toDF("base_rows")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
-  }
-
-  private def readStoreBaseRows(spark: SparkSession, path: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/stats")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else Some(spark.read.parquet(s"$path/stats").head().getLong(0))
-  }
-
-  /** Parquet data-file count under a store directory — footer-free, one
-    * filesystem listing.
-    */
-  private def storeDataFiles(spark: SparkSession, dir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0
-    else {
-      val it = fs.listFiles(p, true)
-      var c = 0
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) c += 1 }
-      c
-    }
-  }
-
-  /** Auto-compaction trigger for [[buildSpanStore]] stores — the
-    * [[Similarity.ivfNeedsRefit]] treatment for the span family (round-13
-    * verdict item 6): a long-lived daily pipeline appends forever, every
-    * lookup pays a merge-on-read aggregate over ALL posting rows, and
-    * nothing said "now" until this. Fires when the posting row count has
-    * grown past `growthFactor` × the last compacted state (the aggregate's
-    * work has grown by that factor — [[compactSpanStore]] folds it back
-    * and resets the reference), or when raw part-file count exceeds
-    * `maxPartFiles` (scan-planning/open cost, reachable through many tiny
-    * appends even at low row growth). Footer/listing metadata only — no
-    * job. Stores built before the stats file existed fall back to the
-    * file-count rule alone.
-    */
-  def spanStoreNeedsCompaction(spark: SparkSession, path: String,
-      growthFactor: Double = 2.0, maxPartFiles: Int = 256): Boolean = {
-    require(growthFactor > 1.0, s"growthFactor must exceed 1: $growthFactor")
-    val files = storeDataFiles(spark, s"$path/posting")
-    files > maxPartFiles || readStoreBaseRows(spark, path).exists { base =>
-      base > 0L &&
-        graft.ops.Layout.parquetRowCount(spark, s"$path/posting") >=
-          (growthFactor * base).toLong
-    }
-  }
-
-  private def readSpanStoreMeta(spark: SparkSession, path: String): (Int, Boolean) = {
-    val r = spark.read.parquet(s"$path/meta").head()
-    (r.getAs[Int]("n"), r.getAs[Boolean]("hash_span_key"))
-  }
-
-  /** Append a new batch's span counts to a [[buildSpanStore]] store —
-    * append-only part-files, parameters read from the store's own meta.
-    * Call AFTER [[spanStoreLookup]] has flagged/masked the batch.
-    */
-  def appendSpanStore(spark: SparkSession, path: String, newDocs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val (n, hashed) = readSpanStoreMeta(spark, path)
-    spanDocCounts(newDocs, n, hashed, idCol, textCol)
-      .write.mode("append").parquet(s"$path/posting")
-  }
-
-  /** Fold a store's per-batch append rows into one row per span key —
-    * read-side merges pay one aggregate per lookup until this runs (the
-    * compaction cadence is the operator's only tuning knob). Rewrites the
-    * posting table in place via a staged overwrite.
-    */
-  def compactSpanStore(spark: SparkSession, path: String): Unit = {
-    val compacted = spark.read.parquet(s"$path/posting")
-      .groupBy(col("__span_key"))
-      .agg(sum(col("n_docs")).as("n_docs"))
-      .localCheckpoint(true) // materialize BEFORE overwriting the source
-    compacted.write.mode("overwrite").parquet(s"$path/posting")
-    writeStoreStats(spark, path, s"$path/posting") // reset the trigger base
-  }
-
-  /** Flag every batch span that repeats across the STORE'S corpus plus the
-    * batch itself: `(idCol, pos, span, n_docs)` with `n_docs` = corpus
-    * distinct docs + batch distinct docs — EXACTLY [[repeatedSpans]] over
-    * (corpus ∪ batch) restricted to batch rows (spec-pinned), at the cost
-    * of one batch-sized span pass + one join against the posting table;
-    * nothing corpus-sized is recomputed. The downstream mask/dedup tail
-    * ([[maskRepeatedSpans]]'s cover test, [[repeatedSpanRanges]]) composes
-    * on this output exactly as on [[repeatedSpans]]'s.
-    */
-  def spanStoreLookup(spark: SparkSession, path: String, batch: DataFrame,
-      minDocs: Int = 2, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val (n, hashed) = readSpanStoreMeta(spark, path)
-    // merge-on-read over the append-only postings (SUM per key is exact —
-    // disjoint batch doc-id sets)
-    val store = spark.read.parquet(s"$path/posting")
-      .groupBy(col("__span_key"))
-      .agg(sum(col("n_docs")).as("__corpus_docs"))
-    spanLookupAssemble(batch, store, n, minDocs, hashed, idCol, textCol)
-  }
-
-  /** Inline twin of [[spanStoreLookup]] for a corpus held as a DataFrame —
-    * the engine-portable form the oracle replays (the [[minhashLookupMd5]]
-    * / store pattern): the corpus side reduces to its posting table in one
-    * pass, the batch never joins corpus-sized text. Store-backed ≡ inline
-    * is spec-pinned in DedupSpec.
+  /** Flag every batch span that repeats across `corpus` plus the batch
+    * itself: `(idCol, pos, span, n_docs)` with `n_docs` = corpus distinct
+    * docs + batch distinct docs — EXACTLY [[repeatedSpans]] over
+    * (corpus ∪ batch) restricted to batch rows (spec-pinned; batch and
+    * corpus doc-id sets are disjoint). The corpus side reduces to its
+    * posting table in one pass, the batch never joins corpus-sized text;
+    * batch seeds + batch counts are LEFT-joined onto the posting table (a
+    * span new to the corpus still counts its batch occurrences), then
+    * thresholded on the combined distinct-doc count. The downstream
+    * mask/dedup tail ([[maskRepeatedSpans]]'s cover test,
+    * [[repeatedSpanRanges]]) composes on this output exactly as on
+    * [[repeatedSpans]]'s.
     */
   def spanLookup(batch: DataFrame, corpus: DataFrame, n: Int = 10,
-      minDocs: Int = 2, idCol: String = "doc_id", textCol: String = "text",
-      hashSpanKey: Boolean = false): DataFrame =
-    spanLookupAssemble(batch,
-      spanDocCounts(corpus, n, hashSpanKey, idCol, textCol)
-        .select(col("__span_key"), col("n_docs").as("__corpus_docs")),
-      n, minDocs, hashSpanKey, idCol, textCol)
-
-  /** Shared tail of [[spanStoreLookup]]/[[spanLookup]]: batch seeds +
-    * batch counts, LEFT-joined onto the corpus posting table (a span new
-    * to the corpus still counts its batch occurrences), thresholded on the
-    * combined distinct-doc count.
-    */
-  private def spanLookupAssemble(batch: DataFrame, corpusCounts: DataFrame,
-      n: Int, minDocs: Int, hashed: Boolean,
-      idCol: String, textCol: String): DataFrame = {
+      minDocs: Int = 2, idCol: String = "doc_id",
+      textCol: String = "text"): DataFrame = {
     require(minDocs >= 2, s"need minDocs >= 2: $minDocs")
-    val key: Column => Column =
-      if (hashed) c => xxhash64(c) else identity
+    val corpusCounts = spanDocCounts(corpus, n, idCol, textCol)
+      .select(col("__span_key"), col("n_docs").as("__corpus_docs"))
     val seeds = spanSeeds(batch, n, idCol, textCol)
-    val batchCounts = spanDocCounts(batch, n, hashed, idCol, textCol)
+    val batchCounts = spanDocCounts(batch, n, idCol, textCol)
       .select(col("__span_key"), col("n_docs").as("__batch_docs"))
     val shared = batchCounts
       .join(corpusCounts, Seq("__span_key"), "left")
       .select(col("__span_key"),
         (coalesce(col("__corpus_docs"), lit(0L)) + col("__batch_docs")).as("n_docs"))
       .where(col("n_docs") >= minDocs)
-    seeds.join(shared, key(col("span")) === col("__span_key"))
+    seeds.join(shared, col("span") === col("__span_key"))
       .select(col(idCol), col("pos"), col("span"), col("n_docs"))
   }
 
+  /** Deterministic pseudo-random hyperplane coefficient matrix: plane p,
+    * dim i → hash-derived double in [-1, 1). Same formula the per-row HOF
+    * used (xxhash64 of "p:i", seed 42, pmod-folded to [-1, 1) — pinned
+    * bit-identical in DedupSpec), but evaluated ONCE here: the coefficients
+    * are a pure function of (p, i), so hashing them per ROW was O(dim ×
+    * nPlanes) wasted hash evals on every vector in the corpus.
+    */
   private[ext] def hyperplanes(nPlanes: Int, dim: Int): Seq[Seq[Double]] =
     (0 until nPlanes).map { p =>
       (0 until dim).map { i =>
@@ -2148,7 +1827,7 @@ object Dedup {
     * Feed the result to [[embeddingNearDup]] / [[embeddingNearDupMd5]] —
     * both assemble per-band keys directly, so nPlanes may exceed 63.
     * Callers: pass the corpus row count (cheap metadata — parquet
-    * footers / store stats), NOT a default; the floor is the point.
+    * footers), NOT a default; the floor is the point.
     */
   def autoWideBanding(nRows: Long, minCosine: Double,
       targetRecall: Double = 0.9, minBits: Int = 6, maxBits: Int = 15,

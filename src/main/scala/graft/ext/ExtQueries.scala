@@ -821,9 +821,8 @@ object ExtQueries {
   // E5b batch sessionization under the hash oracle: gaps-and-islands with a
   // (ts, event_id) total order, session_end = last event + gap (the
   // session_window contract), per-session value sums fixed-point. The
-  // streaming twins (session_window / flatMapGroupsWithState) are pinned
-  // equivalent in EventStreamSpec; this puts the island arithmetic itself
-  // under DuckDB's independent replay.
+  // session_window form is pinned equivalent in EventStreamSpec; this puts
+  // the island arithmetic itself under DuckDB's independent replay.
   private val e32 = Q(
     "e32_sessions",
     (s, dir) =>
@@ -2501,10 +2500,8 @@ object ExtQueries {
   // re-id'd, with a 3-token suffix — a realistic near-copy) deduped
   // against the corpus on SIGNATURES alone (slot-agreement estimated
   // Jaccard, Broder's unbiased resemblance estimator) — the daily-ingest
-  // lifecycle where the corpus side is a ~100-byte/doc signature store,
-  // never recomputed. SQL GENERATED (Dedup.minhashLookupMd5Sql) from the
-  // same constants; the store-backed form is spec-pinned ≡ this inline
-  // form (DedupSpec).
+  // shape, where only signatures of the corpus side join the batch. SQL
+  // GENERATED (Dedup.minhashLookupMd5Sql) from the same constants.
   private val e115 = Q(
     "e115_incr_dedup",
     (s, dir) => {
@@ -2522,16 +2519,15 @@ object ExtQueries {
       + "\nORDER BY batch_id, corpus_id"))
 
   // E1n incremental SPAN lookup — the substring-dedup daily-ingest shape
-  // (e115's signature-store argument applied to spans, round-12 verdict
-  // item 6): which of a new batch's 10-token spans already repeat across
-  // the corpus ∪ batch, WITHOUT recomputing a corpus-sized posting table
-  // per run. The batch re-ids every 10th doc and appends a 10-token marker:
-  // its body spans collide with the corpus originals (n_docs = 2), the
+  // (e115's argument applied to spans): which of a new batch's 10-token
+  // spans already repeat across the corpus ∪ batch, joining the batch
+  // against the corpus posting table only. The batch re-ids every 10th
+  // doc and appends a 10-token marker: its body spans collide with the
+  // corpus originals (n_docs = 2), the
   // marker-only span collides across the whole batch, and the unique
-  // doc-tail/marker boundary spans fall below minDocs and drop. Declared
-  // through the inline twin (Dedup.spanLookup — engine-portable span-text
-  // keys); the store-backed form (build/append/compact/lookup) is
-  // spec-pinned ≡ inline in DedupSpec.
+  // doc-tail/marker boundary spans fall below minDocs and drop
+  // (Dedup.spanLookup — engine-portable span-text keys; spec-pinned ≡
+  // repeatedSpans over corpus ∪ batch in DedupSpec).
   private val e116 = Q(
     "e116_span_lookup",
     (s, dir) => {

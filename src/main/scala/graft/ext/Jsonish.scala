@@ -4,14 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Semi-structured / event-stream operators (mandated extensions E4/E5,
+/** Semi-structured / event operators (mandated extensions E4/E5,
   * SURVEY.md §2.e): JSON property extraction over `events.props`, and
-  * streaming-shaped time-window aggregation over `events.ts`.
-  *
-  * The window operators are written against the same `window()` /
-  * `session_window()` primitives Structured Streaming uses, so the batch
-  * pipeline upgrades to `readStream` + watermark without semantic change
-  * (SURVEY.md §7 risk 6).
+  * time-window aggregation over `events.ts` with Spark's `window()` /
+  * `session_window()` groupings.
   */
 object Jsonish {
 
@@ -27,9 +23,8 @@ object Jsonish {
   def jsonGet(c: Column, path: String): Column = get_json_object(c, path)
 
   /** Tumbling-window aggregation: (window, event_type) → count, sum(value).
-    * groupBy(window(ts, w)) is the exact shape a `readStream` +
-    * `withWatermark` pipeline uses; at scale this is one shuffle on
-    * (window, type) with map-side partial aggregation.
+    * At scale this is one shuffle on (window, type) with map-side partial
+    * aggregation.
     */
   def tumbling(events: DataFrame, width: String = "1 hour"): DataFrame =
     events

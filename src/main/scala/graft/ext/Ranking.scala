@@ -212,8 +212,7 @@ object Ranking {
     * at scale. [[bm25]] takes ≤ 64 literal terms compiled into the scan;
     * this joins an arbitrary (q_id, term) query set against the corpus's
     * posting lists, so thousands of queries score in ONE pass with no
-    * per-query job (the [[graft.ext.Similarity.ivfTopKBatch]] argument
-    * applied to lexical retrieval).
+    * per-query job.
     *
     * Scale shape: ONE corpus scan builds the (doc, term, tf) posting table
     * (hash aggregate, map-side partial), pinned operator-internally (the

@@ -1,21 +1,17 @@
 package graft.ext
 
 import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-import org.apache.spark.ml.linalg.{Vectors => MLVectors}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (mandated extension E2,
-  * SURVEY.md §2.e): brute-force cosine top-k as the exact baseline, plus a
-  * random-projection LSH path for scale.
+  * SURVEY.md §2.e): exact cosine top-k, SemDeDup pairs, int8 quantization
+  * and label-centroid quality measures. Every search here is exact.
   *
   * Scale posture: brute-force against ONE query vector is a broadcast of the
   * query + a single codegen'd scan with TakeOrderedAndProject (per-partition
-  * top-k heaps, no global sort) — this is exactly how you'd score 100 TB of
-  * embeddings against a probe on 1000 executors. For many-query / all-pairs
-  * workloads, use the LSH bucketing (equi-join on bucket, linear shuffle) or
+  * top-k heaps, no global sort). For all-pairs workloads use
   * [[Dedup.embeddingNearDup]]'s hyperplane banding.
   */
 object Similarity {
@@ -62,8 +58,7 @@ object Similarity {
   }
 
   /** All-pairs exact top-k neighbors per vector (small/medium corpora):
-    * crossJoin + per-id window rank. Quadratic — kept as the correctness
-    * oracle for the approximate paths; do not run at 100 TB.
+    * crossJoin + per-id window rank. Quadratic; do not run at 100 TB.
     */
   def allPairsTopK(emb: DataFrame, k: Int,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
@@ -77,7 +72,7 @@ object Similarity {
   }
 
   /** Append an ml-Vector column `outCol` = the L2-normalized `arrCol`
-    * (shared by the euclidean-space ANN paths — cosine ≡ euclidean on the
+    * (k-means input for [[semDedupPairs]] — cosine ≡ euclidean on the
     * unit sphere). No UDF: the norm is a codegen'd aggregate fold BOUND TO
     * ITS OWN PROJECTION first (a HOF lambda re-evaluates embedded subtrees
     * per element, so the norm must enter the divide lambda as an attribute),
@@ -97,557 +92,9 @@ object Similarity {
       .drop("__norm")
   }
 
-  /** IVF (inverted-file) approximate nearest neighbors: k-means partitions
-    * the corpus into `nClusters` cells; a query probes only the `nProbes`
-    * cells whose centroids are closest, then scores exact cosine inside
-    * them. The classic FAISS-style IVF-Flat layout expressed in Spark: the
-    * cell assignment is a a partition-pruning predicate (`prediction IN
-    * probes`), so at 100 TB a query touches nProbes/nClusters of the data —
-    * write the corpus partitioned by cell to make that pruning physical.
-    */
-  def ivfTopK(
-      emb: DataFrame,
-      queryId: Long,
-      k: Int,
-      nClusters: Int = 16,
-      nProbes: Int = 4,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
-    val spark = emb.sparkSession
-    val v = withUnitVec(
-      emb.select(col(idCol), col(vecCol).cast("array<double>").as("v")), "v", "features")
-    val model = new KMeans().setK(nClusters).setSeed(42L)
-      .setFeaturesCol("features").setPredictionCol("cell")
-      .fit(v)
-    val assigned = model.transform(v)
-    // ONE collect supplies both the probe-selection features and the raw
-    // query vector (two separate scans would run the assignment job twice)
-    val qRow = assigned.where(col(idCol) === queryId)
-      .select(col("features"), col("v")).head()
-    val qFeat = qRow.getAs[org.apache.spark.ml.linalg.Vector]("features")
-    val qVec = qRow.getSeq[Double](1)
-    val probes = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => i -> math.sqrt(MLVectors.sqdist(c, qFeat)) }
-      .sortBy(_._2).take(nProbes).map(_._1)
-    import spark.implicits._
-    val q = Seq(Tuple1(qVec)).toDF("q_v")
-    assigned
-      .where(col("cell").isin(probes.toIndexedSeq: _*) && col(idCol) =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col(idCol), round(cosine(col("v"), col("q_v")), 4).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** Build a PHYSICAL IVF-Flat index at `path`: fit k-means ONCE over the
-    * corpus, write the corpus partitioned by cell (`corpus/cell=N/…`, via
-    * [[graft.ops.Layout.writePartitioned]]) plus a tiny `centroids` table.
-    * This is the persisted counterpart of [[ivfTopK]] (which re-fits per
-    * call — fine for exploration, wrong for a served index): fitting and
-    * layout happen once at build time, and [[ivfTopKIndexed]] prunes to the
-    * probed cells at the SOURCE, so `nProbes / nClusters` becomes a physical
-    * I/O fraction — at 100 TB a 4-of-256-cell probe reads ~1.6% of the
-    * files, not a full scan with a logical filter.
-    */
-  def buildIvfIndex(
-      emb: DataFrame,
-      path: String,
-      nClusters: Int = 16,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): Unit = {
-    val spark = emb.sparkSession
-    val v = withUnitVec(
-      emb.select(col(idCol), col(vecCol).cast("array<double>").as("v")), "v", "features")
-    val model = new KMeans().setK(nClusters).setSeed(42L)
-      .setFeaturesCol("features").setPredictionCol("cell")
-      .fit(v)
-    val assigned = model.transform(v).select(col(idCol), col("v").as(vecCol), col("cell"))
-    graft.ops.Layout.writePartitioned(assigned, s"$path/corpus", "cell")
-    import spark.implicits._
-    model.clusterCenters.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toArray.toSeq) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-  }
-
-  /** Incremental maintenance for a [[buildIvfIndex]] index — real corpora
-    * APPEND; a one-shot index that must be refit per batch is not a served
-    * index. Each new vector is assigned to the nearest EXISTING centroid and
-    * appended to that cell's partition directory; files in untouched cells
-    * are never opened, and files in touched cells are never rewritten
-    * (append mode only adds part-files) — both asserted in SimilaritySpec
-    * via file-listing + modification-time comparison.
-    *
-    * Zero shuffle: the nClusters-row centroids table is collected once
-    * (driver-bounded, same as [[ivfTopKIndexed]]) and becomes a LITERAL
-    * centroid matrix — the assignment is a per-row fused argmin over
-    * codegen'd squared-distance folds (the [[Dedup.embeddingNearDup]]
-    * literal-hyperplane trick), then a straight partitioned append. No fit,
-    * no exchange, no driver loop over vectors.
-    *
-    * The trade: upserted vectors join the cell structure of the OLD fit, so
-    * centroids drift away from the true cell means as the corpus grows.
-    * Monitor with [[ivfOccupancy]] (per-cell row counts from parquet footers
-    * — no job) and trigger a refit via [[ivfNeedsRefit]] once the occupancy
-    * skew passes its threshold; recall-after-upserts vs recall-after-refit
-    * is pinned in SimilaritySpec.
-    */
-  def upsertIvfIndex(
-      spark: SparkSession,
-      path: String,
-      newVecs: DataFrame,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): Unit = {
-    val cents = spark.read.parquet(s"$path/centroids").collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1)).sortBy(_._1)
-    require(cents.nonEmpty, s"no centroids at $path/centroids — build the index first")
-    val v = newVecs.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-    // assignment happens on unit vectors (the space the centroids were fit
-    // in); the STORED vector stays raw, exactly as buildIvfIndex writes it
-    val norm = sqrt(aggregate(
-      transform(col("v"), x => x * x), lit(0.0), (acc, x) => acc + x))
-    val vu = v.withColumn("__n", norm)
-      .withColumn("u", when(col("__n") === 0.0, col("v"))
-        .otherwise(transform(col("v"), x => x / col("__n"))))
-    val scored = cents.map { case (cell, c) =>
-      val carr = array(c.map(lit).toIndexedSeq: _*)
-      val d = aggregate(zip_with(col("u"), carr, (a, b) => (a - b) * (a - b)),
-        lit(0.0), (acc, x) => acc + x)
-      struct(d.as("d"), lit(cell).as("cell"))
-    }
-    vu.withColumn("__best", array_min(array(scored.toIndexedSeq: _*)))
-      .select(col(idCol), col("v").as(vecCol),
-        col("__best").getField("cell").as("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/corpus")
-  }
-
-  /** Per-cell row counts of a [[buildIvfIndex]] corpus from parquet FOOTER
-    * metadata ([[graft.ops.Layout.parquetRowCount]]) — no Spark job, no
-    * scan: the occupancy-drift monitor for [[upsertIvfIndex]].
-    */
-  def ivfOccupancy(spark: SparkSession, path: String): Map[Int, Long] = {
-    val root = new org.apache.hadoop.fs.Path(s"$path/corpus")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-      .map { s =>
-        s.getPath.getName.stripPrefix("cell=").toInt ->
-          graft.ops.Layout.parquetRowCount(spark, s.getPath.toString)
-      }.toMap
-  }
-
-  /** Refit trigger for an upsert-maintained IVF index: true once the fullest
-    * cell exceeds `skewThreshold` × the mean cell occupancy. A fresh
-    * balanced fit sits near 1; drifting appends concentrate in the cells the
-    * old centroids under-serve, which both skews probe I/O (a hot cell costs
-    * every query that probes it) and signals the centroids no longer
-    * summarize the corpus — time to [[buildIvfIndex]] again. Footer
-    * metadata only; no job.
-    */
-  def ivfNeedsRefit(spark: SparkSession, path: String,
-      skewThreshold: Double = 4.0): Boolean = {
-    val occ = ivfOccupancy(spark, path)
-    occ.nonEmpty && {
-      val mean = occ.values.sum.toDouble / occ.size
-      mean > 0 && occ.values.max > skewThreshold * mean
-    }
-  }
-
-  /** Occupancy skew = fullest cell ÷ mean cell occupancy — the scalar
-    * [[ivfNeedsRefit]] thresholds on, exposed so callers (and the refit
-    * report) can log it. Footer metadata only; 0.0 on an empty index.
-    */
-  def ivfSkew(spark: SparkSession, path: String): Double = {
-    val occ = ivfOccupancy(spark, path)
-    if (occ.isEmpty || occ.values.sum == 0L) 0.0
-    else occ.values.max.toDouble / (occ.values.sum.toDouble / occ.size)
-  }
-
-  /** The refit that [[ivfNeedsRefit]] asks for: re-cluster the index from
-    * its CURRENT cell contents (original build + every upserted batch) and
-    * replace the physical layout — closing the upsert lifecycle
-    * (build → append drift → trigger → refit) without the caller hand-wiring
-    * a rebuild.
-    *
-    * The new fit is staged in a temp directory and SWAPPED in with
-    * filesystem renames (old layout parked under `__refit_old`, new layout
-    * moved into place, park deleted). The read of the old corpus fully
-    * materializes into the staged write before anything is touched, so the
-    * swap window is four renames — but four renames are NOT atomic:
-    *
-    *  - '''Single-writer, no concurrent readers during the swap.''' A
-    *    reader racing the swap can pair old centroids with new cell
-    *    assignments (silently wrong probes), and a crash between the
-    *    renames leaves `$path` without a complete corpus+centroids pair.
-    *  - '''Recovery is [[recoverIvfIndex]]''': call it before opening an
-    *    index that may have seen an interrupted refit (a leftover
-    *    `__refit_old`/`__refit_tmp` directory is the tell). It rolls the
-    *    swap forward or back to a consistent index; this method calls it
-    *    first, so re-running a crashed refit also self-heals.
-    *
-    * Prefer the pointer-file versioned layout ([[buildIvfIndexVersioned]] /
-    * [[refitIvfIndexVersioned]] / [[ivfCurrentDir]]) for served indexes:
-    * it makes refit crash-safe with NO recovery procedure and safe under
-    * concurrent readers, which this in-place rename swap cannot offer.
-    * This form remains for indexes already laid out at a fixed root.
-    *
-    * `nClusters = 0` (default) keeps the current cell count; pass an
-    * explicit value to resize (e.g. √n̂ from [[ivfOccupancy]] totals after
-    * heavy growth). Returns (skew before, skew after) — the [[ivfSkew]]
-    * scalar — for the caller's drift log; recall-before/after is the
-    * caller's probe (it needs a query workload — see SimilaritySpec's
-    * drift → trigger → refit → recall-restored loop).
-    */
-  def refitIvfIndex(spark: SparkSession, path: String,
-      nClusters: Int = 0,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): (Double, Double) = {
-    // heal any interrupted previous swap FIRST — a blind cleanup here would
-    // delete a parked old index whose restore is still pending
-    recoverIvfIndex(spark, path)
-    val skewBefore = ivfSkew(spark, path)
-    val occ = ivfOccupancy(spark, path)
-    require(occ.nonEmpty, s"no IVF corpus at $path/corpus — build the index first")
-    val k = if (nClusters > 0) nClusters else occ.size
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val tmp = s"$path/__refit_tmp"
-    val park = s"$path/__refit_old"
-    fs.delete(p(tmp), true); fs.delete(p(park), true)
-    // stage the new fit from the current contents (cell column dropped —
-    // the new fit reassigns); buildIvfIndex materializes the read before
-    // the swap touches anything
-    val corpus = spark.read.parquet(s"$path/corpus").select(col(idCol), col(vecCol))
-    buildIvfIndex(corpus, tmp, k, vecCol, idCol)
-    // swap: park old, move staged in, drop the park
-    fs.mkdirs(p(park))
-    require(fs.rename(p(s"$path/corpus"), p(s"$park/corpus")) &&
-      fs.rename(p(s"$path/centroids"), p(s"$park/centroids")),
-      s"refit swap failed parking the old layout under $park — staged fit left at $tmp")
-    require(fs.rename(p(s"$tmp/corpus"), p(s"$path/corpus")) &&
-      fs.rename(p(s"$tmp/centroids"), p(s"$path/centroids")),
-      s"refit swap failed installing the new layout — old index parked at $park")
-    fs.delete(p(park), true); fs.delete(p(tmp), true)
-    (skewBefore, ivfSkew(spark, path))
-  }
-
-  /** Recovery for a [[refitIvfIndex]] swap interrupted by a crash. The swap
-    * is four renames (park corpus, park centroids, install corpus, install
-    * centroids); each possible interruption point leaves a distinct — and
-    * unambiguous — directory state, and this method rolls it to a
-    * consistent index:
-    *
-    *  - corpus + centroids both present at `$path`: healthy (or the crash
-    *    hit after the install, before cleanup) → just drop leftovers.
-    *  - corpus present, centroids missing, staged centroids in
-    *    `__refit_tmp`: the crash split the two install renames → roll
-    *    FORWARD by installing the staged centroids that match the already-
-    *    installed corpus (installing the parked OLD centroids here would
-    *    recreate exactly the mixed-fit state this recovery exists to
-    *    prevent).
-    *  - corpus missing: the crash hit while parking (or before any
-    *    install) → roll BACK whatever `__refit_old` holds.
-    *
-    * Leftover `__refit_tmp` / `__refit_old` directories are deleted either
-    * way. Returns true iff a rename was replayed (false = index was already
-    * consistent). Single-writer like the refit itself; call on open when an
-    * interrupted refit is possible.
-    */
-  def recoverIvfIndex(spark: SparkSession, path: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    def ok(s: String) = fs.exists(p(s))
-    val tmp = s"$path/__refit_tmp"
-    val park = s"$path/__refit_old"
-    val replayed =
-      if (ok(s"$path/corpus") && ok(s"$path/centroids")) false
-      else if (ok(s"$path/corpus") && ok(s"$tmp/centroids")) {
-        require(fs.rename(p(s"$tmp/centroids"), p(s"$path/centroids")),
-          s"recovery failed installing staged centroids from $tmp")
-        true
-      } else {
-        var did = false
-        Seq("corpus", "centroids").foreach { part =>
-          if (!ok(s"$path/$part") && ok(s"$park/$part")) {
-            require(fs.rename(p(s"$park/$part"), p(s"$path/$part")),
-              s"recovery failed restoring $part from $park")
-            did = true
-          }
-        }
-        did
-      }
-    fs.delete(p(tmp), true); fs.delete(p(park), true)
-    replayed
-  }
-
-  // ---- pointer-file versioned IVF layout (round-13): refit becomes
-  // crash-safe AND concurrent-reader-safe, retiring recoverIvfIndex's
-  // single-writer/no-reader caveat for indexes built through this API ----
-
-  private def ivfFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def hp(s: String) = new org.apache.hadoop.fs.Path(s)
-  private def ivfVersionName(n: Long): String = f"v$n%010d"
-
-  /** Published versions of a pointer-file index, ascending. A version is
-    * PUBLISHED iff its pointer entry exists under `$path/ptr/` — pointer
-    * entries are empty immutable files whose NAME is the version, created
-    * with an atomic rename-into-place, so a reader can never observe a
-    * half-written pointer and a crash mid-refit can never unpublish the
-    * current version.
-    */
-  private[graft] def ivfVersions(spark: SparkSession, path: String): Seq[String] = {
-    val fs = ivfFs(spark, path)
-    val ptr = hp(s"$path/ptr")
-    if (!fs.exists(ptr)) Seq.empty
-    else fs.listStatus(ptr).toSeq.map(_.getPath.getName)
-      .filter(_.matches("v\\d{10}")).sorted
-  }
-
-  /** Resolve the CURRENT versioned index root — the directory to hand to
-    * [[ivfTopKIndexed]]/[[ivfTopKBatch]]/[[upsertIvfIndex]]/[[ivfOccupancy]]
-    * and friends (they operate on any index root, versioned or not). A
-    * reader that resolves once keeps a CONSISTENT corpus+centroids pair for
-    * as long as it holds the returned path: a concurrent
-    * [[refitIvfIndexVersioned]] writes a NEW version directory and flips
-    * the pointer, never mutating a published one ([[gcIvfVersions]] is the
-    * only deleter, and it always spares the previous version precisely for
-    * in-flight readers).
-    */
-  def ivfCurrentDir(spark: SparkSession, path: String): String = {
-    val vs = ivfVersions(spark, path)
-    require(vs.nonEmpty, s"no published IVF version under $path/ptr — " +
-      s"build with buildIvfIndexVersioned first")
-    s"$path/${vs.last}"
-  }
-
-  /** Atomically publish `version`: create the pointer entry via
-    * write-temp + rename (rename to a fresh name is atomic on POSIX local
-    * FS and HDFS; on an object store the single-key PUT it maps to is
-    * atomic already).
-    */
-  private def ivfPublish(spark: SparkSession, path: String, version: String): Unit = {
-    val fs = ivfFs(spark, path)
-    fs.mkdirs(hp(s"$path/ptr"))
-    val tmp = hp(s"$path/ptr/.tmp-$version")
-    fs.create(tmp, true).close()
-    require(fs.rename(tmp, hp(s"$path/ptr/$version")),
-      s"failed publishing IVF version $version under $path/ptr")
-  }
-
-  /** Build a pointer-file versioned IVF index: the [[buildIvfIndex]] layout
-    * staged under `$path/v0000000001/` and published by pointer. Returns
-    * the resolved version root.
-    */
-  def buildIvfIndexVersioned(
-      emb: DataFrame,
-      path: String,
-      nClusters: Int = 16,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): String = {
-    val spark = emb.sparkSession
-    require(ivfVersions(spark, path).isEmpty,
-      s"$path already holds a versioned index — refit instead of rebuilding")
-    val v1 = ivfVersionName(1L)
-    buildIvfIndex(emb, s"$path/$v1", nClusters, vecCol, idCol)
-    ivfPublish(spark, path, v1)
-    s"$path/$v1"
-  }
-
-  /** Refit a versioned index — the crash-safe, concurrent-reader-safe form
-    * of [[refitIvfIndex]]: re-cluster the CURRENT version's corpus (build +
-    * upserts) into the NEXT version directory, publish the pointer, then
-    * GC versions older than the previous one. Every possible interruption
-    * leaves a consistent index with zero recovery procedure:
-    *
-    *  - crash while staging → pointer untouched, readers stay on the
-    *    current version; the orphan stage directory is swept by the next
-    *    refit/GC (unpublished versions are garbage by definition);
-    *  - crash between publish and GC → the new version is live; stale
-    *    versions are swept later.
-    *
-    * Readers that resolved [[ivfCurrentDir]] before the flip keep reading
-    * their complete old version (GC spares the previous version); new
-    * resolutions see the refit index. Refits themselves stay single-writer
-    * (two concurrent refits would race on the same next-version name — the
-    * usual maintenance-job arrangement); READERS are unrestricted, which is
-    * what the rename-swap layout could not offer. Returns (skew before,
-    * skew after).
-    */
-  def refitIvfIndexVersioned(spark: SparkSession, path: String,
-      nClusters: Int = 0,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): (Double, Double) = {
-    val cur = ivfCurrentDir(spark, path)
-    val curVer = cur.substring(cur.lastIndexOf('/') + 1)
-    val skewBefore = ivfSkew(spark, cur)
-    val occ = ivfOccupancy(spark, cur)
-    require(occ.nonEmpty, s"no IVF corpus at $cur/corpus — build the index first")
-    val k = if (nClusters > 0) nClusters else occ.size
-    val next = ivfVersionName(curVer.stripPrefix("v").toLong + 1L)
-    val fs = ivfFs(spark, path)
-    // sweep a stage left by a previous crashed refit of the SAME next
-    // version (unpublished → no reader can hold it)
-    fs.delete(hp(s"$path/$next"), true)
-    val corpus = spark.read.parquet(s"$cur/corpus").select(col(idCol), col(vecCol))
-    buildIvfIndex(corpus, s"$path/$next", k, vecCol, idCol)
-    ivfPublish(spark, path, next)
-    gcIvfVersions(spark, path)
-    (skewBefore, ivfSkew(spark, s"$path/$next"))
-  }
-
-  /** Prune a versioned index to its newest `keep` PUBLISHED versions
-    * (default: current + previous — the previous stays because an in-flight
-    * reader may have resolved it just before a flip), plus sweep any
-    * UNPUBLISHED version directories older than the current version
-    * (crashed stages). Deleting a published version removes its pointer
-    * entry FIRST, so a crash mid-GC can never leave a pointer naming a
-    * half-deleted directory as anything but non-current history.
-    */
-  def gcIvfVersions(spark: SparkSession, path: String, keep: Int = 2): Unit = {
-    require(keep >= 1, s"keep must be >= 1: $keep")
-    val fs = ivfFs(spark, path)
-    val vs = ivfVersions(spark, path)
-    if (vs.isEmpty) return
-    val current = vs.last
-    vs.dropRight(keep).foreach { v =>
-      fs.delete(hp(s"$path/ptr/$v"), false)
-      fs.delete(hp(s"$path/$v"), true)
-    }
-    // crashed stages: version-shaped dirs below current with no pointer
-    val published = ivfVersions(spark, path).toSet
-    fs.listStatus(hp(path)).toSeq.map(_.getPath.getName)
-      .filter(n => n.matches("v\\d{10}") && !published.contains(n) && n < current)
-      .foreach(n => fs.delete(hp(s"$path/$n"), true))
-  }
-
-  /** Query a [[buildIvfIndex]] index: rank centroids against the query on
-    * the driver (the centroids table is nClusters rows — deliberately tiny),
-    * then scan ONLY the nProbes matching cell partitions and score exact
-    * cosine inside them. The `cell IN probes` predicate is a partition
-    * filter on the hive-layout directory tree, i.e. files outside the probed
-    * cells are never opened (asserted in SimilaritySpec via the scan's
-    * selected-partition count).
-    */
-  def ivfTopKIndexed(
-      spark: SparkSession,
-      path: String,
-      queryVec: Seq[Double],
-      k: Int,
-      nProbes: Int = 4,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
-    val qn = math.max(math.sqrt(queryVec.map(x => x * x).sum), java.lang.Double.MIN_VALUE)
-    val qUnit = queryVec.map(_ / qn)
-    val probes = spark.read.parquet(s"$path/centroids").collect()
-      .map { r =>
-        val c = r.getSeq[Double](1)
-        r.getInt(0) -> c.zip(qUnit).map { case (a, b) => (a - b) * (a - b) }.sum
-      }
-      .sortBy(_._2).take(nProbes).map(_._1)
-    import spark.implicits._
-    val q = Seq(Tuple1(queryVec)).toDF("q_v")
-    spark.read.parquet(s"$path/corpus")
-      .where(col("cell").isin(probes.toIndexedSeq: _*))
-      .crossJoin(broadcast(q))
-      .select(col(idCol), round(cosine(col(vecCol).cast("array<double>"), col("q_v")), 4).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** Batch-query a [[buildIvfIndex]] index — the served-ANN shape at scale
-    * is MANY queries against one index, not a Spark job per query. Probe
-    * selection is a crossJoin of the query set against the broadcast
-    * nClusters-row centroids table with a per-query bounded top-nProbes
-    * ([[graft.functions.TopK.groupedTopK]] on negated distance — no driver
-    * loop, no per-query job). The union of probed cells (≤ nClusters
-    * values) becomes a partition filter, so cells no query probes are never
-    * read; the (query, cell, vector) probe list is broadcast so the corpus
-    * scan joins it without shuffling; and the final per-query top-k is
-    * again the k-bounded aggregator, so the only corpus-sized shuffle
-    * carries at most k rows per (partition, query).
-    *
-    * Contract: the probe list (nQueries × nProbes rows, each carrying the
-    * query vector) must fit in a broadcast — thousands of queries are fine;
-    * millions of queries are a different workload (bucket BOTH sides, see
-    * [[Dedup.embeddingNearDup]]). Output: (q_id, vec_id, cosine, rank) with
-    * rank 1 best, cosine rounded to 4 decimals, ties to the lower id — per
-    * query identical to [[ivfTopKIndexed]] (pinned in SimilaritySpec). A
-    * query vector that exists in the corpus ranks itself first; drop rank 1
-    * when querying by corpus rows.
-    */
-  def ivfTopKBatch(
-      spark: SparkSession,
-      path: String,
-      queries: DataFrame,
-      k: Int,
-      nProbes: Int = 4,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id",
-      qIdCol: String = "q_id",
-      qVecCol: String = "q_vec"): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-    val q = queries.select(col(qIdCol).cast("long").as("q_id"),
-      col(qVecCol).cast("array<double>").as("q_v"))
-    // centroids were fit on unit vectors — normalize queries the same way
-    // (zero-norm passthrough mirrors withUnitVec)
-    val qn = sqrt(aggregate(transform(col("q_v"), x => x * x), lit(0.0), (a, x) => a + x))
-    val qU = q.withColumn("__n", qn)
-      .withColumn("q_u", when(col("__n") === 0.0, col("q_v"))
-        .otherwise(transform(col("q_v"), x => x / col("__n"))))
-      .drop("__n")
-    val dist = aggregate(
-      zip_with(col("q_u"), col("centroid"), (a, b) => (a - b) * (a - b)),
-      lit(0.0), (acc, x) => acc + x)
-    val probes = graft.functions.TopK.groupedTopK(
-      qU.crossJoin(broadcast(cents))
-        .select(col("q_id"), col("cell").as("id"), (-dist).as("score")),
-      "q_id", "id", "score", nProbes)
-      .select(col("q_id"), col("id").cast("int").as("cell"))
-    // literal partition filter: cells probed by NO query are never opened
-    val cells = probes.select(col("cell")).distinct().collect().map(_.getInt(0))
-    val probeList = probes.join(qU.select(col("q_id"), col("q_v")), Seq("q_id"))
-    val cands = spark.read.parquet(s"$path/corpus")
-      .where(col("cell").isin(cells.toIndexedSeq: _*))
-      .join(broadcast(probeList), Seq("cell"))
-      .select(col("q_id"), col(idCol),
-        round(cosine(col(vecCol).cast("array<double>"), col("q_v")), 4).as("cosine"))
-    graft.functions.TopK.groupedTopK(cands, "q_id", idCol, "cosine", k)
-  }
-
-  /** Approximate nearest neighbors via BucketedRandomProjectionLSH on
-    * L2-normalized vectors (cosine distance ≡ half the squared euclidean
-    * distance on the unit sphere, so euclidean-LSH buckets serve cosine).
-    * This is the scale path: bucketing makes candidate generation an
-    * equi-join; `approxNearestNeighbors` probes only matching buckets.
-    */
-  def lshTopK(
-      spark: SparkSession,
-      emb: DataFrame,
-      queryId: Long,
-      k: Int,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id",
-      bucketLength: Double = 0.5,
-      numHashTables: Int = 4): DataFrame = {
-    val v = withUnitVec(
-      emb.select(col(idCol), col(vecCol).cast("array<double>").as("v")), "v", "features")
-      .drop("v")
-    val lsh = new BucketedRandomProjectionLSH()
-      .setInputCol("features").setOutputCol("buckets")
-      .setBucketLength(bucketLength).setNumHashTables(numHashTables).setSeed(42L)
-    val model = lsh.fit(v)
-    val key = v.where(col(idCol) === queryId).head().getAs[org.apache.spark.ml.linalg.Vector]("features")
-    model.approxNearestNeighbors(v.where(col(idCol) =!= queryId), key, k)
-      .select(col(idCol), (lit(1.0) - col("distCol") * col("distCol") / 2).as("cosine_approx"))
-  }
-
   /** SemDeDup semantic near-duplicate pairs (Abbas et al. 2023, "SemDeDup:
     * Data-efficient learning at web-scale through semantic deduplication"):
-    * k-means-cluster the embeddings (same seeded fit as [[ivfTopK]]), then
+    * k-means-cluster the embeddings (seeded fit), then
     * compare pairs ONLY within a cluster — semantically unrelated points
     * never meet, so the quadratic term is Σ cell² instead of n². Returns
     * (id_a, id_b, cosine) with id_a < id_b and cosine (4dp-rounded, the e02

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Cosine similarity of two `array<double>` vectors as a native Catalyst
   * expression — the hot inner operation of every similarity path (brute
-  * top-k, IVF probe, embedding near-dup verification).
+  * top-k, SemDeDup pairs, embedding near-dup verification).
   *
   * The higher-order-function formulation ([[graft.ext.Similarity.cosine]])
   * is semantically identical but runs on Catalyst's interpreted HOF path

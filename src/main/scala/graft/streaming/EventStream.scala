@@ -1,86 +1,25 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 
-/** Structured Streaming form of the event-stream operators (SURVEY.md §2.e
-  * E5, §7 risk 6): the batch pipeline in graft.ext.Jsonish upgrades to
-  * `readStream` + watermark without semantic change — same `window()` /
-  * `session_window()` groupings, same aggregates.
+/** Sessionization of the events table (SURVEY.md §2.e E5): the
+  * gaps-and-islands batch form, and the `flatMapGroupsWithState` fold with
+  * its batch replay in oracle shape.
   *
-  * Scale posture: watermarks bound state (late data beyond the horizon is
-  * dropped, state for closed windows is evicted); the windowed aggregation
-  * shuffles once on (window, key) with partial aggregation; custom session
-  * state via flatMapGroupsWithState is partitioned by user key — the
-  * standard 1000-executor streaming topology.
+  * Scale posture: every form shuffles once on `user_id`; custom session
+  * state is partitioned by user key and O(1) per user.
   */
 object EventStream {
-
-  /** File-stream source over a directory of event parquet files. A stream
-    * source needs an explicit schema, but the testdata's `ts` physical shape
-    * has varied across generations (Long nanos under nanosAsLong vs
-    * TIMESTAMP_NTZ micros — see [[graft.queries.Reference.events]]), so the
-    * schema is probed from the files already in the directory with one batch
-    * footer read, then `ts` is normalized to TimestampType exactly like the
-    * batch loader. Requires at least one file present at call time — true
-    * for every staging pattern here, and the natural contract for a replay
-    * source (an empty directory has no shape to promise).
-    */
-  def readEventStream(spark: SparkSession, dir: String): DataFrame = {
-    val probed = spark.read.parquet(dir).schema
-    graft.queries.Reference.normalizeTs(
-      spark.readStream.schema(probed).parquet(dir))
-  }
-
-  /** Tumbling-window counts/sums with a watermark: the streaming twin of
-    * Jsonish.tumbling. Append-mode-compatible (watermark closes windows).
-    */
-  def tumbling(events: DataFrame, width: String = "1 hour",
-      watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), width), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("event_type"), col("n_events"), col("sum_value"))
-
-  /** Sliding-window counts/sums with a watermark: the streaming twin of
-    * Jsonish.sliding. Each event lands in width/slide overlapping windows;
-    * the watermark closes them for append mode.
-    */
-  def sliding(events: DataFrame, width: String = "1 hour",
-      slide: String = "15 minutes", watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), width, slide), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("event_type"), col("n_events"), col("sum_value"))
-
-  /** Gap-based session windows under a watermark — `session_window` merges
-    * overlapping per-key windows as events arrive.
-    */
-  def sessions(events: DataFrame, gap: String = "30 minutes",
-      watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("user_id"), col("n_events"), col("sum_value"))
 
   /** Batch sessionization by the classic gaps-and-islands recurrence: a new
     * session starts when the gap since the user's previous event is >= `gap`
     * (exactly `session_window`'s merge rule — windows [t, t+gap) merge only
     * while they overlap), the session index is a running sum of those
     * start-flags, and one aggregate per (user, session) yields the summary.
-    * `session_end` = last event + gap, matching [[sessions]]' output shape,
-    * so the two forms are interchangeable (pinned in EventStreamSpec).
+    * `session_end` = last event + gap, matching `session_window`'s output
+    * shape, so the two forms are interchangeable (pinned in EventStreamSpec).
     *
     * Determinism: the window order is (ts, event_id) — a total order even
     * when a user has simultaneous events — so the island assignment is a
@@ -115,56 +54,6 @@ object EventStream {
         count(lit(1)).as("n_events"),
         valueAgg(col("value")).as("sum_value"))
       .drop("__sid")
-  }
-
-  /** Streaming exact dedup: drop duplicate event ids as they arrive, with
-    * state bounded by the watermark (`dropDuplicatesWithinWatermark` evicts
-    * ids older than the horizon — without it, dedup state grows forever on
-    * an unbounded stream). The streaming twin of Dedup.exactRows for the
-    * training-data ingest path.
-    */
-  def dedupStream(events: DataFrame, idCols: Seq[String] = Seq("event_id"),
-      watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(idCols)
-
-  /** Stream-stream interval join: every `conversions` row enriched with ALL
-    * `touches` rows for the same user inside the trailing window
-    * (`touch.ts ∈ [conv.ts − window, conv.ts]`) — the multi-touch
-    * companion to the as-of join's latest-only semantics (e90/e97), and
-    * the remaining Structured Streaming join shape the library exercises:
-    * stream⋈stream with an event-time range condition.
-    *
-    * Streaming semantics: BOTH sides carry watermarks; the range condition
-    * plus the watermark bound the join state — touch rows are evicted once
-    * the conversion-side watermark passes `touch.ts + window` (Spark
-    * derives the state horizon from the time-range predicate; without the
-    * range condition stream-stream state grows forever). On batch inputs
-    * the same code is a plain equi+range join, so the streaming result is
-    * pinned ≡ batch in EventStreamSpec.
-    *
-    * Inputs must both have `user_id` and `ts`; `touches` columns are
-    * prefixed `t_` in the output (its `user_id` dropped, its ts as
-    * `t_ts`).
-    */
-  def enrichWithinWindow(conversions: DataFrame, touches: DataFrame,
-      windowSeconds: Long, watermarkDelay: String = "2 hours"): DataFrame = {
-    require(windowSeconds > 0, s"windowSeconds must be positive: $windowSeconds")
-    val conv =
-      if (conversions.isStreaming) conversions.withWatermark("ts", watermarkDelay)
-      else conversions
-    val tRenamed = touches.columns.foldLeft(touches) { (df, c) =>
-      if (c == "user_id") df else df.withColumnRenamed(c, s"t_$c")
-    }
-    val tch =
-      if (tRenamed.isStreaming) tRenamed.withWatermark("t_ts", watermarkDelay)
-      else tRenamed
-    conv.join(tch,
-      conv("user_id") === tch("user_id") &&
-        col("t_ts") >= col("ts") - expr(s"INTERVAL $windowSeconds seconds") &&
-        col("t_ts") <= col("ts"),
-      "inner").drop(tch("user_id"))
   }
 
   // ---- custom state: flatMapGroupsWithState sessionization ----
@@ -236,54 +125,6 @@ object EventStream {
               if (streaming) state.setTimeoutTimestamp(s.lastSeen + gapMillis)
             }
             out.iterator
-          }
-      }
-  }
-
-  final case class LatestOut(user_id: Long, event_id: Long, event_type: String,
-      ts: java.sql.Timestamp)
-
-  /** Streaming keep-latest state — the streaming twin of
-    * [[graft.ops.Incremental.latestByKey]]: maintains each key's newest row
-    * (by event time, `event_id` breaking ties) and emits the current value
-    * ONLY when it actually changes, via `flatMapGroupsWithState` in Update
-    * mode — a replay of already-absorbed events writes no state and emits
-    * nothing, so sink traffic and checkpoint volume scale with real
-    * changes, not with replays. Late events older than the held state are
-    * absorbed silently: the state converges to the same maximum regardless
-    * of arrival order (pinned against the batch operator in
-    * EventStreamSpec). State is O(1) per key — a served "current state"
-    * table at 100 TB is #keys, not #events.
-    *
-    * Ordering compares (seconds, nanos, id) — the FULL timestamp
-    * precision, matching the batch operator's microsecond ordering
-    * (`Timestamp.getTime` alone is millisecond-truncated and would pick a
-    * different winner for sub-millisecond-apart events). The seconds
-    * component uses `Math.floorDiv`: `/ 1000` truncates toward zero, which
-    * for PRE-EPOCH timestamps (−1500 ms → −1 s carrying nanos 5e8) would
-    * order sub-second-apart 1969 events differently from the batch winner.
-    *
-    * NoTimeout deliberately: current-state tables serve lookups
-    * indefinitely, so state lives as long as the key; bound the key space
-    * upstream if eviction is needed.
-    */
-  def latestStateStream(events: Dataset[Event]): Dataset[LatestOut] = {
-    import events.sparkSession.implicits._
-    def key(o: LatestOut): (Long, Int, Long) =
-      (Math.floorDiv(o.ts.getTime, 1000L), o.ts.getNanos, o.event_id)
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[LatestOut, LatestOut](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (userId: Long, evts: Iterator[Event], state: GroupState[LatestOut]) =>
-          val prev = state.getOption
-          val newest = (prev.iterator ++ evts.map(e =>
-            LatestOut(userId, e.event_id, e.event_type, e.ts)))
-            .maxBy(key)
-          if (prev.contains(newest)) Iterator.empty
-          else {
-            state.update(newest)
-            Iterator.single(newest)
           }
       }
   }
@@ -367,68 +208,4 @@ object EventStream {
        |FROM ses
        |QUALIFY sid < MAX(sid) OVER (PARTITION BY user_id)
        |ORDER BY user_id, session_start""".stripMargin
-
-  /** Continuous-ingestion near-dup gate: every micro-batch of documents is
-    * deduped against a persisted [[graft.ext.Dedup.buildMinHashStore]]
-    * signature store — matches at the store's pinned MinHash parameters
-    * are dropped, survivors go to `sink` AND their signatures are appended,
-    * so later batches (and later docs in the SAME batch — greedy
-    * lowest-id-wins) dedup against everything ingested so far. This is the
-    * e115 incremental-dedup lifecycle as a stream.
-    *
-    * `foreachBatch` is the supported Structured Streaming shape for this
-    * operator: the lookup's candidate-distinct + signature re-join would be
-    * a disallowed stream-stream self-join in pure streaming form, while
-    * inside `foreachBatch` the exact batch operator
-    * ([[graft.ext.Dedup.minHashStoreIngest]]) runs per trigger — streaming
-    * ≡ batch is pinned in EventStreamSpec.
-    *
-    * Restart semantics: `foreachBatch` is at-least-once, so a batch id can
-    * replay after a crash. Appends are guarded by a per-batch marker dir
-    * (`$store/_stream/<queryName>_<batchId>`, created AFTER the append): a
-    * replayed batch recomputes and re-emits the SAME survivors (the ingest
-    * step excludes same-id store matches, so a batch never flags its own
-    * appended signatures) and never double-appends once the marker exists.
-    * A crash between append and marker re-appends duplicate signature ROWS
-    * — harmless to lookup semantics (duplicate candidates collapse in the
-    * match distinct; flags are id sets) and reclaimed by the next
-    * [[graft.ext.Dedup.compactMinHashStore]].
-    */
-  def dedupStreamWithStore(docs: DataFrame, storePath: String,
-      queryName: String, minEstJaccard: Double = 0.5,
-      textCol: String = "text", idCol: String = "doc_id")
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .queryName(queryName)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          java.net.URI.create(storePath),
-          spark.sparkContext.hadoopConfiguration)
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$storePath/_stream/${queryName}_$batchId")
-        val alreadyAppended = fs.exists(marker)
-        val survivors = graft.ext.Dedup.minHashStoreIngest(spark, storePath,
-          batch, textCol, idCol, minEstJaccard,
-          appendSurvivors = !alreadyAppended)
-        sink(survivors)
-        if (!alreadyAppended) fs.mkdirs(marker): Unit
-      }
-      .start()
-
-  /** Run a streaming frame to completion against the files currently in the
-    * source directory, collecting results via the memory sink — the local
-    * smoke-loop (spark_guide: memory format + processAllAvailable).
-    */
-  def runToMemory(df: DataFrame, queryName: String,
-      mode: OutputMode = OutputMode.Append): DataFrame = {
-    val q = df.writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    df.sparkSession.table(queryName)
-  }
 }

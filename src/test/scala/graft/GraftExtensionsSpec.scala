@@ -25,23 +25,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
     df
   }
 
-  test("SQL span_hashes matches the Column API bit-for-bit (2-arg and 1-arg)") {
-    val api = docs.select(col("doc_id"),
-        graft.functions.SpanHash.spanHashes(col("text"), 3).as("h"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val viaSql = spark.sql("SELECT doc_id, span_hashes(text, 3) AS h FROM ge_docs")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(api == viaSql)
-    assert(api(1L).nonEmpty && api(4L).isEmpty)
-    // 1-arg form defaults to n=10, same as the Column API default
-    val apiDefault = docs.select(col("doc_id"),
-        graft.functions.SpanHash.spanHashes(col("text")).as("h"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val viaSqlDefault = spark.sql("SELECT doc_id, span_hashes(text) AS h FROM ge_docs")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(apiDefault == viaSqlDefault)
-  }
-
   test("SQL minhash_sig matches the Column API bit-for-bit (3-arg and 1-arg)") {
     val api = docs.select(col("doc_id"),
         graft.functions.MinHash.minhashSig(col("text"), 3, 16).as("sig"))

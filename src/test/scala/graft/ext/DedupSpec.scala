@@ -836,45 +836,6 @@ class DedupSpec extends AnyFunSuite {
     assert(got(3L) == "totally unrelated words that never repeat anywhere else at all")
   }
 
-  test("native SpanHashes is bit-identical to xxhash64 over the HOF spans") {
-    import spark.implicits._
-    // real corpus rows + adversarial edges: empty, whitespace, sub-n,
-    // multi-byte UTF-8, repeated runs of spaces
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("text")).limit(50)
-      .unionAll(Seq("", "   ", "a b", "über die brücke und zurück über die brücke geht es weiter",
-        "x " * 30, "一 二 三 四 五 六 七 八 九 十 十一 十二").toDF("text"))
-    Seq(2, 3, 10).foreach { n =>
-      val toksCol = filter(split(lower(trim(col("text"))), "\\s+"), t => length(t) > 0)
-      val hofHashes = docs
-        .select(when(size(toksCol) >= n,
-          transform(sequence(lit(0), size(toksCol) - n),
-            i => xxhash64(array_join(slice(toksCol, i + 1, lit(n)), " "))))
-          .otherwise(array().cast("array<bigint>")).as("h"))
-        .collect().map(_.getSeq[Long](0))
-      val native = docs
-        .select(graft.functions.SpanHash.spanHashes(col("text"), n).as("h"))
-        .collect().map(_.getSeq[Long](0))
-      hofHashes.zip(native).zipWithIndex.foreach { case ((a, b), i) =>
-        assert(a == b, s"n=$n row $i")
-      }
-    }
-  }
-
-  test("hashSpanKey aggregate path is exactly the span-text path") {
-    import spark.implicits._
-    // spanCorpus plus extra shared material so several distinct spans exist
-    val blockA = (1 to 15).map(i => s"a$i").mkString(" ")
-    val corpus = spanCorpus.unionAll(Seq(
-      (10L, s"$blockA tail one"), (11L, s"head $blockA"), (12L, blockA)
-    ).toDF("doc_id", "text"))
-    val exactR = Dedup.repeatedSpans(corpus, n = 10, minDocs = 2)
-      .orderBy("doc_id", "pos").collect().toSeq
-    val hashed = Dedup.repeatedSpans(corpus, n = 10, minDocs = 2, hashSpanKey = true)
-      .orderBy("doc_id", "pos").collect().toSeq
-    assert(hashed == exactR && exactR.size > 10)
-  }
-
   test("maskRepeatedSpans keepFirst retains each span's first occurrence") {
     val got = Dedup.maskRepeatedSpans(spanCorpus, n = 10, minDocs = 2, keepFirst = true)
       .select("doc_id", "clean_text")
@@ -898,7 +859,7 @@ class DedupSpec extends AnyFunSuite {
     assert(got == Seq(1L, 2L, 3L)) // the u-block pair is below minDocs
   }
 
-  test("span store lifecycle: build -> lookup -> append -> compact, store ≡ inline ≡ repeatedSpans") {
+  test("spanLookup ≡ repeatedSpans over corpus ∪ batch, restricted to the batch rows") {
     import spark.implicits._
     val block = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val corpus = Seq(
@@ -910,93 +871,20 @@ class DedupSpec extends AnyFunSuite {
       (10L, s"fresh ingest doc containing $block somewhere in the middle"),
       (11L, "fresh ingest doc with nothing repeated anywhere at all now truly"))
       .toDF("doc_id", "text")
-    for (hashed <- Seq(false, true)) {
-      // ground truth: repeatedSpans over corpus ∪ batch, batch rows only
-      val want = Dedup.repeatedSpans(corpus.unionAll(batch), n = 5, minDocs = 2,
-          hashSpanKey = hashed)
-        .where(col("doc_id") >= 10L)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3))).toSet
-      assert(want.nonEmpty, "batch must share spans with the corpus")
-      val inline = Dedup.spanLookup(batch, corpus, n = 5, minDocs = 2,
-          hashSpanKey = hashed)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3))).toSet
-      assert(inline == want, s"hashed=$hashed inline != repeatedSpans(union)")
-      val dir = java.nio.file.Files.createTempDirectory("graft_spanstore").toString
-      Dedup.buildSpanStore(corpus, dir, n = 5, hashSpanKey = hashed)
-      val stored = Dedup.spanStoreLookup(spark, dir, batch, minDocs = 2)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3))).toSet
-      assert(stored == want, s"hashed=$hashed store-backed != inline")
-      // append the batch, then a SECOND batch must see batch-1 spans as corpus
-      Dedup.appendSpanStore(spark, dir, batch)
-      val batch2 = Seq((20L, s"third wave doc also containing $block right here"))
-        .toDF("doc_id", "text")
-      val want2 = Dedup.repeatedSpans(corpus.unionAll(batch).unionAll(batch2),
-          n = 5, minDocs = 2, hashSpanKey = hashed)
-        .where(col("doc_id") === 20L)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3))).toSet
-      val stored2 = Dedup.spanStoreLookup(spark, dir, batch2, minDocs = 2)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3))).toSet
-      assert(stored2 == want2, s"hashed=$hashed post-append lookup diverged")
-      // compaction folds append rows without changing any lookup
-      Dedup.compactSpanStore(spark, dir)
-      val stored2c = Dedup.spanStoreLookup(spark, dir, batch2, minDocs = 2)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3))).toSet
-      assert(stored2c == stored2, s"hashed=$hashed compaction changed the lookup")
-      // one row per key after compaction
-      val posting = spark.read.parquet(s"$dir/posting")
-      assert(posting.groupBy("__span_key").count().where(col("count") > 1).isEmpty)
-    }
-  }
-
-  test("store auto-compaction triggers: row-growth for spans, file-count for minhash") {
-    import spark.implicits._
-    val corpus = (1L to 40L).map(i =>
-      (i, s"alpha$i beta$i gamma$i delta$i epsilon$i zeta$i eta$i theta$i iota$i kappa$i"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3))).toSet
+    val want = rows(Dedup.repeatedSpans(corpus.unionAll(batch), n = 5, minDocs = 2)
+      .where(col("doc_id") >= 10L))
+    assert(want.nonEmpty, "batch must share spans with the corpus")
+    assert(rows(Dedup.spanLookup(batch, corpus, n = 5, minDocs = 2)) == want)
+    // a second batch sees the first batch's spans as corpus
+    val batch2 = Seq((20L, s"third wave doc also containing $block right here"))
       .toDF("doc_id", "text")
-    // --- span store: trigger = posting rows >= growthFactor x last-compact
-    val dir = java.nio.file.Files.createTempDirectory("graft_spantrig").toString
-    Dedup.buildSpanStore(corpus, dir, n = 5)
-    assert(!Dedup.spanStoreNeedsCompaction(spark, dir),
-      "fresh build must not need compaction")
-    // append disjoint-id batches until the posting rows double
-    var batchNo = 0
-    while (!Dedup.spanStoreNeedsCompaction(spark, dir) && batchNo < 4) {
-      batchNo += 1
-      Dedup.appendSpanStore(spark, dir, corpus.select(
-        (col("doc_id") + lit(batchNo * 1000L)).as("doc_id"), col("text")))
-    }
-    assert(Dedup.spanStoreNeedsCompaction(spark, dir),
-      s"trigger never fired after $batchNo corpus-sized appends")
-    // the decision rule: compaction folds rows and RESETS the reference
-    Dedup.compactSpanStore(spark, dir)
-    assert(!Dedup.spanStoreNeedsCompaction(spark, dir),
-      "compaction must clear the trigger")
-    // a pre-stats store (stats dir absent) falls back to the file rule
-    val fs = new org.apache.hadoop.fs.Path(s"$dir/stats")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/stats"), true)
-    assert(!Dedup.spanStoreNeedsCompaction(spark, dir))
-    assert(Dedup.spanStoreNeedsCompaction(spark, dir, maxPartFiles = 0))
-    // --- minhash store: trigger = part-file fragmentation; compaction is
-    // file consolidation and must not change any lookup verdict
-    val mdir = java.nio.file.Files.createTempDirectory("graft_mhtrig").toString
-    Dedup.buildMinHashStore(corpus, mdir)
-    val batch = corpus.select((col("doc_id") + 5000L).as("doc_id"), col("text"))
-    (1 to 3).foreach { i =>
-      Dedup.appendMinHashStore(spark, mdir,
-        corpus.select((col("doc_id") + lit(i * 100L)).as("doc_id"), col("text")))
-    }
-    val before = Dedup.minHashStoreLookup(spark, mdir, batch)
-      .collect().map(_.toSeq).toSet
-    val files = spark.read.parquet(s"$mdir/sigs").inputFiles.length
-    assert(Dedup.minHashStoreNeedsCompaction(spark, mdir, maxPartFiles = files - 1))
-    assert(!Dedup.minHashStoreNeedsCompaction(spark, mdir, maxPartFiles = files))
-    Dedup.compactMinHashStore(spark, mdir)
-    assert(spark.read.parquet(s"$mdir/sigs").inputFiles.length < files)
-    // file consolidation must not change a single lookup verdict
-    val after = Dedup.minHashStoreLookup(spark, mdir, batch)
-      .collect().map(_.toSeq).toSet
-    assert(after == before, "compaction changed lookup verdicts")
+    val want2 = rows(Dedup.repeatedSpans(corpus.unionAll(batch).unionAll(batch2),
+        n = 5, minDocs = 2)
+      .where(col("doc_id") === 20L))
+    assert(rows(Dedup.spanLookup(batch2, corpus.unionAll(batch), n = 5, minDocs = 2)) ==
+      want2)
   }
 
   test("repeatedSpanRanges merges overlapping hits; separated blocks stay apart") {
@@ -1245,56 +1133,22 @@ class DedupSpec extends AnyFunSuite {
     assert(planted.size >= (d.count() * 9) / 10) // ≥90% of docs have ≥3-token halves
   }
 
-  test("minhash store lifecycle: build -> lookup -> append -> lookup, append-only files") {
+  test("minhashLookupMd5: exact copy scores 1.0, near copy >= 0.5, unrelated doc has no row") {
     import spark.implicits._
     val corpus = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (2L, "one two three four five six seven eight nine ten"),
       (3L, "red orange yellow green blue indigo violet white black gray"))
       .toDF("doc_id", "text")
-    val store = java.nio.file.Files.createTempDirectory("graft_mh_store").toString
-    Dedup.buildMinHashStore(corpus, store)
-    // batch: an exact copy of doc 1 (est 1.0), a near-copy of doc 2 with a
-    // suffix, and an unrelated doc (no row)
     val batch = Seq(
       (101L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (102L, "one two three four five six seven eight nine ten extra tail"),
       (103L, "totally different content about nothing shared at all here"))
       .toDF("doc_id", "text")
-    val hits = Dedup.minHashStoreLookup(spark, store, batch).collect()
+    val hits = Dedup.minhashLookupMd5(batch, corpus).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(hits((101L, 1L)) == 1.0, hits.toString)
     assert(hits.contains((102L, 2L)) && hits((102L, 2L)) >= 0.5)
     assert(!hits.keys.exists(_._1 == 103L))
-    // store-backed lookup ≡ the inline batch-vs-corpus form
-    val inline = Dedup.minhashLookupMd5(batch, corpus).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(hits == inline)
-    // append the surviving batch; files are append-only
-    def sigFiles() = new java.io.File(s"$store/sigs").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.lastModified).toMap
-    val before = sigFiles()
-    Dedup.appendMinHashStore(spark, store, batch.where(col("doc_id") === 103L))
-    val after = sigFiles()
-    assert(before.forall { case (n, m) => after.get(n).contains(m) },
-      "append rewrote existing signature files")
-    assert(after.size > before.size, "append added no part-files")
-    // a near-copy of the appended doc is now found through the store
-    val batch2 = Seq((201L, "totally different content about nothing shared at all here"))
-      .toDF("doc_id", "text")
-    val hits2 = Dedup.minHashStoreLookup(spark, store, batch2).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(hits2((201L, 103L)) == 1.0, hits2.toString)
-    // the xxhash64 fast-path store: meta pins the hash choice, lookups
-    // follow it, and the lifecycle behaves identically on exact copies
-    val fast = java.nio.file.Files.createTempDirectory("graft_mh_fast").toString
-    Dedup.buildMinHashStore(corpus, fast, portable = false)
-    val fhits = Dedup.minHashStoreLookup(spark, fast, batch).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(fhits((101L, 1L)) == 1.0 && !fhits.keys.exists(_._1 == 103L), fhits.toString)
-    Dedup.appendMinHashStore(spark, fast, batch.where(col("doc_id") === 103L))
-    val fhits2 = Dedup.minHashStoreLookup(spark, fast, batch2).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(fhits2((201L, 103L)) == 1.0, fhits2.toString)
   }
 }

@@ -35,6 +35,14 @@ class JsonishSpec extends AnyFunSuite {
     assert(r.getDouble(r.fieldIndex("sum_value")) == 3.0)
   }
 
+  test("sliding windows land each event in width/slide windows on real events") {
+    val ev = graft.queries.Reference.events(spark, "/root/testdata/sf0.001")
+    val sliding = Jsonish.sliding(ev, "1 hour", "15 minutes").count()
+    val tumbling = Jsonish.tumbling(ev, "1 hour").count()
+    // overlap factor 4: sliding must produce ~4x the tumbling window count
+    assert(sliding > 3 * tumbling, s"sliding $sliding vs tumbling $tumbling")
+  }
+
   test("session windows split on the gap") {
     // user 7: events at 10:05, 10:45, 11:20 with 30min gap -> 10:05+10:45
     // are 40min apart -> separate sessions; 10:45 & 11:20 are 35min apart

@@ -39,216 +39,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(row0.getLong(1) == 1L)
   }
 
-  test("ivfTopK recalls the exact top-k on the real embeddings table") {
-    val real = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val exact = Similarity.bruteForceTopK(real, queryId = 0L, k = 5)
-      .collect().map(_.getLong(0)).toSet
-    val approx = Similarity.ivfTopK(real, queryId = 0L, k = 5,
-        nClusters = 8, nProbes = 4)
-      .collect().map(_.getLong(0)).toSet
-    // probing half the cells should recall most of the true top-5
-    assert(approx.intersect(exact).size >= 3,
-      s"IVF recall too low: $approx vs exact $exact")
-  }
-
-  test("physical IVF index prunes the scan to nProbes cell partitions, recall intact") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val real = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf").toString
-    Similarity.buildIvfIndex(real, idx, nClusters = 8)
-    val qVec = real.where(col("vec_id") === 0L)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-    val res = Similarity.ivfTopKIndexed(spark, idx, qVec, k = 6, nProbes = 4)
-    val rows = res.collect()
-    // the query IS id 0's embedding: it must come back first at cosine 1.0
-    assert(rows.head.getLong(0) == 0L && rows.head.getDouble(1) == 1.0, rows.mkString(","))
-    val exact = Similarity.bruteForceTopK(real, queryId = 0L, k = 5)
-      .collect().map(_.getLong(0)).toSet
-    val approx = rows.tail.map(_.getLong(0)).toSet
-    assert(approx.intersect(exact).size >= 3, s"indexed IVF recall too low: $approx vs $exact")
-    // the pruning is PHYSICAL: the corpus scan selected <= nProbes of the 8
-    // cell directories (files outside the probed cells were never opened)
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => scans(q.plan)
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => scans(r.child)
-      case f: FileSourceScanExec => Seq(f)
-      case o => o.children.flatMap(scans)
-    }
-    val corpusScan = scans(res.queryExecution.executedPlan)
-      .find(_.relation.location.rootPaths.mkString(",").contains("corpus"))
-      .getOrElse(fail("no corpus FileSourceScanExec in plan"))
-    assert(corpusScan.selectedPartitions.partitionCount <= 4,
-      s"expected <= 4 cell partitions read, got ${corpusScan.selectedPartitions.partitionCount}")
-  }
-
-  test("physical IVF index at sf0.1: recall/pruning tradeoff over multiple queries") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    // NOTE on the bar: these embeddings are near-uniform on the sphere (the
-    // true top-10 cosines are only ~0.3–0.5 and scatter across label
-    // clusters), so IVF recall necessarily tracks the probed FRACTION — no
-    // cell layout can put uniform neighbors in few cells. The honest contract
-    // has two operating points, both asserted here on the real table:
-    // aggressive pruning (6/16 cells, recall well above the 0.375 scan
-    // fraction) and high recall (14/16 cells, recall >= 0.9). On a genuinely
-    // clustered corpus the first point alone reaches 0.9 (the sf0.001
-    // suite's clustered spec data shows that shape).
-    val real = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_sf01").toString
-    val (nClusters, k) = (16, 10)
-    Similarity.buildIvfIndex(real, idx, nClusters = nClusters)
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => scans(q.plan)
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => scans(r.child)
-      case f: FileSourceScanExec => Seq(f)
-      case o => o.children.flatMap(scans)
-    }
-    val queryIds = Seq(0L, 123L, 456L, 789L, 1500L)
-    val exactTop = queryIds.map { qid =>
-      qid -> Similarity.bruteForceTopK(real, queryId = qid, k = k)
-        .collect().map(_.getLong(0)).toSet
-    }.toMap
-    val qVecs = queryIds.map { qid =>
-      qid -> real.where(col("vec_id") === qid)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-    }.toMap
-    def meanRecall(nProbes: Int): Double = {
-      val recalls = queryIds.map { qid =>
-        val res = Similarity.ivfTopKIndexed(spark, idx, qVecs(qid), k = k + 1, nProbes = nProbes)
-        val rows = res.collect()
-        // pruning stays physical: <= nProbes of the 16 cell dirs are read
-        val corpusScan = scans(res.queryExecution.executedPlan)
-          .find(_.relation.location.rootPaths.mkString(",").contains("corpus"))
-          .getOrElse(fail("no corpus FileSourceScanExec in plan"))
-        assert(corpusScan.selectedPartitions.partitionCount <= nProbes,
-          s"expected <= $nProbes cell partitions read, got ${corpusScan.selectedPartitions.partitionCount}")
-        // the query vector IS vec qid's embedding: drop its own hit, then score
-        val approx = rows.map(_.getLong(0)).filterNot(_ == qid).take(k).toSet
-        approx.intersect(exactTop(qid)).size.toDouble / k
-      }
-      recalls.sum / recalls.length
-    }
-    val pruned = meanRecall(nProbes = 6)
-    assert(pruned >= 0.5, s"recall@$k at 6/16 probes = $pruned — should beat the 0.375 scan fraction")
-    val high = meanRecall(nProbes = 14)
-    assert(high >= 0.9, s"recall@$k at 14/16 probes = $high < 0.9")
-  }
-
-  test("upsertIvfIndex: appended vectors are probed, old files never rewritten, drift is monitored") {
-    val real = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_up").toString
-    val refit = java.nio.file.Files.createTempDirectory("graft_ivf_rf").toString
-    val nClusters = 8
-    // build on the first 400 vectors, upsert the last 100
-    Similarity.buildIvfIndex(real.where(col("vec_id") < 400), idx, nClusters = nClusters)
-    def snapshot(): Map[String, (Long, Long)] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
-      walk(new java.io.File(s"$idx/corpus"))
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getAbsolutePath -> ((f.lastModified(), f.length()))).toMap
-    }
-    val before = snapshot()
-    Similarity.upsertIvfIndex(spark, idx, real.where(col("vec_id") >= 400))
-    val after = snapshot()
-    // append-only: every pre-existing file survives BYTE-UNTOUCHED (same
-    // mtime+length), and the upsert only added files
-    before.foreach { case (path, meta) =>
-      assert(after.get(path).contains(meta), s"pre-existing file rewritten: $path")
-    }
-    assert(after.size > before.size, "upsert appended no files")
-    // occupancy from footers covers the whole corpus, no job
-    val occ = Similarity.ivfOccupancy(spark, idx)
-    assert(occ.values.sum == 500L, s"occupancy ${occ.values.sum} != 500")
-    // recall after upserts stays within epsilon of a full refit
-    Similarity.buildIvfIndex(real, refit, nClusters = nClusters)
-    val queryIds = Seq(0L, 100L, 250L, 420L, 490L)
-    val recalls = queryIds.map { qid =>
-      val qv = real.where(col("vec_id") === qid)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      val exact = Similarity.bruteForceTopK(real, qid, 10).collect()
-        .map(_.getLong(0)).toSet
-      def recall(path: String): Double =
-        Similarity.ivfTopKIndexed(spark, path, qv, 11, nProbes = 4).collect()
-          .map(_.getLong(0)).filterNot(_ == qid).take(10)
-          .count(exact.contains).toDouble / 10.0
-      (recall(idx), recall(refit))
-    }
-    val (upAvg, rfAvg) = (recalls.map(_._1).sum / recalls.size,
-      recalls.map(_._2).sum / recalls.size)
-    assert(upAvg >= rfAvg - 0.2,
-      s"upserted recall $upAvg fell >0.2 below refit recall $rfAvg")
-    // a balanced index does not demand a refit; a pathological append —
-    // 600 copies of one vector, all landing in a single cell — does
-    assert(!Similarity.ivfNeedsRefit(spark, idx, skewThreshold = 4.0))
-    // pathological append: 600 near-copies of one vector (tiny deterministic
-    // per-id perturbations — a tight CLUSTER, not identical points, so a
-    // refit can meaningfully re-cluster it), all landing in a single cell
-    val hotEmb = real.where(col("vec_id") === 0).select(col("embedding"))
-    Similarity.upsertIvfIndex(spark, idx,
-      spark.range(600).crossJoin(broadcast(hotEmb))
-        .select((col("id") + 20000).as("vec_id"),
-          transform(col("embedding"),
-            (x, j) => x + (pmod(col("id") * 31 + j, lit(7)) - 3).cast("double") * 0.02)
-            .as("embedding")))
-    assert(Similarity.ivfNeedsRefit(spark, idx, skewThreshold = 4.0),
-      s"skewed occupancy not flagged: ${Similarity.ivfOccupancy(spark, idx)}")
-    // drift → trigger → REFIT: re-cluster from current contents, atomic swap
-    val (skewBefore, skewAfter) = Similarity.refitIvfIndex(spark, idx)
-    assert(skewBefore > 4.0, s"reported pre-refit skew $skewBefore")
-    assert(skewAfter < skewBefore,
-      s"refit did not reduce occupancy skew: $skewBefore -> $skewAfter")
-    assert(!Similarity.ivfNeedsRefit(spark, idx, skewThreshold = skewBefore))
-    // nothing lost, cell count kept, no staging/park leftovers
-    val occ2 = Similarity.ivfOccupancy(spark, idx)
-    assert(occ2.values.sum == 1100L, s"refit lost rows: ${occ2.values.sum}")
-    assert(occ2.size == nClusters, s"refit changed cell count: ${occ2.size}")
-    assert(!new java.io.File(s"$idx/__refit_tmp").exists, "staging dir left behind")
-    assert(!new java.io.File(s"$idx/__refit_old").exists, "parked old layout left behind")
-    // recall restored: a query at the hot cluster's center finds its
-    // near-copies (cosine ~1) through the NEW centroids at small probes
-    val qv0 = real.where(col("vec_id") === 0L)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-    val top = Similarity.ivfTopKIndexed(spark, idx, qv0, 5, nProbes = 2).collect()
-    assert(top.length == 5 && top.forall(_.getDouble(1) >= 0.95),
-      s"post-refit probe lost the hot cluster: ${top.map(_.getDouble(1)).toSeq}")
-  }
-
-  test("ivfTopKBatch equals per-query ivfTopKIndexed on the real embeddings table") {
-    import spark.implicits._
-    val real = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_batch").toString
-    Similarity.buildIvfIndex(real, idx, nClusters = 8)
-    val queryIds = Seq(0L, 42L, 77L)
-    val qVecs = queryIds.map { qid =>
-      qid -> real.where(col("vec_id") === qid)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-    }
-    val queries = qVecs.toDF("q_id", "q_vec")
-    val batch = Similarity.ivfTopKBatch(spark, idx, queries, k = 5, nProbes = 3)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-      .groupBy(_._1)
-      .map { case (q, rows) => q -> rows.sortBy(_._4).map(r => (r._2, r._3)).toSeq }
-    qVecs.foreach { case (qid, vec) =>
-      val single = Similarity.ivfTopKIndexed(spark, idx, vec, k = 5, nProbes = 3)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(batch(qid) == single, s"q=$qid batch=${batch(qid)} single=$single")
-      // each query's own vector is in the corpus: it must rank itself first
-      assert(batch(qid).head._1 == qid && batch(qid).head._2 == 1.0)
-    }
-  }
-
-  test("lshTopK approximates the exact top-k on clustered vectors") {
-    val got = Similarity.lshTopK(spark, emb, queryId = 0L, k = 2, numHashTables = 8)
-      .collect().map(_.getLong(0)).toSet
-    // with 8 tables on 5 vectors the near neighbors should surface
-    assert(got.contains(1L), s"nearest vector missing from $got")
-  }
-
   test("int8 quantization: 4x-smaller codes recover cosines within 1e-3") {
     import spark.implicits._
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -371,114 +161,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(a == b && a.nonEmpty)
     val sils = a.flatMap(r => Option(r.get(2)).map(_.asInstanceOf[Double]))
     assert(sils.nonEmpty && sils.forall(s => s >= -1.0 && s <= 1.0))
-  }
-
-  test("recoverIvfIndex heals every interrupted refit swap point") {
-    val real = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_rec").toString
-    Similarity.buildIvfIndex(real, idx, nClusters = 4)
-    val nRows = real.count()
-    val qv = real.where(col("vec_id") === 7L)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-    // nProbes = all 4 cells -> the probe is exhaustive, so top-k is
-    // FIT-independent: the same ids must come back after every recovery,
-    // including the roll-forward onto the staged fit
-    def topIds() = Similarity.ivfTopKIndexed(spark, idx, qv, 5, nProbes = 4)
-      .collect().map(_.getLong(0)).toSeq
-    val healthy = topIds()
-    def mv(a: String, b: String): Unit = {
-      val dst = new java.io.File(b); dst.getParentFile.mkdirs()
-      assert(new java.io.File(a).renameTo(dst), s"test mv $a -> $b failed")
-    }
-    // stage a "new fit" exactly as an interrupted refit would have left it
-    def stage(): Unit = Similarity.buildIvfIndex(
-      spark.read.parquet(s"$idx/corpus").select(col("vec_id"), col("embedding")),
-      s"$idx/__refit_tmp", nClusters = 4)
-    // healthy index: recovery is a no-op
-    assert(!Similarity.recoverIvfIndex(spark, idx))
-    assert(topIds() == healthy)
-    // crash point 1: corpus parked, centroids still installed -> roll back
-    stage()
-    mv(s"$idx/corpus", s"$idx/__refit_old/corpus")
-    assert(Similarity.recoverIvfIndex(spark, idx))
-    assert(topIds() == healthy)
-    // crash point 2: both parked, nothing installed -> roll back both
-    stage()
-    mv(s"$idx/corpus", s"$idx/__refit_old/corpus")
-    mv(s"$idx/centroids", s"$idx/__refit_old/centroids")
-    assert(Similarity.recoverIvfIndex(spark, idx))
-    assert(topIds() == healthy)
-    // crash point 3: new corpus installed, centroids rename pending -> roll
-    // FORWARD with the staged centroids (restoring the parked OLD centroids
-    // would pair them with the new cell assignments — the mixed-fit state)
-    stage()
-    mv(s"$idx/corpus", s"$idx/__refit_old/corpus")
-    mv(s"$idx/centroids", s"$idx/__refit_old/centroids")
-    mv(s"$idx/__refit_tmp/corpus", s"$idx/corpus")
-    assert(Similarity.recoverIvfIndex(spark, idx))
-    assert(!new java.io.File(s"$idx/__refit_tmp").exists, "staging dir left behind")
-    assert(!new java.io.File(s"$idx/__refit_old").exists, "parked layout left behind")
-    assert(Similarity.ivfOccupancy(spark, idx).values.sum == nRows,
-      "rolled-forward index lost rows")
-    assert(topIds() == healthy)
-    // a refit straight after a crash self-heals before swapping again
-    mv(s"$idx/corpus", s"$idx/__refit_old/corpus")
-    val (_, skewAfter) = Similarity.refitIvfIndex(spark, idx)
-    assert(skewAfter > 0.0 && topIds() == healthy)
-  }
-
-  test("versioned IVF index: pointer flip is crash-safe with a READER active across refit") {
-    val real = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val root = java.nio.file.Files.createTempDirectory("graft_ivf_ptr").toString
-    val v1 = Similarity.buildIvfIndexVersioned(real, root, nClusters = 4)
-    assert(v1.endsWith("/v0000000001"))
-    assert(Similarity.ivfCurrentDir(spark, root) == v1)
-    val nRows = real.count()
-    val qv = real.where(col("vec_id") === 7L)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-    // exhaustive probe (all 4 cells) -> top-k is fit-independent
-    def topIds(dir: String) = Similarity.ivfTopKIndexed(spark, dir, qv, 5, nProbes = 4)
-      .collect().map(_.getLong(0)).toSeq
-    val healthy = topIds(v1)
-
-    // a reader resolves the CURRENT version, then a refit flips the pointer:
-    // the reader's resolved dir must stay complete and readable (GC spares
-    // the previous version), while fresh resolutions see the new version
-    val readerDir = Similarity.ivfCurrentDir(spark, root)
-    val (_, skewAfter) = Similarity.refitIvfIndexVersioned(spark, root)
-    assert(skewAfter > 0.0)
-    val v2 = Similarity.ivfCurrentDir(spark, root)
-    assert(v2.endsWith("/v0000000002") && v2 != readerDir)
-    assert(topIds(readerDir) == healthy, "in-flight reader lost its version")
-    assert(topIds(v2) == healthy, "refit index changed the exhaustive top-k")
-    assert(Similarity.ivfOccupancy(spark, v2).values.sum == nRows)
-
-    // crash point: a refit that dies AFTER staging but BEFORE publishing —
-    // simulate by staging v3 by hand with no pointer entry. Readers and
-    // resolution are untouched; the next refit sweeps and re-stages.
-    Similarity.buildIvfIndex(
-      spark.read.parquet(s"$v2/corpus").select(col("vec_id"), col("embedding")),
-      s"$root/v0000000003", nClusters = 4)
-    assert(Similarity.ivfCurrentDir(spark, root) == v2,
-      "unpublished stage must not become current")
-    assert(topIds(v2) == healthy)
-    val (_, skew3) = Similarity.refitIvfIndexVersioned(spark, root)
-    assert(skew3 > 0.0)
-    val v3 = Similarity.ivfCurrentDir(spark, root)
-    assert(v3.endsWith("/v0000000003") && topIds(v3) == healthy)
-
-    // GC keeps current + previous (v2, v3), drops v1; readers of v2 live on
-    assert(!new java.io.File(s"$root/v0000000001").exists, "GC kept v1")
-    assert(new java.io.File(s"$root/v0000000002").exists, "GC must spare the previous version")
-    assert(Similarity.ivfVersions(spark, root) == Seq("v0000000002", "v0000000003"))
-    // explicit deep prune to current only
-    Similarity.gcIvfVersions(spark, root, keep = 1)
-    assert(Similarity.ivfVersions(spark, root) == Seq("v0000000003"))
-    assert(topIds(Similarity.ivfCurrentDir(spark, root)) == healthy)
-    // rebuilding over a live versioned index is refused loudly
-    assertThrows[IllegalArgumentException] {
-      Similarity.buildIvfIndexVersioned(real, root, nClusters = 4)
-    }
   }
 
   test("cosine_sim reaches SQL text via GraftExtensions") {

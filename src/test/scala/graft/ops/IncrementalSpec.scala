@@ -43,12 +43,17 @@ class IncrementalSpec extends AnyFunSuite {
       (1L, 10L, "old", "2024-01-01 10:00:00"),
       (1L, 11L, "new", "2024-01-02 10:00:00"),
       (2L, 20L, "lo-tie", "2024-01-01 10:00:00"),
-      (2L, 21L, "hi-tie", "2024-01-01 10:00:00"))
+      (2L, 21L, "hi-tie", "2024-01-01 10:00:00"),
+      // sub-millisecond order: .000900 is newer than .000200 although both
+      // share one millisecond, and it wins over the higher tie-col
+      (3L, 39L, "sub-ms-early", "2024-01-01 13:00:00.000200"),
+      (3L, 34L, "sub-ms-late", "2024-01-01 13:00:00.000900"))
       .toDF("k", "id", "v", "tss")
       .withColumn("ts", to_timestamp(col("tss"))).drop("tss")
     val got = Incremental.latestByKey(log, "k", "ts", "id").collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2)))).toMap
-    assert(got == Map(1L -> ((11L, "new")), 2L -> ((21L, "hi-tie"))))
+    assert(got == Map(1L -> ((11L, "new")), 2L -> ((21L, "hi-tie")),
+      3L -> ((34L, "sub-ms-late"))))
     // compacting an already-compacted log is a no-op (idempotent)
     val once = Incremental.latestByKey(log, "k", "ts", "id")
     assert(Incremental.latestByKey(once, "k", "ts", "id").collect().toSet ==

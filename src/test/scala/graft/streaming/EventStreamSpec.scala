@@ -1,77 +1,12 @@
 package graft.streaming
 
 import graft.SparkTestSession
-import graft.ext.Jsonish
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class EventStreamSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sfDir = "/root/testdata/sf0.001"
-
-  /** File-stream sources need a directory; testdata ships one file. */
-  private lazy val streamDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      d.resolve("events.parquet"))
-    d.toString
-  }
-
-  test("streaming tumbling windows match the batch twin on the same files") {
-    val stream = EventStream.readEventStream(spark, streamDir)
-    val got = EventStream.runToMemory(
-      EventStream.tumbling(stream, "1 hour", "2 hours"), "stream_tumbling")
-      .select("window_start", "event_type", "n_events")
-    val batch = Jsonish.tumbling(
-      graft.queries.Reference.events(spark, sfDir), "1 hour")
-      .select("window_start", "event_type", "n_events")
-    // append-mode emits only watermark-closed windows: every emitted row
-    // must match the batch result exactly, and most windows must emit
-    assert(got.count() > 0)
-    assert(got.exceptAll(batch).count() == 0, "stream emitted a row batch doesn't have")
-    assert(got.count() >= batch.count() - 25, s"too few closed windows: ${got.count()} vs ${batch.count()}")
-  }
-
-  test("streaming sliding windows match the batch twin; events land in width/slide windows") {
-    val stream = EventStream.readEventStream(spark, streamDir)
-    val got = EventStream.runToMemory(
-      EventStream.sliding(stream, "1 hour", "15 minutes", "2 hours"), "stream_sliding")
-      .select("window_start", "event_type", "n_events")
-    val batch = Jsonish.sliding(
-      graft.queries.Reference.events(spark, sfDir), "1 hour", "15 minutes")
-      .select("window_start", "event_type", "n_events")
-    assert(got.count() > 0)
-    assert(got.exceptAll(batch).count() == 0, "stream emitted a row batch doesn't have")
-    // overlap factor 4: sliding must produce ~4x the tumbling window count
-    val tumb = Jsonish.tumbling(
-      graft.queries.Reference.events(spark, sfDir), "1 hour").count()
-    assert(batch.count() > 3 * tumb, s"sliding ${batch.count()} vs tumbling $tumb")
-  }
-
-  test("streaming session windows produce per-user sessions") {
-    val stream = EventStream.readEventStream(spark, streamDir)
-    val got = EventStream.runToMemory(
-      EventStream.sessions(stream, "30 minutes", "2 hours"), "stream_sessions")
-    assert(got.count() > 0)
-    // session invariant: end >= start, events >= 1
-    assert(got.where(col("session_end") < col("session_start")).count() == 0)
-    assert(got.where(col("n_events") < 1).count() == 0)
-  }
-
-  test("streaming dedup drops duplicate ids within the watermark") {
-    // stage a source dir whose file contains every event twice
-    val d = java.nio.file.Files.createTempDirectory("graft_dupstream")
-    val ev = graft.queries.Reference.events(spark, sfDir).limit(200)
-    val doubled = ev.unionAll(ev)
-      .withColumn("ts", org.apache.spark.sql.functions.expr(
-        "CAST(unix_micros(ts) * 1000 AS LONG)")) // back to raw nanos shape
-    doubled.coalesce(1).write.mode("overwrite").parquet(d.toString)
-    val stream = EventStream.readEventStream(spark, d.toString)
-    val got = EventStream.runToMemory(
-      EventStream.dedupStream(stream), "stream_dedup")
-    assert(got.count() == 200, s"expected 200 unique, got ${got.count()}")
-  }
 
   test("stateful sessionization emits idle users' FINAL sessions via event-time timeout") {
     import spark.implicits._
@@ -118,69 +53,6 @@ class EventStreamSpec extends AnyFunSuite {
           new java.sql.Timestamp(r.getTimestamp(1).getTime - gapMs).toString,
           r.getLong(3), r.getDouble(4))).toSet
       assert(got == twin, s"stateful $got != session_window twin $twin")
-    } finally q.stop()
-  }
-
-  test("latestStateStream converges to the batch latestByKey under out-of-order arrival") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def ev(id: Long, ts: String, user: Long, t: String) =
-      EventStream.Event(id, java.sql.Timestamp.valueOf(ts), user, t, 0.0)
-    val ms = MemoryStream[EventStream.Event]
-    val q = EventStream.latestStateStream(ms.toDS())
-      .writeStream.outputMode("update").format("memory")
-      .queryName("latest_state").start()
-    try {
-      ms.addData(ev(1, "2024-01-01 10:00:00", 7, "old"))
-      q.processAllAvailable()
-      // newer event replaces; a LATE (older) replay must NOT regress state
-      // — and must emit NOTHING (change-only emission contract)
-      ms.addData(ev(2, "2024-01-01 12:00:00", 7, "new"))
-      q.processAllAvailable()
-      ms.addData(ev(3, "2024-01-01 11:00:00", 7, "late"))
-      q.processAllAvailable()
-      // sub-MILLISECOND ordering: .000900 beats .000200 even though their
-      // getTime() millis are equal — full-precision comparison, and the
-      // lower-id later event must win over any tie-break
-      ms.addData(ev(9, "2024-01-01 13:00:00.000200", 7, "sub-ms-early"))
-      q.processAllAvailable()
-      ms.addData(ev(4, "2024-01-01 13:00:00.000900", 7, "sub-ms-late"))
-      q.processAllAvailable()
-      // identical full timestamp: higher event_id wins (the batch tie-break)
-      ms.addData(ev(6, "2024-01-01 13:00:00.000900", 7, "tie-hi"))
-      q.processAllAvailable()
-      // PRE-EPOCH ordering (separate user): 23:59-ish 1969 timestamps have
-      // negative millis, where a truncating `/ 1000` maps −1500 ms to
-      // (−1 s, nanos 5e8) — i.e. as if it were HALF A SECOND LATER than
-      // the whole second it precedes — so :58.5 would wrongly beat :59.0
-      // and the replay below would regress state. floorDiv keeps the
-      // (seconds, nanos) key monotone in true time.
-      ms.addData(ev(11, "1969-12-01 00:00:58.5", 5, "pre-epoch-old"))
-      q.processAllAvailable()
-      ms.addData(ev(12, "1969-12-01 00:00:59", 5, "pre-epoch-new"))
-      q.processAllAvailable()
-      ms.addData(ev(11, "1969-12-01 00:00:58.5", 5, "pre-epoch-old"))
-      q.processAllAvailable()
-      val rows = spark.table("latest_state").collect()
-        .map(r => (r.getLong(1), r.getString(2)))
-      // exactly the CHANGES were emitted: the late replays produced no row
-      // and the pre-epoch .5 event never displaced the whole-second winner
-      assert(rows.toSeq == Seq((1L, "old"), (2L, "new"),
-        (9L, "sub-ms-early"), (4L, "sub-ms-late"), (6L, "tie-hi"),
-        (11L, "pre-epoch-old"), (12L, "pre-epoch-new")),
-        rows.mkString(", "))
-      // ≡ batch operator on the same event set
-      val batch = Seq(
-        ev(1, "2024-01-01 10:00:00", 7, "old"), ev(2, "2024-01-01 12:00:00", 7, "new"),
-        ev(3, "2024-01-01 11:00:00", 7, "late"),
-        ev(9, "2024-01-01 13:00:00.000200", 7, "sub-ms-early"),
-        ev(4, "2024-01-01 13:00:00.000900", 7, "sub-ms-late"),
-        ev(6, "2024-01-01 13:00:00.000900", 7, "tie-hi"))
-        .toDS().toDF()
-      val b = graft.ops.Incremental.latestByKey(batch, "user_id", "ts", "event_id")
-        .select("event_id", "event_type").head()
-      assert((b.getLong(0), b.getString(1)) == ((6L, "tie-hi")))
     } finally q.stop()
   }
 
@@ -298,93 +170,4 @@ class EventStreamSpec extends AnyFunSuite {
     assert(exchanges == 1, s"expected 1 exchange, got $exchanges:\n$plan")
   }
 
-  test("enrichWithinWindow: stream-stream range join ≡ the batch join") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def ev(id: Long, ts: String, user: Long, v: Double) =
-      EventStream.Event(id, java.sql.Timestamp.valueOf(ts), user, "t", v)
-    val touches = Seq(
-      ev(1, "2024-01-01 09:30:00", 1, 1.0), // inside the 1 h window
-      ev(2, "2024-01-01 09:59:00", 1, 2.0), // inside
-      ev(3, "2024-01-01 08:59:59", 1, 3.0), // 1 s too old
-      ev(4, "2024-01-01 10:00:01", 1, 4.0), // after the conversion
-      ev(5, "2024-01-01 09:45:00", 2, 5.0)) // other user
-    val convs = Seq(ev(100, "2024-01-01 10:00:00", 1, 0.0))
-    // batch twin (same code path, plain join)
-    val batch = EventStream.enrichWithinWindow(
-        convs.toDF(), touches.toDF(), windowSeconds = 3600)
-      .select(col("event_id"), col("t_event_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(batch == Set((100L, 1L), (100L, 2L)))
-    // streaming twin: both sides MemoryStreams
-    val msT = MemoryStream[EventStream.Event]
-    val msC = MemoryStream[EventStream.Event]
-    val out = EventStream.enrichWithinWindow(
-      msC.toDS().toDF(), msT.toDS().toDF(), windowSeconds = 3600,
-      watermarkDelay = "0 seconds")
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("enrich_within").start()
-    try {
-      msT.addData(touches: _*)
-      msC.addData(convs: _*)
-      q.processAllAvailable()
-      val got = spark.table("enrich_within")
-        .select(col("event_id"), col("t_event_id")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == batch, s"stream $got vs batch $batch")
-    } finally q.stop()
-  }
-
-  test("dedupStreamWithStore: store + within-batch + cross-batch gate, replay-idempotent appends") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_store").toString
-    val storedText = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val base = Seq((1L, storedText),
-      (2L, "one two three four five six seven eight nine ten eleven"))
-      .toDF("doc_id", "text")
-    graft.ext.Dedup.buildMinHashStore(base, dir)
-
-    val freshText = "completely novel first fresh document text arriving right here"
-    val twinText = "twin payload shared verbatim by two docs of the same batch"
-    val ms = MemoryStream[(Long, String)]
-    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = EventStream.dedupStreamWithStore(
-      ms.toDF().toDF("doc_id", "text"), dir, "gate1") { sv =>
-      val ids = sv.select("doc_id").collect().map(_.getLong(0))
-      seen.synchronized { seen ++= ids }
-    }
-    try {
-      // batch 0: 10 duplicates a STORED doc (dropped); 11 is fresh (kept);
-      // 12/13 duplicate EACH OTHER (greedy lowest-id: 12 kept, 13 dropped)
-      ms.addData((10L, storedText), (11L, freshText),
-        (12L, twinText), (13L, twinText))
-      q.processAllAvailable()
-      assert(seen.synchronized(seen.sorted.toSeq) == Seq(11L, 12L))
-      // batch 1: 20 duplicates batch 0's SURVIVOR 11 — the cross-batch
-      // case only the appended signatures can catch; 21 is fresh
-      ms.addData((20L, freshText),
-        (21L, "another different unrelated brand new closing document"))
-      q.processAllAvailable()
-      assert(seen.synchronized(seen.sorted.toSeq) == Seq(11L, 12L, 21L))
-    } finally q.stop()
-    // the store holds base + each survivor exactly once (no double-append)
-    val sigIds = spark.read.parquet(s"$dir/sigs")
-      .groupBy("id").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(sigIds == Map(1L -> 1L, 2L -> 1L, 11L -> 1L, 12L -> 1L, 21L -> 1L))
-    // per-batch markers guard the appends
-    assert(new java.io.File(s"$dir/_stream/gate1_0").exists &&
-      new java.io.File(s"$dir/_stream/gate1_1").exists)
-    // replay idempotence of the ingest step itself: rerunning batch 0
-    // AFTER its survivors were appended returns the same survivors — a
-    // doc never flags its own appended signature (same-id exclusion)
-    val replay = graft.ext.Dedup.minHashStoreIngest(spark, dir,
-      Seq((10L, storedText), (11L, freshText), (12L, twinText),
-        (13L, twinText)).toDF("doc_id", "text"),
-      appendSurvivors = false)
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(replay == Seq(11L, 12L))
-  }
 }
